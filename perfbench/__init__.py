@@ -1,0 +1,1 @@
+"""Benchmark of pyvectorsearch_spark; run it with ``python3 perfbench/run.py``."""
