@@ -134,13 +134,6 @@ def minhash_signature(sh: Column, n_hashes: int = 16) -> Column:
     )
 
 
-def duckdb_minhash(sh: str, n_hashes: int = 16) -> str:
-    return (
-        f"list_transform(range(0, {n_hashes}), i -> "
-        f"list_aggregate(list_transform({sh}, s -> md5(concat(i, ':', s))), 'min'))"
-    )
-
-
 def duckdb_minhash64(sh: str, n_hashes: int = 16) -> str:
     """64-bit variant matching ``operators.dedup.minhash_signatures``: one
     md5 per shingle split into two 48-bit ints h1/h2; permutation i is the

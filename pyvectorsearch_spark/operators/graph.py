@@ -141,7 +141,6 @@ def connected_components(
     raw = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")).union(
         pairs.select(F.col(dst).alias("a"), F.col(src).alias("b"))
     )
-    probed_over_bound = False
     if driver_max_edges is not None and start == "auto" and switch_after is not None:
         # r11: ONE bounded action decides the driver dispatch AND, when the
         # graph is under the bound, already holds the whole edge list —
@@ -156,7 +155,6 @@ def connected_components(
         probe = raw.limit(int(driver_max_edges) + 1).collect()
         if len(probe) <= driver_max_edges:
             return _cc_driver(raw, _stats=_stats, rows=probe)
-        probed_over_bound = True
     # Pre-partition the (checkpointed-once) edge table on the lookup key so
     # every round's labels join is co-partitioned against it — checkpoint
     # preserves outputPartitioning, so rounds re-sort but never re-exchange

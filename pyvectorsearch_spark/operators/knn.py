@@ -178,9 +178,10 @@ def knn_join_blocked(
     (Arrow-batched, BLAS matrix multiply), then a tiny global window.
 
     Phase 1 is map-side only — no shuffle touches the full pair space. The
-    final window shuffles ≤ partitions·q·k rows. This is the plan that holds
-    at 100 TB; results match ``knn_join`` exactly (same double math, ties by
-    neighbor_id).
+    final window shuffles ≤ partitions·q·k rows, plus any rows tied with a
+    partition's k-th score within rounding. This is the plan that holds at
+    100 TB; results match ``knn_join`` exactly (same double math, ties by
+    neighbor_id, duplicates straddling the k-th neighbor included).
 
     Validity contract (r7) as in ``knn_join``: NULL/NaN/Inf on either side
     raises by default; ``on_invalid="skip"`` drops invalid QUERY rows at
@@ -224,7 +225,12 @@ def knn_join_blocked(
     def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qids_, qmat_, k_, metric_, on_invalid_ = bq.value
         Q = np.asarray(qmat_, dtype=np.float64)  # (q, dim)
-        qn = np.sqrt((Q * Q).sum(axis=1))
+        qq = (Q * Q).sum(axis=1)
+        qn = np.sqrt(qq)
+        qarr = np.asarray(qids_)
+        # 8·(dim+2)·eps × a score's magnitude bounds the BLAS rounding plus
+        # the canonical re-score's rounding of any two scores
+        tol_unit = 8 * (Q.shape[1] + 2) * np.finfo(np.float64).eps
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -257,28 +263,29 @@ def knn_join_blocked(
                 )
             X = np.asarray(vecs)
             ids = pdf["neighbor_id"].to_numpy()
+            xx = (X * X).sum(axis=1)
             if metric_ == "l2_sq":
                 # ‖x‖² + ‖q‖² − 2x·q can lose precision; expand explicitly per
                 # query block to keep parity with the sequential expression.
-                d2 = (
-                    (X * X).sum(axis=1)[:, None] - 2.0 * (X @ Q.T) + (Q * Q).sum(axis=1)[None, :]
-                )
-                score, asc = d2, True
+                score, asc = xx[:, None] - 2.0 * (X @ Q.T) + qq[None, :], True
+                scale = xx.max() + qq
             elif metric_ == "dot":
-                score, asc = X @ Q.T, False
-            else:  # cosine
-                xn = np.sqrt((X * X).sum(axis=1))
-                score, asc = (X @ Q.T) / (xn[:, None] * qn[None, :]), False
+                score, asc, scale = X @ Q.T, False, np.sqrt(xx.max() * qq)
+            else:  # cosine; a zero-norm row scores NaN and ranks last
+                score, asc, scale = (X @ Q.T) / (np.sqrt(xx)[:, None] * qn[None, :]), False, 1.0
             kk = min(k_, len(pdf))
             s = score if asc else -score
-            part = np.argpartition(s, kk - 1, axis=0)[:kk, :]  # (k, q)
-            out_q, out_id, out_d = [], [], []
-            for j, qid in enumerate(qids_):
-                rows = part[:, j]
-                out_q.extend([qid] * len(rows))
-                out_id.extend(ids[rows])
-                out_d.extend(score[rows, j])
-            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_id, "dist": out_d})
+            s = np.where(np.isnan(s), np.inf, s)
+            # Keep EVERY row within the rounding margin of the k-th BLAS
+            # score, not just k of them: rows tied (or near-tied) at the k
+            # boundary may round in either order here, and only the
+            # canonical re-score + the (dist, neighbor_id) window below can
+            # pick the lower id among them.
+            kth = np.partition(s, kk - 1, axis=0)[kk - 1]  # (q,)
+            rows, cols = np.nonzero(s <= kth + tol_unit * scale)
+            yield pd.DataFrame(
+                {"query_id": qarr[cols], "neighbor_id": ids[rows], "dist": score[rows, cols]}
+            )
 
     d = data.select(F.col(data_id).alias("neighbor_id"), F.col(data_vec).alias("_dvec"))
     cand = d.mapInPandas(local_topk, schema="query_id long, neighbor_id long, dist double")

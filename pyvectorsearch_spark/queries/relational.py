@@ -512,6 +512,17 @@ FROM events GROUP BY 1 ORDER BY k_mod
 QUANTILE_BUCKETS = 4096
 
 
+def _join_null_safe(
+    left: DataFrame, right: DataFrame, on: list[str], how: str = "inner"
+) -> DataFrame:
+    """``left.join(right, on, how)`` on ``<=>`` keys, so a NULL key matches
+    a NULL key the way ``groupBy`` keeps NULLs as one group. The keys come
+    out once, from ``left``."""
+    r = right.select(*[F.col(c).alias(f"_r{c}") if c in on else c for c in right.columns])
+    cond = [F.col(c).eqNullSafe(F.col(f"_r{c}")) for c in on]
+    return left.join(r, cond, how).drop(*[f"_r{c}" for c in on])
+
+
 def _exact_group_quantiles(
     df: DataFrame, group_col: str, value_col: str, probs: list[float]
 ) -> DataFrame:
@@ -581,7 +592,9 @@ def _exact_group_quantiles(
             F.width_bucket("_v", "_lo", "_hi", F.lit(B)),
         ).otherwise(F.lit(1)).cast("int")
 
-    keyed = vals.join(F.broadcast(bnd_df), "_g").withColumn("_b", bucket_expr())
+    keyed = _join_null_safe(vals, F.broadcast(bnd_df), ["_g"]).withColumn(
+        "_b", bucket_expr()
+    )
     bc = (
         keyed.groupBy("_g", "_b").agg(F.count("*").alias("_c")).collect()
     )
@@ -621,12 +634,12 @@ def _exact_group_quantiles(
     tgt_df = spark.createDataFrame(
         targets, f"_g {g_type}, _b int, _lr long, _qi int, _w double"
     )
-    hit_pairs = sorted({(g, b) for g, b, *_ in targets})
+    hit_pairs = sorted({(g, b) for g, b, *_ in targets}, key=lambda gb: (gb[0] is None, gb))
     # map-side prefilter: only rows of the ≤ 2·|probs| buckets per group
     # that hold a target rank ever reach the exchange
     pred = None
     for g, b in hit_pairs:
-        term = (F.col("_g") == F.lit(g)) & (F.col("_b") == F.lit(b))
+        term = F.col("_g").eqNullSafe(F.lit(g)) & (F.col("_b") == F.lit(b))
         pred = term if pred is None else (pred | term)
     hits = keyed.filter(pred)
     # distinct-value counts bound the window input by the bucket's value
@@ -639,7 +652,7 @@ def _exact_group_quantiles(
     )
     ranked = dist.withColumn("_cum", F.sum("_c").over(w))
     # a value covers bucket-local ranks (_cum − _c, _cum]
-    j = ranked.join(F.broadcast(tgt_df), ["_g", "_b"]).filter(
+    j = _join_null_safe(ranked, F.broadcast(tgt_df), ["_g", "_b"]).filter(
         (F.col("_lr") > F.col("_cum") - F.col("_c")) & (F.col("_lr") <= F.col("_cum"))
     )
     picked = j.groupBy("_g").agg(
@@ -702,7 +715,7 @@ def price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.avg("l_extendedprice"), 6).alias("mean_price"),
     )
     q = _exact_group_quantiles(li, "l_returnflag", "l_extendedprice", [0.25, 0.5, 0.75])
-    return base.join(q, "l_returnflag", "left").select(
+    return _join_null_safe(base, q, ["l_returnflag"], "left").select(
         "l_returnflag",
         "n",
         F.round("_q0", 6).alias("p25"),

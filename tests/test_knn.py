@@ -182,3 +182,39 @@ def test_public_api_surface(spark):
     assert got == brute == [3, 4, 2]
     rng = {r.neighbor_id for r in pvs.range_bruteforce(df, q, 1.6).collect()}
     assert rng == {3, 4, 2}
+
+
+@pytest.mark.parametrize("metric", ["l2_sq", "cosine", "dot"])
+@pytest.mark.parametrize("parts", [1, 3])
+def test_blocked_knn_duplicates_straddling_kth(spark, metric, parts):
+    """Exact duplicates tied across the k-th neighbour: the blocked kernel
+    must hand every tied row to the (dist, neighbor_id) window, so the
+    LOWEST ids win exactly as in ``knn_join``."""
+    import numpy as np
+
+    k, dim = 5, 8
+    rng = np.random.default_rng(11)
+    base = rng.normal(size=(60, dim))
+    Q = rng.normal(size=(2, dim))
+    vecs = [base]
+    for q in Q:
+        score = {
+            "l2_sq": ((base - q) ** 2).sum(1),
+            "cosine": -(base @ q) / np.linalg.norm(base, axis=1),
+            "dot": -(base @ q),
+        }[metric]
+        # copies of the (k-1)-th nearest row: ties run from rank k-1 to k+19
+        vecs.append(np.repeat(base[np.argsort(score)[k - 2]][None, :], 20, axis=0))
+    X = np.vstack(vecs)
+    ids = rng.permutation(len(X))  # copies get ids above and below the original
+    data = spark.createDataFrame(
+        [(int(i), [float(v) for v in x]) for i, x in zip(ids, X)],
+        "vec_id long, embedding array<double>",
+    ).repartition(parts)
+    probes = spark.createDataFrame(
+        [(j, [float(v) for v in q]) for j, q in enumerate(Q)],
+        "query_id long, qvec array<double>",
+    )
+    a = knn_join(data, probes, k, metric=metric).collect()
+    b = knn_join_blocked(data, probes, k, metric=metric).collect()
+    assert sorted(map(tuple, a)) == sorted(map(tuple, b))

@@ -1,7 +1,7 @@
 """Round-11 OPTIMIZATION-round pins: every change keeps results
 bit-identical while removing measured overhead (OPTIMIZATION_r11.md).
 
-- one-call array literals (lit_double_array / lit_long_array) — value- and
+- ndarray array literals (lit_double_array / lit_long_array) — value- and
   type-identical to the per-element F.array(*[F.lit(v)...]) form
 - price_quantiles distributed exact quantile (range-partition + global
   rank) — value-identical to the F.percentile object aggregate
@@ -116,6 +116,35 @@ class TestExactGroupQuantiles:
             [("A", 1.0), ("A", None), ("A", 2.0)], "g string, v double"
         )
         assert self._new(spark, df) == self._old(df)
+
+    def test_null_group_kept_like_percentile(self, spark):
+        """``groupBy`` keeps a NULL key as one group; so must the rank pass
+        (its bucket joins and target prefilter are null-safe)."""
+        rng = random.Random(7)
+        rows = [
+            (rng.choice(["A", None]), float(rng.choice([1.0, 2.5, 9.0])))
+            for _ in range(301)
+        ]
+        rows += [(None, None), ("B", 4.0)]
+        df = spark.createDataFrame(rows, "g string, v double")
+        old = self._old(df)
+        assert None in {r[0] for r in old}
+        assert self._new(spark, df) == old
+
+    def test_price_quantiles_big_branch_null_flag(self, spark, monkeypatch):
+        """The distributed branch of ``price_quantiles`` keeps a NULL
+        return flag's row, values and all, like the percentile branch."""
+        from pyvectorsearch_spark.queries import relational
+
+        rows = [(f, float(p)) for f, p in zip(["A", None, "R", None] * 25, range(100))]
+        li = spark.createDataFrame(rows, "l_returnflag string, l_extendedprice double")
+        monkeypatch.setattr(relational, "_t", lambda *_: li)
+        monkeypatch.setattr(relational, "QUANTILE_AGG_MAX_BYTES", 0)
+        big = relational.price_quantiles(spark, SF_T2)
+        assert "percentile(" not in big._jdf.queryExecution().executedPlan().toString()
+        old = self._old_form(spark)
+        assert (None, 50, 25.5, 50.0, 74.5, 50.0) in old  # 1, 3, …, 99
+        assert {tuple(r) for r in big.collect()} == old
 
     def _old_form(self, spark):
         from pyvectorsearch_spark.queries.relational import _t
