@@ -38,6 +38,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pyvectorsearch_spark.plans.inspect import plan_bytes_below
+
 CELL_SEP = "_"
 
 STATS_SCHEMA = "cell string, level int, coords array<long>, count long"
@@ -585,57 +587,12 @@ class GridIndex:
 
     # ---------------- candidate selection (distributed) ----------------
 
-    def _stats_is_small(self, limit: int = 200_000) -> bool:
-        """True when the cell table can sit on the driver (cached count)."""
-        if self._local_stats is not None:
-            return True
-        if self._stats_count is None:
-            self._stats_count = self.stats_df.count()
-        return self._stats_count <= limit
-
-    def _box_bounds_expr(self, qvec: Column) -> tuple[Column, Column]:
-        """Min/max squared point-to-box distance between a query-vector
-        column and a stats row (``level``, ``coords``) as pure Catalyst
-        expressions — the distributed twin of ``_bounds`` (the pruning
-        bounds of pktree.hpp:1048-1061 and :1129-1162). Evaluates in
-        whole-stage codegen; no UDF, no driver."""
-        min_terms: list[Column] = []
-        max_terms: list[Column] = []
-        for c in range(self.dim):
-            s_c = F.floor(
-                (F.col("level").cast("long") * self.rr + self.dim - c - 1)
-                / float(self.dim)
-            ).cast("double")
-            w_c = F.lit(float(self.width)) * F.pow(F.lit(float(self.ratio)), -s_c)
-            lo = (
-                F.lit(float(self.origin[c]))
-                + F.element_at("coords", c + 1).cast("double") * w_c
-            )
-            hi = lo + w_c
-            qc = F.element_at(qvec, c + 1).cast("double")
-            dmin = F.greatest(lo - qc, F.lit(0.0)) + F.greatest(qc - hi, F.lit(0.0))
-            min_terms.append(dmin * dmin)
-            max_terms.append(
-                F.greatest((qc - lo) * (qc - lo), (hi - qc) * (hi - qc))
-            )
-        add = lambda a, b: a + b  # noqa: E731
-        import functools
-
-        return (
-            functools.reduce(add, min_terms),
-            functools.reduce(add, max_terms),
-        )
-
-    # Evaluate the CELL-ONLY geometry (per-level width = w·ratio^-floor(…),
-    # box lo/hi per dim) once per cell on the broadcast side instead of
-    # inside every |Q|·|cells| pair row (r11): the per-pair math drops from
-    # pow/floor/element_at chains to two array reads + add/mul per dim.
-    # Identical doubles — the same expressions over the same inputs, just
-    # hoisted below the BroadcastExchange. Flag kept as the A/B kill switch.
-    BOX_COLS = True
-
     def _with_box_cols(self, stats_df: DataFrame) -> DataFrame:
-        """stats rows + (_blo, _bhi) per-dim box-bound arrays."""
+        """stats rows + (_blo, _bhi) per-dim box-bound arrays: the cell
+        geometry (per-level width w·ratio^-floor(…), box lo/hi) evaluated
+        once per CELL on the broadcast side, never in the |Q|·|cells| pair
+        rows, whose bound math is then two array reads + add/mul per dim
+        (measured r11)."""
         los, his = [], []
         for c in range(self.dim):
             s_c = F.floor(
@@ -654,8 +611,10 @@ class GridIndex:
         )
 
     def _box_bounds_from_cols(self, qvec: Column) -> tuple[Column, Column]:
-        """The `_box_bounds_expr` arithmetic over precomputed (_blo, _bhi)
-        columns — bit-identical terms, cell geometry not re-derived."""
+        """Min/max squared point-to-box distance between a query-vector
+        column and a ``_with_box_cols`` row (the pruning bounds of
+        pktree.hpp:1048-1061 and :1129-1162) as pure Catalyst expressions —
+        the distributed twin of ``_bounds``; no UDF, no driver."""
         import functools
 
         min_terms: list[Column] = []
@@ -690,19 +649,12 @@ class GridIndex:
             qs.sparkSession.sparkContext.defaultParallelism, "_qid"
         )
         stats = stats_df if stats_df is not None else self.stats_df
-        if self.BOX_COLS:
-            mn, mx = self._box_bounds_from_cols(F.col("_qvec"))
-            return (
-                spread.crossJoin(F.broadcast(self._with_box_cols(stats)))
-                .withColumn("_min_d2", mn)
-                .withColumn("_max_d2", mx)
-                .drop("_blo", "_bhi")
-            )
-        mn, mx = self._box_bounds_expr(F.col("_qvec"))
+        mn, mx = self._box_bounds_from_cols(F.col("_qvec"))
         return (
-            spread.crossJoin(F.broadcast(stats))
+            spread.crossJoin(F.broadcast(self._with_box_cols(stats)))
             .withColumn("_min_d2", mn)
             .withColumn("_max_d2", mx)
+            .drop("_blo", "_bhi")
         )
 
     # Above this many cells the |Q|x|cells| scored cross-join becomes the
@@ -721,60 +673,24 @@ class GridIndex:
     # cells because the schedule left a ~13× tail expansion)
     TAIL_FAN = 4
     TAIL_GATE_CELLS = 200_000
-    # broadcast the per-query kth-distance cap (b0) in _prune_pairs instead
-    # of sort-merge-joining it back into the pair table (r10 optimization
-    # round; see _prune_pairs). One row per capped query — only probe tables
-    # big enough to threaten the 8 GB broadcast-relation cap (≳5×10⁸ capped
-    # probes at 16 B/row) must not take it, and _b0_broadcast_ok gates on
-    # Catalyst's probe-table size estimate at plan time (ADVICE r10); this
-    # class attribute is the manual override (False = never hint).
-    B0_BROADCAST = True
-    # Plan-size gate for the hint: a KNOWN probe-table estimate above this
-    # disables the broadcast and lets AQE choose. 16 GiB of probe rows at
-    # the narrowest (id, 2-d vec) layout ≈ 4×10⁸ probes — b0 would then be
-    # ~6.4 GB framed, at the broadcast-relation cap.
+    # Plan-size bounds (``plan_bytes_below``: fail-closed, so probe tables
+    # of unknown size take the sort-merge joins) for the two probe-bounded
+    # broadcasts of the distributed search. b0, the per-query kth-distance
+    # cap in _prune_pairs, is ≤ 16 B per probe: 16 GiB of probe rows at the
+    # narrowest (id, 2-d vec) layout ≈ 4×10⁸ probes ≈ 6.4 GB of b0, at the
+    # 8 GB broadcast-relation cap. The probe table ITSELF (id + vector per
+    # row) is re-attached to the pruned pairs by keep⋈qs, which otherwise
+    # plans a sort-merge that re-sorts the survivor table just to put the
+    # query vector back (r11; AQE's runtime SMJ→BHJ rewrite fires after the
+    # sorts are planned). 1 GiB of ESTIMATED probe bytes is ≲100 MB real
+    # (estimates inflate across the probe-expansion joins).
     B0_BROADCAST_MAX_PROBE_BYTES = 16 << 30
-
-    def _b0_broadcast_ok(self, qs: DataFrame) -> bool:
-        """Cheap runtime gate for the b0 broadcast hint (ADVICE r10): read
-        Catalyst's sizeInBytes estimate for the probe table — no job, just
-        the already-optimized logical plan. Unknown/sentinel estimates
-        (driver-parallelized probe tables report the defaultSizeInBytes
-        sentinel) keep the hint: those tables were built by a driver that
-        held them, so they cannot approach 5×10⁸ rows."""
-        if not self.B0_BROADCAST:
-            return False
-        try:
-            size = qs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            size = int(size if isinstance(size, int) else size.toString())
-        except Exception:
-            return True
-        if size <= 0 or size >= (1 << 60):  # absent / Long.Max-class sentinel
-            return True
-        return size < self.B0_BROADCAST_MAX_PROBE_BYTES
-
-    # Plan-size gate for broadcasting the probe table ITSELF (id + vector
-    # per row — heavier than b0's 16 B/row, so a tighter bound): the
-    # candidate re-attach join keep⋈qs otherwise plans a sort-merge that
-    # re-sorts the pruned pair table just to put the query vector back
-    # (r11; AQE's runtime SMJ→BHJ rewrite fires after the sorts are
-    # planned). 1 GiB of ESTIMATED probe bytes is ≲100 MB real here
-    # (estimates inflate across the probe-expansion joins) — far under the
-    # 8 GB broadcast-relation cap; bigger known tables keep the SMJ.
     QS_BROADCAST_MAX_BYTES = 1 << 30
 
-    def _qs_broadcast_ok(self, qs: DataFrame) -> bool:
-        """Like :meth:`_b0_broadcast_ok` but for the probe table itself.
-        Unknown estimates broadcast (driver-built probe tables were held in
-        driver memory, so they are bounded by construction)."""
-        try:
-            size = qs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            size = int(size if isinstance(size, int) else size.toString())
-        except Exception:
-            return True
-        if size <= 0 or size >= (1 << 60):
-            return True
-        return size < self.QS_BROADCAST_MAX_BYTES
+    def _qs_side(self, qs: DataFrame) -> DataFrame:
+        """The probe table as a join side: broadcast when provably small."""
+        small = plan_bytes_below(qs, self.QS_BROADCAST_MAX_BYTES)
+        return F.broadcast(qs) if small else qs
 
     def _n_cells(self) -> int:
         """Stats-row count, cached; never collects the stats themselves."""
@@ -901,6 +817,23 @@ class GridIndex:
                 ladder.append(cand_lv)
         return ladder or [self._coarse_level()]
 
+    def _coarse_coords(self, coarse_level: int) -> tuple[Column, list[Column]]:
+        """(effective level, per-dim ancestor coords) of a stats row at
+        ``coarse_level``; cells at or above it map to themselves."""
+        lvl = F.col("level").cast("int")
+        eff = F.least(lvl, F.lit(int(coarse_level)))
+        return eff, [
+            F.floor(
+                F.element_at("coords", c + 1).cast("double")
+                / F.pow(
+                    F.lit(float(self.ratio)),
+                    _slices_expr(lvl, c, self.dim, self.rr)
+                    - _slices_expr(eff, c, self.dim, self.rr),
+                )
+            ).cast("long")
+            for c in range(self.dim)
+        ]
+
     def _coarse_stats(self, coarse_level: int) -> DataFrame:
         """Aggregate the stats table to ancestor cells at ``coarse_level``:
         (cell, level, coords, count) rows whose box CONTAINS every member
@@ -909,25 +842,11 @@ class GridIndex:
         is a valid bound for all its members — the losslessness invariant
         of the two-stage descent. One cells-sized shuffle, done once per
         search plan."""
-        lvl = F.col("level").cast("int")
-        eff = F.least(lvl, F.lit(int(coarse_level)))
-        coarse_coords = F.array(
-            *[
-                F.floor(
-                    F.element_at("coords", c + 1).cast("double")
-                    / F.pow(
-                        F.lit(float(self.ratio)),
-                        _slices_expr(lvl, c, self.dim, self.rr)
-                        - _slices_expr(eff, c, self.dim, self.rr),
-                    )
-                ).cast("long")
-                for c in range(self.dim)
-            ]
-        )
+        eff, coords = self._coarse_coords(coarse_level)
         return (
             self.stats_df.select(
                 eff.alias("level"),
-                coarse_coords.alias("coords"),
+                F.array(*coords).alias("coords"),
                 F.col("count"),
             )
             .groupBy("level", "coords")
@@ -948,24 +867,13 @@ class GridIndex:
     def _coarse_key_expr(self, coarse_level: int):
         """Coarse ancestor key of a fine stats row — the join key that
         expands surviving coarse cells back to their member cells."""
-        lvl = F.col("level").cast("int")
-        eff = F.least(lvl, F.lit(int(coarse_level)))
-        parts = [eff.cast("string")]
-        for c in range(self.dim):
-            parts.append(
-                F.floor(
-                    F.element_at("coords", c + 1).cast("double")
-                    / F.pow(
-                        F.lit(float(self.ratio)),
-                        _slices_expr(lvl, c, self.dim, self.rr)
-                        - _slices_expr(eff, c, self.dim, self.rr),
-                    )
-                ).cast("long").cast("string")
-            )
-        return F.concat_ws(CELL_SEP, *parts)
+        eff, coords = self._coarse_coords(coarse_level)
+        return F.concat_ws(
+            CELL_SEP, eff.cast("string"), *[c.cast("string") for c in coords]
+        )
 
     def _prune_pairs(
-        self, pairs: DataFrame, k: int, broadcast_b0: bool | None = None
+        self, pairs: DataFrame, k: int, broadcast_b0: bool
     ) -> DataFrame:
         """The exact two-phase candidate prune over a scored (query, cell)
         pair table with (_qid, cell, count, _min_d2, _max_d2): returns the
@@ -996,10 +904,9 @@ class GridIndex:
         # 2.37 s → 2.05 s median on the 120k-probe sf0.1 bench row; AQE's
         # runtime SMJ→BHJ rewrite fires too late to skip that sort). The
         # hint is probe-bounded, not data-bounded: 10⁶ probes ≈ 16 MB.
-        # Callers pass broadcast_b0 from _b0_broadcast_ok(qs) (a plan-size
-        # gate against the 8 GB broadcast-relation cap); GridIndex.B0_BROADCAST
-        # is the manual kill switch.
-        if self.B0_BROADCAST if broadcast_b0 is None else broadcast_b0:
+        # Callers pass broadcast_b0 from the probe table's plan-size gate
+        # (B0_BROADCAST_MAX_PROBE_BYTES, against the 8 GB broadcast cap).
+        if broadcast_b0:
             b0 = F.broadcast(b0)
         pairs = pairs.join(b0, "_qid", "left").filter(
             F.col("_min_d2") <= F.coalesce(F.col("_b0"), F.lit(float("inf")))
@@ -1047,7 +954,7 @@ class GridIndex:
         # window shuffle+sort moves a fraction of the bytes. The query
         # vector is re-attached to the ~|Q|·(cells/query) candidates after
         # pruning (measured 3-4x faster than carrying it through the sort).
-        b0_ok = self._b0_broadcast_ok(qs)
+        b0_ok = plan_bytes_below(qs, self.B0_BROADCAST_MAX_PROBE_BYTES)
         if self._n_cells() <= self.COARSE_THRESHOLD:
             pairs = self._scored_pairs(qs).select(
                 "_qid", "cell", "count", "_min_d2", "_max_d2"
@@ -1059,7 +966,7 @@ class GridIndex:
             "_qid", "cell", "count", "_min_d2", "_max_d2"
         )
         keep = self._prune_pairs(cpairs, k, broadcast_b0=b0_ok)
-        mn, mx = self._box_bounds_expr(F.col("_qvec"))
+        mn, mx = self._box_bounds_from_cols(F.col("_qvec"))
         # descend: each stage expands survivors only to the NEXT ladder
         # level's grouped cells (fan-out ≤ ~DESCENT_BRANCH), finishing on
         # the true stats table — never straight from COARSE_TARGET
@@ -1068,9 +975,11 @@ class GridIndex:
             self._coarse_stats(lv).localCheckpoint(eager=False)
             for lv in ladder[1:]
         ] + [self.stats_df]
-        qs_b = F.broadcast(qs) if self._qs_broadcast_ok(qs) else qs
+        qs_b = self._qs_side(qs)
         for prev_lv, stats_lv in zip(ladder, stages):
-            member = stats_lv.withColumn("_ckey", self._coarse_key_expr(prev_lv))
+            member = self._with_box_cols(stats_lv).withColumn(
+                "_ckey", self._coarse_key_expr(prev_lv)
+            )
             fpairs = (
                 keep.withColumnRenamed("cell", "_ckey")
                 .join(qs_b, "_qid")
@@ -1108,9 +1017,7 @@ class GridIndex:
         # broadcast the per-probe table when the plan-size gate allows it —
         # the default SMJ pays an exchange + two sorts of the survivor
         # table to attach one vector per probe (r11)
-        cand = keep.join(
-            F.broadcast(qs) if self._qs_broadcast_ok(qs) else qs, "_qid"
-        )
+        cand = keep.join(self._qs_side(qs), "_qid")
 
         from pyvectorsearch_spark.functions.vector import l2_sq
 
@@ -1171,13 +1078,13 @@ class GridIndex:
                 .filter(F.col("_min_d2") <= F.lit(r2))
                 .select("_qid", "cell")
             )
-            mn, _ = self._box_bounds_expr(F.col("_qvec"))
+            mn, _ = self._box_bounds_from_cols(F.col("_qvec"))
             stages = [self._coarse_stats(lv) for lv in ladder[1:]] + [
                 self.stats_df
             ]
             cand = None
             for prev_lv, stats_lv in zip(ladder, stages):
-                member = stats_lv.withColumn(
+                member = self._with_box_cols(stats_lv).withColumn(
                     "_ckey", self._coarse_key_expr(prev_lv)
                 )
                 cand = (
@@ -1206,6 +1113,16 @@ class GridIndex:
         )
 
     # ---------------- queries ----------------
+
+    def _candidates_mode(self, candidates: str) -> str:
+        """Validate ``candidates`` and resolve "auto": driver only when the
+        cell table can sit on the driver (cached count, no collect)."""
+        if candidates not in ("auto", "driver", "distributed"):
+            raise ValueError(f"unknown candidates mode {candidates!r}")
+        if candidates != "auto":
+            return candidates
+        small = self._local_stats is not None or self._n_cells() <= 200_000
+        return "driver" if small else "distributed"
 
     @staticmethod
     def _guard_queries(
@@ -1265,11 +1182,8 @@ class GridIndex:
         whose stats table is too big to collect); "auto" picks driver only
         when the stats table is driver-sized.
         """
-        if candidates not in ("auto", "driver", "distributed"):
-            raise ValueError(f"unknown candidates mode {candidates!r}")
+        candidates = self._candidates_mode(candidates)
         queries = self._guard_queries(queries, query_id, query_vec, on_invalid)
-        if candidates == "auto":
-            candidates = "driver" if self._stats_is_small() else "distributed"
         if candidates == "distributed":
             return self._knn_distributed(queries, k, query_id, query_vec, payload)
         q_rows = queries.select(query_id, query_vec).collect()
@@ -1326,11 +1240,8 @@ class GridIndex:
         expression so the output carries ``dist`` — correctness-neutral.)
 
         ``candidates`` as in :meth:`knn`."""
-        if candidates not in ("auto", "driver", "distributed"):
-            raise ValueError(f"unknown candidates mode {candidates!r}")
+        candidates = self._candidates_mode(candidates)
         queries = self._guard_queries(queries, query_id, query_vec, on_invalid)
-        if candidates == "auto":
-            candidates = "driver" if self._stats_is_small() else "distributed"
         if candidates == "distributed":
             return self._range_distributed(
                 queries, radius, query_id, query_vec, payload
@@ -1427,7 +1338,7 @@ class GridIndex:
         shortcut) — kept filtered for a single plan shape, correctness-
         neutral. A distributed twin would swap the numpy classification for
         per-axis interval predicates on the broadcast stats join, exactly
-        as ``_box_bounds_expr`` does for balls.
+        as ``_box_bounds_from_cols`` does for balls.
 
         Returns (query_id, neighbor_id, *payload)."""
         q_rows = queries.select(query_id, lo_col, hi_col).collect()
@@ -1535,7 +1446,7 @@ class GridIndex:
             ],
         ) or stats_src.first()
         # Pre-populate the driver-side cell list when the stats table is
-        # driver-sized (the _stats_is_small bound, checked against FOOTER
+        # driver-sized (the _candidates_mode bound, checked against FOOTER
         # metadata only): the driver candidate path otherwise pays a count
         # job + a collect job per QUERY invocation for a table we already
         # have locally. Bigger artifacts keep the lazy distributed stats

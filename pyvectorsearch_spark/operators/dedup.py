@@ -33,6 +33,7 @@ from pyvectorsearch_spark.functions.text import (
 )
 from pyvectorsearch_spark.functions.vector import cosine_sim
 from pyvectorsearch_spark.functions.lits import lit_double_array
+from pyvectorsearch_spark.plans.inspect import plan_bytes_below
 
 SIMHASH_BITS = 60  # 15 md5 hex nibbles → signed-long safe (< 2^62)
 
@@ -819,18 +820,6 @@ def embedding_dup_pairs_blocked(
 EMB_GEMM_MAX_BYTES = 256 << 20
 
 
-def _plan_size_known_below(df: DataFrame, bound: int) -> bool:
-    """True only when Catalyst's plan-time size estimate (no job) PROVES the
-    table under ``bound`` — unknown/sentinel estimates return False, so the
-    caller takes the scale-safe branch."""
-    try:
-        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        size = int(size if isinstance(size, int) else size.toString())
-    except Exception:
-        return False
-    return 0 < size < bound and size < (1 << 60)
-
-
 def embedding_dup_pairs_auto(
     df: DataFrame,
     *,
@@ -858,7 +847,7 @@ def embedding_dup_pairs_auto(
     Both kernels recompute survivors' cosine with the canonical sequential
     expression, so the output rows are IDENTICAL — the dispatch only picks
     the physical plan."""
-    small = _plan_size_known_below(df.select(id_col, vec_col), gemm_max_bytes)
+    small = plan_bytes_below(df.select(id_col, vec_col), gemm_max_bytes)
     if decision_out is not None:
         decision_out["kernel"] = "blocked" if small else "bucketed"
     if small:

@@ -141,7 +141,10 @@ def connected_components(
     raw = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")).union(
         pairs.select(F.col(dst).alias("a"), F.col(src).alias("b"))
     )
-    if driver_max_edges is not None and start == "auto" and switch_after is not None:
+    probe_driver = (
+        driver_max_edges is not None and start == "auto" and switch_after is not None
+    )
+    if probe_driver:
         # r11: ONE bounded action decides the driver dispatch AND, when the
         # graph is under the bound, already holds the whole edge list —
         # replacing the r10 shape (distinct + repartition shuffles, then a
@@ -160,6 +163,9 @@ def connected_components(
     # preserves outputPartitioning, so rounds re-sort but never re-exchange
     # the edges.
     edges = raw.distinct().repartition("b").localCheckpoint(eager=True)
+    if probe_driver:
+        # the raw checkpoint (duplicates included) is consumed: free it
+        raw._jdf.queryExecution().analyzed().rdd().unpersist(False)
     if start == "auto" and switch_after is not None:
         # degree census on "b" — the edge table's partitioning key, so the
         # groupBy is exchange-free; edges hold both directions, so the

@@ -64,6 +64,21 @@ def partition_filters(df: DataFrame) -> list[str]:
     return out
 
 
+def plan_bytes_below(df: DataFrame, bound: int) -> bool:
+    """The one plan-size gate behind every size dispatch: True only when
+    Catalyst's estimate for ``df`` (the optimized plan's size statistic;
+    no job runs) is known and lies in ``(0, bound)``. Fail-closed: an
+    absent estimate, the ``Long.MaxValue``-class sentinel that RDD- and
+    driver-built tables report, or any error returns False, so the caller
+    takes its scale-safe branch."""
+    try:
+        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        size = int(size if isinstance(size, int) else size.toString())
+    except Exception:
+        return False
+    return 0 < size < min(bound, 1 << 60)
+
+
 def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in explain_str(df) or "BroadcastNestedLoopJoin" in explain_str(df)
 

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pyvectorsearch_spark.plans.inspect import plan_bytes_below
 from pyvectorsearch_spark.sources.tables import load_table
 
 
@@ -678,17 +679,6 @@ def _exact_group_quantiles(
 QUANTILE_AGG_MAX_BYTES = 2 << 30
 
 
-def _quantile_input_is_small(df: DataFrame) -> bool:
-    """Catalyst plan-size gate (no job): False on unknown/sentinel estimates
-    — when the size cannot be proven small, take the memory-safe form."""
-    try:
-        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        size = int(size if isinstance(size, int) else size.toString())
-    except Exception:
-        return False
-    return 0 < size < QUANTILE_AGG_MAX_BYTES and size < (1 << 60)
-
-
 def price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles (p25/p50/p75) of extended price per
     return flag. Size-dispatched (r11, VERDICT r10 #6): inputs whose
@@ -701,7 +691,9 @@ def price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     dispatches before it. DuckDB ``quantile_cont`` is the oracle; both use
     linear interpolation."""
     li = _t(spark, sf_dir, "lineitem")
-    if _quantile_input_is_small(li.select("l_returnflag", "l_extendedprice")):
+    if plan_bytes_below(
+        li.select("l_returnflag", "l_extendedprice"), QUANTILE_AGG_MAX_BYTES
+    ):
         pct = F.percentile("l_extendedprice", F.lit([0.25, 0.5, 0.75]))
         return li.groupBy("l_returnflag").agg(
             F.count("*").alias("n"),

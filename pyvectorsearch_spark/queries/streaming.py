@@ -23,6 +23,26 @@ from pyvectorsearch_spark.streaming.ingest import (
 )
 
 
+def _nested_nullable(t) -> bool:
+    """True when every field NESTED in arrow type ``t`` (struct members,
+    list elements, map values) is nullable, recursively. Map keys are
+    exempt: arrow requires them and Spark's MapType records no key
+    nullability."""
+    import pyarrow.types as pat
+
+    if pat.is_struct(t):
+        return all(f.nullable and _nested_nullable(f.type) for f in t)
+    if pat.is_list(t) or pat.is_large_list(t) or pat.is_fixed_size_list(t):
+        return t.value_field.nullable and _nested_nullable(t.value_type)
+    if pat.is_map(t):
+        return (
+            t.item_field.nullable
+            and _nested_nullable(t.key_type)
+            and _nested_nullable(t.item_type)
+        )
+    return True
+
+
 def _local_parquet_schema(path: str):
     """Parquet schema from local FOOTER METADATA (≈1 ms) — byte-identical
     to ``spark.read.parquet(path).schema`` (~130 ms of driver listing +
@@ -52,7 +72,11 @@ def _local_parquet_schema(path: str):
             arrow = pq.ParquetFile(local).schema_arrow
         # Spark's file source reads every column as nullable whatever the
         # footer says; a non-Spark writer emitting required fields must not
-        # yield a different StructType here (ADVICE r10).
+        # yield a different StructType here (ADVICE r10). Spark relaxes
+        # nested fields too, so a required field below the top level
+        # falls back to the Spark read (ADVICE r11).
+        if not all(_nested_nullable(f.type) for f in arrow):
+            return None
         arrow = pa.schema([f.with_nullable(True) for f in arrow])
         # ns timestamps go through the nanosAsLong conf on the Spark read
         # path (→ bigint) — keep that behavior by not short-circuiting

@@ -3,6 +3,7 @@ bit-identical while removing measured overhead (OPTIMIZATION_r10.md).
 
 - driver union-find CC path (census-bounded collect, opt-in)
 - _prune_pairs b0 broadcast (SMJ sort removed from the pair table)
+- the CC probe's raw edge checkpoint freed on the distributed branch
 - hamming_pairs_gemm data-sized source slices (no repartition exchange)
 - synthetic_media bounded parallelize slices
 - streaming drains' input-scaled state partitions
@@ -55,6 +56,29 @@ class TestDriverCC:
         assert stats["mode"] in ("label", "twostar")
         assert out.count() > 0
 
+    def test_over_bound_frees_raw_checkpoint(self, spark, monkeypatch):
+        """Past the bound the raw edge checkpoint is consumed once the
+        distinct edge table exists: it must not stay a persistent RDD."""
+        df_cls = type(spark.range(1))  # the session's concrete DataFrame
+        made = []
+        orig = df_cls.localCheckpoint
+
+        def spy(self, *a, **kw):
+            out = orig(self, *a, **kw)
+            made.append(out._jdf.queryExecution().analyzed().rdd().id())
+            return out
+
+        monkeypatch.setattr(df_cls, "localCheckpoint", spy)
+        stats: dict = {}
+        connected_components(
+            _rand_graph(spark), driver_max_edges=4, _stats=stats
+        ).collect()
+        raw_id, edges_id = made[:2]
+        live = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+        assert stats["mode"] in ("label", "twostar")
+        assert raw_id not in live
+        assert edges_id in live
+
     def test_default_disabled(self, spark):
         """No driver collect unless the caller opts in (pins the r7 modes)."""
         stats: dict = {}
@@ -105,33 +129,6 @@ class TestPrunePairsBroadcast:
         smj_leftouter = re.search(r"SortMergeJoin .*LeftOuter", plan)
         assert smj_leftouter is None, plan[:3000]
         assert re.search(r"BroadcastHashJoin .*LeftOuter", plan), plan[:3000]
-
-    def test_knob_falls_back(self, spark):
-        from pyvectorsearch_spark.index.grid import GridIndex
-        from pyvectorsearch_spark.sources.tables import load_table
-
-        emb = (
-            load_table(spark, SF_SMOKE, "embeddings")
-            .withColumn("p2", F.slice("embedding", 1, 2))
-            .select("vec_id", "p2")
-        )
-        idx = GridIndex.build(emb, vec_col="p2", id_col="vec_id",
-                              target_occupancy=16)
-        probes = emb.limit(8).select(
-            F.col("vec_id").alias("query_id"), F.col("p2").alias("qvec")
-        )
-        ref = sorted(
-            map(tuple, idx.knn(probes, 3, candidates="distributed").collect())
-        )
-        old = GridIndex.B0_BROADCAST
-        try:
-            GridIndex.B0_BROADCAST = False
-            got = sorted(
-                map(tuple, idx.knn(probes, 3, candidates="distributed").collect())
-            )
-        finally:
-            GridIndex.B0_BROADCAST = old
-        assert got == ref
 
 
 class TestDriverPruneTightness:

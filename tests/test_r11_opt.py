@@ -8,7 +8,7 @@ bit-identical while removing measured overhead (OPTIMIZATION_r11.md).
 - _local_parquet_schema nullability normalization + multi-schema fallback
   (ADVICE r10)
 - _scaled_state_parts session-cap guard (ADVICE r10)
-- GridIndex b0 broadcast plan-size gate (ADVICE r10)
+- the distributed grid kNN's probe-bounded joins stay broadcasts
 """
 from __future__ import annotations
 
@@ -209,6 +209,21 @@ class TestLocalSchemaAdvice:
         assert all(f.nullable for f in loc.fields)
         assert loc == spark.read.parquet(p).schema
 
+    def test_required_nested_field_falls_back_or_matches(self, spark, tmp_path):
+        """A required field INSIDE a struct: Spark's read relaxes it too, so
+        the footer fast path must return None or Spark's exact schema."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from pyvectorsearch_spark.queries.streaming import _local_parquet_schema
+
+        inner = pa.struct([pa.field("x", pa.int64(), nullable=False)])
+        t = pa.table({"s": pa.array([{"x": 1}, {"x": 2}], type=inner)})
+        p = os.path.join(tmp_path, "nested.parquet")
+        pq.write_table(t, p)
+        loc = _local_parquet_schema(p)
+        assert loc is None or loc == spark.read.parquet(p).schema
+
     def test_mixed_schema_dir_falls_back(self, tmp_path):
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -246,38 +261,6 @@ class TestScaledStatePartsCap:
             assert _scaled_state_parts(spark, SF_T2) == 4
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-class TestB0BroadcastGate:
-    def _gi(self):
-        from pyvectorsearch_spark.index.grid import GridIndex
-
-        class _G:
-            B0_BROADCAST = GridIndex.B0_BROADCAST
-            B0_BROADCAST_MAX_PROBE_BYTES = GridIndex.B0_BROADCAST_MAX_PROBE_BYTES
-            _b0_broadcast_ok = GridIndex._b0_broadcast_ok
-
-        return _G()
-
-    def test_small_parquet_broadcasts(self, spark):
-        qs = spark.read.parquet(f"{SF_T2}/embeddings.parquet")
-        assert self._gi()._b0_broadcast_ok(qs) is True
-
-    def test_unknown_size_keeps_default(self, spark):
-        qs = spark.createDataFrame([(1, [0.0, 1.0])], "_qid long, _qvec array<double>")
-        assert self._gi()._b0_broadcast_ok(qs) is True
-
-    def test_known_oversize_disables(self, spark):
-        gi = self._gi()
-        gi.B0_BROADCAST_MAX_PROBE_BYTES = 1
-        qs = spark.read.parquet(f"{SF_T2}/embeddings.parquet")
-        assert gi._b0_broadcast_ok(qs) is False
-
-    def test_manual_kill_switch(self, spark):
-        gi = self._gi()
-        gi.B0_BROADCAST = False
-        qs = spark.read.parquet(f"{SF_T2}/embeddings.parquet")
-        assert gi._b0_broadcast_ok(qs) is False
 
 
 class TestEmbAutoDispatch:
@@ -335,24 +318,6 @@ class TestEmbAutoDispatch:
         assert dec["kernel"] == "bucketed"
 
 
-class TestBoxCols:
-    def test_hoisted_bounds_identical(self, spark):
-        """r11: per-cell box bounds hoisted below the BroadcastExchange must
-        produce bit-identical (query, cell) survivor sets and distances."""
-        from pyvectorsearch_spark.index.grid import GridIndex
-        from pyvectorsearch_spark.queries.vector import QUERIES
-
-        prev = GridIndex.BOX_COLS
-        try:
-            GridIndex.BOX_COLS = True
-            new = {tuple(r) for r in QUERIES["knn_grid_query_table"](spark, SF_T2).collect()}
-            GridIndex.BOX_COLS = False
-            old = {tuple(r) for r in QUERIES["knn_grid_query_table"](spark, SF_T2).collect()}
-        finally:
-            GridIndex.BOX_COLS = prev
-        assert new == old and len(new) > 0
-
-
 class TestPooledPersistSamePlan:
     def test_same_plan_refreshes_instead_of_double_persist(self, spark):
         """r11: persisting a plan semantically equal to a pooled entry must
@@ -391,24 +356,27 @@ class TestPooledPersistSamePlan:
 
 
 class TestQsBroadcast:
-    def test_gate_mirrors_b0(self, spark):
-        from pyvectorsearch_spark.index.grid import GridIndex
-
-        class _G:
-            QS_BROADCAST_MAX_BYTES = GridIndex.QS_BROADCAST_MAX_BYTES
-            _qs_broadcast_ok = GridIndex._qs_broadcast_ok
-
-        gi = _G()
-        qs = spark.read.parquet(f"{SF_T2}/embeddings.parquet")
-        assert gi._qs_broadcast_ok(qs) is True
-        gi.QS_BROADCAST_MAX_BYTES = 1
-        assert gi._qs_broadcast_ok(qs) is False
-
     def test_knn_query_table_plan_has_no_smj(self, spark):
-        """The probe re-attach join must be a broadcast, not a sort-merge
-        (r11: the SMJ paid an exchange + two sorts of the survivor table)."""
+        """With parquet-derived probes (a known plan-size estimate) both
+        probe-bounded joins of the distributed search are broadcast by the
+        gate's hints: the b0 attach (LeftOuter) and the probe re-attach
+        (Inner). No sort-merge join is keyed on ``_qid`` (r11: the SMJ paid
+        an exchange + two sorts of the survivor table). Size-based
+        auto-broadcast is off, so only the hints can make them broadcasts."""
+        import re
+
         from pyvectorsearch_spark.queries.vector import QUERIES
 
-        df = QUERIES["knn_grid_query_table"](spark, SF_T2)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" not in plan
+        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            df = QUERIES["knn_grid_query_table"](spark, SF_T2)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        qid_joins = set(
+            re.findall(r"(\w+Join) \[_qid#\d+L?\], \[_qid#\d+L?\], (\w+)", plan)
+        )
+        assert ("BroadcastHashJoin", "LeftOuter") in qid_joins, plan[:3000]
+        assert ("BroadcastHashJoin", "Inner") in qid_joins, plan[:3000]
+        assert not {j for j in qid_joins if j[0] == "SortMergeJoin"}, plan[:3000]

@@ -2,7 +2,7 @@
 
 `GridIndex` holds two driver-side conveniences: the lazily-collected
 `stats` list (driver candidate selection) and `_level_hist`. Both are
-bounded by `_stats_is_small(limit=200_000)`: past the limit the AUTO mode
+bounded by `_candidates_mode`'s 200,000-cell limit: past it the AUTO mode
 must route search through the distributed candidate path and never
 collect the stats table. These pins make that dispatch a contract, not a
 habit; the 1e6-cell capacity row itself is measured by
