@@ -673,6 +673,10 @@ class GridIndex:
     # cells because the schedule left a ~13× tail expansion)
     TAIL_FAN = 4
     TAIL_GATE_CELLS = 200_000
+    # Most cells whose stats the driver holds as a list: "auto" search
+    # picks the driver path up to here, and loaders prepopulate
+    # ``_local_stats`` only within it.
+    DRIVER_STATS_MAX_CELLS = 200_000
     # Plan-size bounds (``plan_bytes_below``: fail-closed, so probe tables
     # of unknown size take the sort-merge joins) for the two probe-bounded
     # broadcasts of the distributed search. b0, the per-query kth-distance
@@ -1121,7 +1125,10 @@ class GridIndex:
             raise ValueError(f"unknown candidates mode {candidates!r}")
         if candidates != "auto":
             return candidates
-        small = self._local_stats is not None or self._n_cells() <= 200_000
+        small = (
+            self._local_stats is not None
+            or self._n_cells() <= self.DRIVER_STATS_MAX_CELLS
+        )
         return "driver" if small else "distributed"
 
     @staticmethod
@@ -1453,7 +1460,7 @@ class GridIndex:
         # exactly as before (r10 optimization round).
         local_stats = None
         n_stats = sidecar_num_rows(f"{path}/stats")
-        if n_stats is not None and n_stats <= 200_000:
+        if n_stats is not None and n_stats <= GridIndex.DRIVER_STATS_MAX_CELLS:
             cell_rows = read_small_sidecar(
                 f"{path}/stats",
                 columns=["cell", "level", "coords", "count"],

@@ -84,6 +84,7 @@ def _local_df(spark: SparkSession, cols: dict, schema: str) -> "DataFrame":
 
 from pyvectorsearch_spark.index.grid import (
     CELL_SEP,
+    STATS_SCHEMA,
     GridIndex,
     _kinstantiate_distributed,
     _slices,
@@ -185,11 +186,12 @@ def _janitor(meta_path: str, ptr: dict) -> None:
     the same apply that supersedes a dir. A fold therefore leaves the old
     base and its folded deltas on disk until the next batch arrives, so a
     reader that captured the pointer just before the fold (``read_mapping``
-    / ``read_stats`` / ``load_rebalanced_index`` return lazy DataFrames)
-    has at least one full batch interval to execute its jobs before the
-    files go away. Readers that hold a lazy plan across MORE than one
-    subsequent batch must re-read (single-writer, bounded-staleness-read
-    contract — documented on the read_* APIs)."""
+    / ``read_stats`` and the Spark-merge branch of ``load_rebalanced_index``
+    return lazy DataFrames) has at least one full batch interval to
+    execute its jobs before the files go away. Readers that hold a lazy
+    plan across MORE than one subsequent batch must re-read
+    (single-writer, bounded-staleness-read contract — documented on the
+    read_* APIs)."""
     for kind, (base_key, upto_key) in _KINDS.items():
         root = os.path.join(meta_path, kind)
         if not os.path.isdir(root):
@@ -570,16 +572,6 @@ def apply_batch_rebalance(
     """Merge one micro-batch into the log-structured sidecar (module
     docstring). Idempotent under batch replay (pointer-guarded no-op);
     per-batch driver cost bounded by the batch's ancestor closure."""
-    import time as _time
-
-    _prof = os.environ.get("PVS_REBAL_PROF") == "1"
-    _marks: list[tuple[str, float]] = []
-
-    def _mark(label: str) -> None:
-        if _prof:
-            _marks.append((label, _time.time()))
-
-    _mark("start")
     ptr = _load_pointer_file(meta_path)
     if ptr is not None and ptr.get("layout") != _LAYOUT:
         # ADVICE r9 (medium): a pre-r9 pointer must fail LOUD here — the
@@ -634,26 +626,17 @@ def apply_batch_rebalance(
         .collect()  # bounded by the batch's rows, never by the index
     )
     T = {r["_fine"]: int(r["count"]) for r in delta_rows}
-    _mark("batch_collect")
 
     chains = {
         f: _chain_ids(f, fine_level, dim, rr, ratio) for f in T
     }
     affected = sorted({cid for ch in chains.values() for cid in ch})
-    _mark("chains")
     if len(affected) > driver_cell_limit:
         _rebuild_full(
             spark, meta_path=meta_path, ptr=ptr, batch_delta=delta_rows,
             batch_id=batch_id, fine_level=fine_level, dim=dim, rr=rr,
             ratio=ratio, rank=rank,
         )
-        if _prof:
-            print(
-                f"[rebal-prof] batch={batch_id} FALLBACK rebuild_full "
-                f"affected={len(affected)} > limit={driver_cell_limit} "
-                f"took={_time.time() - _marks[0][1]:.2f}",
-                flush=True,
-            )
         return
 
     # Affected nodes' current state, cheapest source first: the validated
@@ -725,13 +708,11 @@ def apply_batch_rebalance(
             )
             for r in state_df.collect():
                 old_state[r["cell"]] = int(r["pending"])
-    _mark("state_read")
 
     changed, flips = _incremental_cascade(
         T, old_state,
         fine_level=fine_level, dim=dim, rr=rr, ratio=ratio, rank=rank,
     )
-    _mark("cascade")
 
     def final_inst(cid: str, level: int) -> bool:
         if cid in changed:
@@ -755,7 +736,6 @@ def apply_batch_rebalance(
         rev=None if cache is None else cache["rev"],
     )
     map_updates.update(remapped)
-    _mark("remap")
 
     if changed:
         _write_local(
@@ -771,7 +751,6 @@ def apply_batch_rebalance(
             meta_path, "mapping", f"b={batch_id}",
             {"_fine": list(map_updates), "cell": list(map_updates.values())},
         )
-    _mark("delta_writes")
 
     nxt = dict(
         ptr, batch_id=batch_id, version=ptr["version"] + 1,
@@ -880,21 +859,6 @@ def apply_batch_rebalance(
         if _cache_rows(cache) > _CACHE_MAX_ROWS:
             # outgrew the cap for good: stop re-attempting rebuilds too
             _CACHE_SKIP.add(meta_path)
-    _mark("fold_publish")
-    if _prof:
-        parts = " ".join(
-            f"{lbl}={(t1 - t0):.2f}"
-            for (lbl, t1), (_, t0) in zip(_marks[1:], _marks[:-1])
-        )
-        cstat = (
-            "none" if _CACHE.get(meta_path) is None
-            else f"rows={len(_CACHE[meta_path]['state'])}"
-        )
-        print(
-            f"[rebal-prof] batch={batch_id} {parts} cache={cstat} "
-            f"affected={len(affected)}",
-            flush=True,
-        )
 
 
 def _remap_after_flips(
@@ -1103,12 +1067,13 @@ def read_state(spark: SparkSession, meta_path: str) -> DataFrame:
     """The maintained node-state table ``(cell, level, pending)``.
 
     Bounded-staleness read contract (applies to every read_* API here and
-    to ``load_rebalanced_index``): the returned DataFrame is LAZY and pins
-    the file set the current pointer references. A concurrent writer's
-    fold supersedes those files but the deferred janitor keeps them on
-    disk until the NEXT batch's apply, so execute (or localCheckpoint)
-    the plan within one batch interval of reading it; re-read for a
-    fresher or longer-lived view."""
+    to ``load_rebalanced_index`` above the driver-read gate; below it that
+    loader returns a snapshot read at load time instead): the returned
+    DataFrame is LAZY and pins the file set the current pointer
+    references. A concurrent writer's fold supersedes those files but the
+    deferred janitor keeps them on disk until the NEXT batch's apply, so
+    execute (or localCheckpoint) the plan within one batch interval of
+    reading it; re-read for a fresher or longer-lived view."""
     ptr = _require_pointer(meta_path)
     df = _read_table(spark, meta_path, "state", ptr)
     if df is None:
@@ -1152,6 +1117,39 @@ def read_mapping(spark: SparkSession, meta_path: str) -> DataFrame:
     return df
 
 
+def _local_sidecar(
+    spark: SparkSession, meta_path: str, ptr: dict
+) -> tuple[DataFrame, DataFrame, list]:
+    """Driver-side snapshot of the sidecar for ``load_rebalanced_index``:
+    (broadcast mapping, stats_df, instantiated stats rows),
+    merged latest-wins with pyarrow and handed to Spark through Arrow —
+    no Spark job, however many dirs are live."""
+    state = _read_table_local(meta_path, "state", ptr)
+    mapping = _read_table_local(meta_path, "mapping", ptr)
+    if state is None or mapping is None:
+        raise ValueError(f"empty rebalance sidecar under {meta_path}")
+    stats = [
+        (cell, int(level), tuple(_coords(cell)), int(pending))
+        for cell, level, pending in zip(
+            state["cell"], state["level"], state["pending"]
+        )
+        if _is_inst(int(level), int(pending), ptr["rank"])
+    ]
+    cell, level, coords, count = zip(*stats)  # level 0 always owns mass
+    stats_df = _local_df(
+        spark,
+        {"cell": cell, "level": level, "coords": [list(c) for c in coords],
+         "count": count},
+        STATS_SCHEMA,
+    )
+    mapping_df = _local_df(
+        spark,
+        {"_fine": mapping["_fine"].tolist(), "cell": mapping["cell"].tolist()},
+        "_fine string, cell string",
+    )
+    return mapping_df, stats_df, stats
+
+
 def load_rebalanced_index(
     spark: SparkSession,
     *,
@@ -1170,11 +1168,29 @@ def load_rebalanced_index(
     """Assemble a searchable ``GridIndex`` from append-only fine-partitioned
     data plus the maintained sidecar: rows re-label via one broadcast-sized
     equi-join on the fine cell (no data movement), stats come straight from
-    the sidecar. Indistinguishable from a batch build over the same rows."""
+    the sidecar. Indistinguishable from a batch build over the same rows.
+
+    While the live state and mapping dirs total at most
+    ``_DRIVER_READ_BYTES`` (the writer's own driver-read gate), the sidecar
+    is merged on the driver: the index holds a SNAPSHOT of the mapping and
+    stats read at load time, and its stats are prepopulated (within
+    ``GridIndex.DRIVER_STATS_MAX_CELLS``) so choosing a search mode and
+    reading the stats run no Spark job; the load's only job is the data
+    dir's schema read. Above the gate the mapping and stats are lazy Spark
+    merges and the bounded-staleness contract of ``read_state`` applies."""
     from pyvectorsearch_spark.streaming.ingest import INGEST_BATCH_COL
 
-    mapping = read_mapping(spark, meta_path)
-    stats_df = read_stats(spark, meta_path)
+    ptr = _require_pointer(meta_path)
+    live = [d for kind in _KINDS for d in _live_dirs(meta_path, kind, ptr)]
+    local_stats = n_stats = None
+    if _meta_bytes(live) <= _DRIVER_READ_BYTES:
+        mapping, stats_df, stats = _local_sidecar(spark, meta_path, ptr)
+        n_stats = len(stats)
+        if n_stats <= GridIndex.DRIVER_STATS_MAX_CELLS:
+            local_stats = stats
+    else:
+        mapping = read_mapping(spark, meta_path)
+        stats_df = read_stats(spark, meta_path)
     rows = spark.read.parquet(data_path).drop(INGEST_BATCH_COL)
     relabeled = (
         rows.withColumnRenamed("cell", "_fine")
@@ -1193,4 +1209,6 @@ def load_rebalanced_index(
         fine_level=fine_level,
         id_col=id_col,
         vec_col=vec_col,
+        _local_stats=local_stats,
+        _stats_count=n_stats,
     )

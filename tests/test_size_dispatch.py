@@ -1,24 +1,33 @@
 """Size dispatch: the one plan-size gate (``plans.inspect.plan_bytes_below``)
-and every site that dispatches on it.
+and every site that dispatches on it, plus ``load_rebalanced_index``'s
+byte gate on the streamed sidecar (``_DRIVER_READ_BYTES``).
 
 The gate is fail-closed: only a known Catalyst estimate inside
 ``(0, bound)`` picks the small-input branch. Each site's two branches must
 return identical rows, so each case forces both (bound 0 and 1 << 62) and
-compares them; the plans must differ, or the case forced nothing.
+compares them; the plans must differ, or the case forced nothing. The
+sidecar load forces its driver-side merge and its Spark merge the same way
+and pins the driver branch's Spark job count.
 """
 from __future__ import annotations
 
+import os
 import re
 import types
+import uuid
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from pyvectorsearch_spark.index import incremental
 from pyvectorsearch_spark.index.grid import GridIndex
+from pyvectorsearch_spark.index.incremental import load_rebalanced_index
 from pyvectorsearch_spark.operators import dedup as dedup_ops
 from pyvectorsearch_spark.plans.inspect import explain_str, plan_bytes_below
 from pyvectorsearch_spark.queries import relational
 from pyvectorsearch_spark.sources.tables import load_table
+from pyvectorsearch_spark.streaming.ingest import stream_index_ingest
 from tests.conftest import SF_SMOKE, SF_T2
 
 
@@ -124,3 +133,206 @@ def test_site_branches_identical(spark, monkeypatch, built, site, sf):
     (small_rows, small_plan), (big_rows, big_plan) = got[1 << 62], got[0]
     assert small_plan != big_plan, "the bound did not move the dispatch"
     assert small_rows == big_rows and small_rows
+
+
+# ---- load_rebalanced_index: driver-side sidecar merge vs Spark merge ----
+
+P2_SCHEMA = "vec_id long, p2 array<float>"
+
+
+def _emb_p2(spark):
+    return (
+        load_table(spark, SF_SMOKE, "embeddings")
+        .withColumn("p2", F.slice("embedding", 1, 2))
+        .select("vec_id", "p2")
+    )
+
+
+def _points(emb):
+    """(ids, float32 points) of a ``(vec_id, p2)`` frame, by id."""
+    rows = emb.orderBy("vec_id").collect()
+    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+    return ids, np.array([list(r["p2"]) for r in rows], dtype=np.float32)
+
+
+class _Stream:
+    """A rebalanced ``stream_index_ingest`` target fed one landing file
+    per micro-batch; ``drain(chunks, **rebalance_kw)`` lands the chunks
+    and drains them, so each call can pass its own rebalance options."""
+
+    def __init__(self, spark, root, geom):
+        self.spark, self.geom = spark, geom
+        self.landing, self.out = str(root / "landing"), str(root / "out")
+        self.ck, self.meta = str(root / "ck"), str(root / "meta")
+        self.n_files = 0
+
+    def drain(self, chunks, **rebalance_kw):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        os.makedirs(self.landing, exist_ok=True)
+        for ids, pts in chunks:
+            table = pa.table(
+                {"vec_id": pa.array(ids, pa.int64()),
+                 "p2": pa.array(list(pts), pa.list_(pa.float32()))}
+            )
+            pq.write_table(
+                table, f"{self.landing}/chunk-{self.n_files:03d}.parquet"
+            )
+            self.n_files += 1
+        g = self.geom
+        stream = (
+            self.spark.readStream.schema(P2_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(self.landing)
+        )
+        assign = lambda df: df.withColumn(  # noqa: E731
+            "cell",
+            GridIndex._cell_expr(
+                "p2", g.origin, g.width, g.fine_level, g.dim, g.rr,
+                g.ratio, clamp=False,
+            ),
+        )
+        q = stream_index_ingest(
+            stream, assign=assign, out_path=self.out, checkpoint=self.ck,
+            rebalance=dict(meta_path=self.meta, **self.geometry(), **rebalance_kw),
+        )
+        assert q.awaitTermination(120), "drain exceeded 120 s"
+
+    def geometry(self):
+        g = self.geom
+        return dict(fine_level=g.fine_level, dim=g.dim, rr=g.rr,
+                    ratio=g.ratio, rank=g.rank)
+
+    def load(self):
+        g = self.geom
+        return load_rebalanced_index(
+            self.spark, data_path=self.out, meta_path=self.meta,
+            origin=g.origin, width=g.width, id_col="vec_id", vec_col="p2",
+            **self.geometry(),
+        )
+
+
+def _chunks(ids, pts, n):
+    return [(ids[i::n], pts[i::n]) for i in range(n)]
+
+
+def _brute_knn(ids, pts, probes, k):
+    """Exact kNN in float64, ties broken by id: (query_id, rank, id)."""
+    out = []
+    for qid, q in probes:
+        d2 = ((pts.astype(np.float64) - np.asarray(q, np.float64)) ** 2).sum(1)
+        order = np.lexsort((ids, d2))[:k]
+        out += [(qid, r + 1, int(ids[j])) for r, j in enumerate(order)]
+    return sorted(out)
+
+
+@pytest.fixture(scope="module")
+def rebalanced(spark, tmp_path_factory):
+    """A drained sidecar holding every kind of live dir: a Spark-written
+    base (batch 0 goes through ``_rebuild_full``: driver_cell_limit=1),
+    two leveled runs (fold_every=2 over batches 1-4) and one delta."""
+    emb = _emb_p2(spark)
+    geom = GridIndex.build(emb, vec_col="p2", id_col="vec_id", target_occupancy=8)
+    ids, pts = _points(emb)
+    chunks = _chunks(ids, pts, 6)
+    s = _Stream(spark, tmp_path_factory.mktemp("rebalanced_load"), geom)
+    s.drain(chunks[:1], driver_cell_limit=1)
+    s.drain(chunks[1:], fold_every=2)
+    ptr = incremental.read_pointer(s.meta)
+    assert ptr["batch_id"] == 5
+    assert ptr["state_base"] is not None and len(ptr["state_runs"]) == 2
+    assert os.path.exists(
+        os.path.join(incremental._base_dir(s.meta, "state", ptr["state_base"]),
+                     "_SUCCESS")
+    ), "the base was not written by Spark"
+    return s, ids, pts
+
+
+def test_rebalanced_load_branches_identical(spark, monkeypatch, rebalanced):
+    s, ids, pts = rebalanced
+    probes = [(int(ids[i]), pts[i].tolist()) for i in (0, 77, 250, 499)]
+    probes.append((-1, [float(pts[:, 0].max()) + 1.0, float(pts[:, 1].min())]))
+    qdf = spark.createDataFrame(probes, "query_id long, qvec array<double>")
+    k = 5
+    want = _brute_knn(ids, pts, probes, k)
+    got = {}
+    for gate in (0, incremental._DRIVER_READ_BYTES):
+        monkeypatch.setattr(incremental, "_DRIVER_READ_BYTES", gate)
+        idx = s.load()
+        local = idx._local_stats is not None
+        knn = {
+            mode: sorted(
+                (r["query_id"], r["rank"], r["neighbor_id"])
+                for r in idx.knn(qdf, k, candidates=mode).collect()
+            )
+            for mode in ("auto", "distributed")
+        }
+        got[gate] = (
+            local,
+            sorted(idx.stats),
+            sorted(map(tuple, idx.stats_df.collect())),
+            sorted(map(tuple, idx.df.select("vec_id", "cell").collect())),
+            knn,
+        )
+    (spark_local, *spark_rows), (drv_local, *drv_rows) = got.values()
+    assert (spark_local, drv_local) == (False, True), "the gate forced nothing"
+    assert drv_rows == spark_rows
+    stats, stats_df_rows, relabeled, knn = drv_rows
+    assert [(c, lvl, list(cd), n) for c, lvl, cd, n in stats] == [
+        (c, lvl, cd, n) for c, lvl, cd, n in stats_df_rows
+    ]
+    assert len(relabeled) == len(ids)
+    assert knn["auto"] == knn["distributed"] == want
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs it ran), read through a job group."""
+    sc = spark.sparkContext
+    group = f"size-dispatch-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_rebalanced_load_jobs_flat_in_live_dirs(spark, tmp_path):
+    """Under the gate the load runs only the data dir's schema read, and
+    load + kNN costs the same at 2 and at 5 live deltas per kind."""
+    emb = _emb_p2(spark).filter(F.col("vec_id") < 250)
+    geom = GridIndex.build(emb, vec_col="p2", id_col="vec_id", target_occupancy=8)
+    ids, pts = _points(emb)
+    chunks = _chunks(ids, pts, 5)
+    qdf = spark.createDataFrame(
+        [(int(ids[i]), pts[i].tolist()) for i in (0, 9)],
+        "query_id long, qvec array<double>",
+    )
+    s = _Stream(spark, tmp_path, geom)
+    counts = {}
+    for upto, new in ((2, chunks[:2]), (5, chunks[2:])):
+        s.drain(new)
+        ptr = incremental.read_pointer(s.meta)
+        live = len(incremental._live_dirs(s.meta, "state", ptr))
+        _, load_jobs = _jobs(spark, s.load)
+        _, serve_jobs = _jobs(spark, lambda: s.load().knn(qdf, 3).collect())
+        counts[upto] = (live, load_jobs, serve_jobs)
+    (live2, load2, serve2), (live5, load5, serve5) = counts[2], counts[5]
+    assert (live2, live5) == (2, 5)
+    assert load2 <= 1 and load5 <= 1, counts
+    assert serve2 == serve5, counts
+
+
+def test_rebalanced_load_over_stats_bound_stays_distributed(
+    spark, monkeypatch, rebalanced
+):
+    """A driver-merged sidecar with more instantiated cells than
+    ``GridIndex.DRIVER_STATS_MAX_CELLS`` keeps its stats off the driver
+    list, and "auto" still resolves to the distributed search, jobless."""
+    s, _, _ = rebalanced
+    monkeypatch.setattr(GridIndex, "DRIVER_STATS_MAX_CELLS", 0)
+    idx = s.load()
+    mode, jobs = _jobs(spark, lambda: idx._candidates_mode("auto"))
+    assert idx._local_stats is None and idx._stats_count > 0
+    assert (mode, jobs) == ("distributed", 0)
