@@ -45,6 +45,42 @@ CELL_SEP = "_"
 STATS_SCHEMA = "cell string, level int, coords array<long>, count long"
 
 
+def _local_df(spark: SparkSession, cols: dict, schema) -> DataFrame:
+    """Driver-held columns -> DataFrame via pandas + Arrow, for the tables
+    the driver already has in hand: driver-mode search's (probe, cell)
+    candidate pairs and the streamed index's sidecar deltas and snapshots
+    (``index/incremental.py``). ``schema`` is a DDL string or a StructType.
+
+    createDataFrame over a plain tuple list takes the row-at-a-time
+    pickle/verify path (measured ~10 s for a 45k-row delta). This build
+    ships with ``spark.sql.execution.arrow.pyspark.enabled=false``, so the
+    pandas path ALSO row-converts unless the flag is on (a 154k-row frame
+    cost 7.3 s without Arrow, 2.4 s with): it is set around the call and
+    the caller's setting restored after."""
+    import pandas as pd
+
+    conf_key = "spark.sql.execution.arrow.pyspark.enabled"
+    try:
+        prev = spark.conf.get(conf_key)
+    except Exception:
+        prev = None
+    try:
+        spark.conf.set(conf_key, "true")
+        return spark.createDataFrame(pd.DataFrame(cols), schema)
+    finally:
+        if prev is not None:
+            spark.conf.set(conf_key, prev)
+
+
+def _fail(*parts: str | Column) -> Column:
+    """``raise_error`` with the parts concatenated; Column parts render as
+    strings, NULL as "NULL"."""
+    return F.raise_error(F.concat(*[
+        F.coalesce(p.cast("string"), F.lit("NULL")) if isinstance(p, Column) else F.lit(p)
+        for p in parts
+    ]))
+
+
 def _slices(level: int, dim: int, rr: int) -> list[int]:
     """Per-axis slice count at ``level`` (pktree.hpp:357-363)."""
     return [(level * rr + dim - c - 1) // dim for c in range(dim)]
@@ -574,7 +610,9 @@ class GridIndex:
         """``df`` restricted to the ``want``-flagged cells by ONE ``cell IN
         (...)`` expression: 4 py4j calls at any length (``isin`` pays ~4 per
         value), the same optimized INSET filter and parquet ``In`` pushdown.
-        Skipped when it would keep half the cells or more (nothing pruned)."""
+        Skipped when it would keep half the cells or more (nothing pruned).
+        Serves :meth:`box` only: ``knn`` and ``range`` join per-probe
+        (probe, cell) pairs instead of a union of every probe's cells."""
         cells = self._geometry()[0][want]
         if len(cells) >= 0.5 * len(want):
             return self.df
@@ -996,74 +1034,25 @@ class GridIndex:
             keep = self._prune_pairs(fpairs, k, broadcast_b0=b0_ok)
         return keep
 
-    def _knn_distributed(
-        self,
-        queries: DataFrame,
-        k: int,
-        query_id: str,
-        query_vec: str,
-        payload: Iterable[str],
-    ) -> DataFrame:
-        """Exact kNN for a query TABLE: candidate selection runs as a plan,
-        not a driver loop, so 10⁶ probes scale the same as 10.
+    def _knn_distributed(self, qs: DataFrame, k: int) -> DataFrame:
+        """kNN candidates ``(_qid, cell, _qvec)`` for a query TABLE:
+        selection runs as a plan, not a driver loop, so 10⁶ probes scale
+        the same as 10.
 
         Phase 1 (per query, window over the scored stats): accumulate cells
         by ascending min-distance until ≥ k points are covered; the max of
         their max-distances bounds the kth neighbor. Phase 2: keep cells
-        with min-distance ≤ that bound → (query, cell) pairs. Then one join
-        against the indexed data on ``cell`` (dynamic partition pruning on a
-        partitioned index) + exact distance + window top-k."""
-        qs = queries.select(
-            F.col(query_id).alias("_qid"), F.col(query_vec).alias("_qvec")
-        )
-        keep = self._two_phase_keep(qs, k)
+        with min-distance ≤ that bound → (query, cell) pairs."""
         # re-attach the query vector to the pruned (query, cell) survivors:
         # broadcast the per-probe table when the plan-size gate allows it —
         # the default SMJ pays an exchange + two sorts of the survivor
         # table to attach one vector per probe (r11)
-        cand = keep.join(self._qs_side(qs), "_qid")
+        return self._two_phase_keep(qs, k).join(self._qs_side(qs), "_qid")
 
-        from pyvectorsearch_spark.functions.vector import l2_sq
-
-        d = self.df.select(
-            "cell",
-            F.col(self.id_col).alias("neighbor_id"),
-            F.col(self.vec_col).alias("_dvec"),
-            *[F.col(c) for c in payload],
-        )
-        scored = d.join(cand, "cell").withColumn(
-            "dist", l2_sq(F.col("_dvec"), F.col("_qvec"))
-        )
-        w = Window.partitionBy("_qid").orderBy(
-            F.col("dist").asc(), F.col("neighbor_id").asc()
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                F.col("_qid").alias("query_id"),
-                "neighbor_id",
-                "dist",
-                "rank",
-                *payload,
-            )
-        )
-
-    def _range_distributed(
-        self,
-        queries: DataFrame,
-        radius: float,
-        query_id: str,
-        query_vec: str,
-        payload: Iterable[str],
-    ) -> DataFrame:
-        """Exact ε-range for a query TABLE: cells with min-distance ≤ r²
-        selected per query in the plan (reject case of pktree.hpp:1161-1163),
-        then one cell join + exact distance filter."""
-        r2 = float(radius) ** 2
-        qs = queries.select(
-            F.col(query_id).alias("_qid"), F.col(query_vec).alias("_qvec")
-        )
+    def _range_distributed(self, qs: DataFrame, r2: float) -> DataFrame:
+        """ε-range candidates ``(_qid, cell, _qvec)`` for a query TABLE:
+        cells with min-distance ≤ r² selected per query in the plan (reject
+        case of pktree.hpp:1161-1163)."""
         if self._n_cells() <= self.COARSE_THRESHOLD:
             cand = (
                 self._scored_pairs(qs)
@@ -1100,21 +1089,72 @@ class GridIndex:
                 )
                 keep = cand.select("_qid", "cell")
             cand = cand.select("_qid", "cell", "_qvec")
+        return cand
 
-        from pyvectorsearch_spark.functions.vector import l2_sq
+    # ---------------- candidate selection (driver) ----------------
 
+    def _knn_keep(self, q: np.ndarray, k: int) -> np.ndarray:
+        """Indices of the cells one probe keeps for kNN: the numpy twin of
+        _prune_pairs, lossless for the same reasons. (1) Any cell holding
+        ≥ k points caps the kth distance by its max-distance (b0); (2) a
+        prefix by (min, max, cell), tightest covering cells first, up to
+        ≥ k cumulative points bounds it again; (3) keep cells with min ≤
+        both bounds. (Ordering by min alone let a domain-sized ancestor
+        lead the prefix: 487 of 543 cells survived for the sf0.1 probes.)"""
+        cells = self._geometry()[0]
+        mins, maxs, cnts = self._bounds(q)
+        heavy = cnts >= k
+        b0 = float(maxs[heavy].min()) if heavy.any() else np.inf
+        live = np.where(mins <= b0)[0]
+        order = live[np.lexsort((cells[live], maxs[live], mins[live]))]
+        pos = int(np.searchsorted(np.cumsum(cnts[order]), k))  # first cum ≥ k
+        bound = float(maxs[order[: pos + 1]].max()) if pos < len(order) else np.inf
+        return live[mins[live] <= bound]
+
+    def _driver_pairs(self, qs: DataFrame, keep) -> DataFrame:
+        """Candidates ``(_qid, cell, _qvec)`` chosen on the driver: one row
+        per (probe, cell) pair that ``keep(probe)`` keeps over the cached
+        cell boxes, shipped once through Arrow and broadcast (bounded by
+        collected probes × kept cells, all already on the driver). ``_qid``
+        and ``_qvec`` keep the probe table's own types."""
+        from pyspark.sql.types import StringType, StructField, StructType
+
+        cells = self._geometry()[0]
+        cols: dict[str, list] = {"_qid": [], "cell": [], "_qvec": []}
+        for qid, qvec in qs.collect():
+            kept = cells[keep(np.asarray(qvec, dtype=np.float64))].tolist()
+            cols["_qid"] += [qid] * len(kept)
+            cols["cell"] += kept
+            cols["_qvec"] += [qvec] * len(kept)
+        f = qs.schema
+        schema = StructType([f["_qid"], StructField("cell", StringType()), f["_qvec"]])
+        return F.broadcast(_local_df(qs.sparkSession, cols, schema))
+
+    def _scored(self, cand: DataFrame, payload: Iterable[str]) -> DataFrame:
+        """The tail both candidate modes share: candidates ``(_qid, cell,
+        _qvec)`` joined to the data on ``cell`` (dynamic partition pruning
+        on a partitioned index) + exact distance. The data-side validity
+        contract sits in the scan's projection, once per data row rather
+        than per (probe, row) pair: a NULL / NaN / Inf component or a dim
+        other than the index's raises with the row id. ``build``'s census
+        refuses such rows, but streamed rows and a ``GridIndex`` constructed
+        over ingested rows never pass it."""
+        from pyvectorsearch_spark.functions.vector import l2_sq, vec_is_finite
+
+        v = F.col(self.vec_col)
+        ok = vec_is_finite(v) & (F.size(v) == F.lit(self.dim))
+        bad = _fail(
+            f"invalid vector (NULL / NaN / Inf component or dim != {self.dim}) "
+            "in the index data id=",
+            F.col(self.id_col),
+        )
         d = self.df.select(
             "cell",
             F.col(self.id_col).alias("neighbor_id"),
-            F.col(self.vec_col).alias("_dvec"),
+            F.when(ok, v).otherwise(bad).alias("_dvec"),
             *[F.col(c) for c in payload],
         )
-        return (
-            d.join(cand, "cell")
-            .withColumn("dist", l2_sq(F.col("_dvec"), F.col("_qvec")))
-            .filter(F.col("dist") <= F.lit(r2))
-            .select(F.col("_qid").alias("query_id"), "neighbor_id", "dist", *payload)
-        )
+        return d.join(cand, "cell").withColumn("dist", l2_sq(F.col("_dvec"), F.col("_qvec")))
 
     # ---------------- queries ----------------
 
@@ -1131,15 +1171,16 @@ class GridIndex:
         )
         return "driver" if small else "distributed"
 
-    @staticmethod
     def _guard_queries(
-        queries: DataFrame, query_id: str, query_vec: str, on_invalid: str
+        self, queries: DataFrame, query_id: str, query_vec: str, on_invalid: str
     ) -> DataFrame:
-        """Query-side validity contract (r7): ``on_invalid="error"``
-        (default) makes any NULL/NaN/Inf probe raise with its id —
-        compiled into the projection, zero extra jobs; ``"skip"`` filters
-        invalid probes out. Without this, a NaN probe makes every cell
-        bound comparison false and the search silently returns nothing."""
+        """The probe table ``(_qid, _qvec)`` under the query-side validity
+        contract (r7): ``on_invalid="error"`` (default) makes any NULL/NaN/
+        Inf probe raise with its id — compiled into the projection, zero
+        extra jobs; ``"skip"`` filters invalid probes out. Without this, a
+        NaN probe makes every cell bound comparison false and the search
+        silently returns nothing. A probe whose dim is not the index's
+        raises "vector dim mismatch" with its id under either setting."""
         from pyvectorsearch_spark.functions.vector import vec_is_finite
         from pyvectorsearch_spark.operators.knn import ON_INVALID
 
@@ -1148,19 +1189,20 @@ class GridIndex:
                 f"unknown on_invalid {on_invalid!r}; "
                 f"expected one of {sorted(ON_INVALID)}"
             )
-        ok = vec_is_finite(F.col(query_vec))
-        if on_invalid == "skip":
-            return queries.filter(ok)
-        guarded = F.when(ok, F.col(query_vec)).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("invalid query vector (NULL / NaN / Inf component) id="),
-                    F.coalesce(F.col(query_id).cast("string"), F.lit("NULL")),
-                    F.lit("; pass on_invalid='skip' to drop such probes"),
-                )
-            )
+        q, qid = F.col(query_vec), F.col(query_id)
+        guarded = F.when(F.size(q) == F.lit(self.dim), q).otherwise(
+            _fail(f"vector dim mismatch: index dim={self.dim}, query dim=",
+                  F.size(q), " id=", qid)
         )
-        return queries.withColumn(query_vec, guarded)
+        ok = vec_is_finite(q)
+        if on_invalid == "skip":
+            queries = queries.filter(ok)
+        else:
+            guarded = F.when(ok, guarded).otherwise(
+                _fail("invalid query vector (NULL / NaN / Inf component) id=", qid,
+                      "; pass on_invalid='skip' to drop such probes")
+            )
+        return queries.select(F.col(query_id).alias("_qid"), guarded.alias("_qvec"))
 
     def knn(
         self,
@@ -1180,54 +1222,30 @@ class GridIndex:
         of their max-distances upper-bounds the kth neighbor; (2) keep every
         cell whose min-distance ≤ that bound. One pruned scan + window top-k.
 
-        ``candidates``: "driver" collects the probes and runs selection as
-        one numpy pass per probe over the cached cell boxes (measured
-        ~0.2 ms per probe over 1,600 cells on a 4-vCPU VM, where the old
-        per-cell loop took ~60 ms, so hundreds to a few thousand probes
-        are fine); "distributed" runs it as a
+        ``candidates``: "driver" collects the probes, runs selection as one
+        numpy pass per probe over the cached cell boxes (~0.2 ms per probe
+        over 1,354 cells on a 4-vCPU VM, so hundreds to a few thousand
+        probes are fine) and ships the kept (probe, cell) pairs to Spark as
+        one broadcast table. On the 8,000-point grid_serve_ingest index, 256
+        probes at k=8 keep 37 of 1,354 cells each (9,500 pairs) where the
+        union of their cells holds 1,339 (7,875 rows), and the search takes
+        ~0.64 s on local[4]. "distributed" runs selection as a
         Spark plan (right for a query TABLE — 10⁴+ probes — or an index
         whose stats table is too big to collect); "auto" picks driver only
-        when the stats table is driver-sized.
+        when the stats table is driver-sized. Both modes finish in the same
+        cell join + exact distance + window top-k (``_scored``).
         """
-        candidates = self._candidates_mode(candidates)
-        queries = self._guard_queries(queries, query_id, query_vec, on_invalid)
-        if candidates == "distributed":
-            return self._knn_distributed(queries, k, query_id, query_vec, payload)
-        q_rows = queries.select(query_id, query_vec).collect()
-        cells = self._geometry()[0]
-        want = np.zeros(len(cells), dtype=bool)
-        for r in q_rows:
-            mins, maxs, cnts = self._bounds(np.asarray(list(r[1]), dtype=np.float64))
-            # The numpy TWIN of _prune_pairs (r10 optimization round — the
-            # driver loop used to order by min-distance alone, so a query's
-            # domain-sized covering ancestor could lead the prefix and blow
-            # the bound up to cover everything: measured 487 of 543 cells
-            # surviving for the sf0.1 probes, i.e. no pruning at all):
-            # (1) any single cell holding ≥ k points caps the kth distance
-            #     by its max-distance (b0);
-            # (2) prefix by (min, max, cell) — tightest covering cells
-            #     first — until ≥ k cumulative points;
-            # (3) keep cells with min ≤ both bounds. Lossless for the same
-            #     reasons as the distributed form (see _prune_pairs).
-            heavy = cnts >= k
-            b0 = float(maxs[heavy].min()) if heavy.any() else np.inf
-            live = np.where(mins <= b0)[0]
-            order = live[np.lexsort((cells[live], maxs[live], mins[live]))]
-            pos = int(np.searchsorted(np.cumsum(cnts[order]), k))  # first cum ≥ k
-            bound = float(maxs[order[: pos + 1]].max()) if pos < len(order) else np.inf
-            want[live[mins[live] <= bound]] = True
-
-        from pyvectorsearch_spark.operators.knn import knn_join
-
-        return knn_join(
-            self._cell_filter(want),
-            queries,
-            k,
-            data_id=self.id_col,
-            data_vec=self.vec_col,
-            query_id=query_id,
-            query_vec=query_vec,
-            payload=payload,
+        qs = self._guard_queries(queries, query_id, query_vec, on_invalid)
+        if self._candidates_mode(candidates) == "distributed":
+            cand = self._knn_distributed(qs, k)
+        else:
+            cand = self._driver_pairs(qs, lambda q: self._knn_keep(q, k))
+        w = Window.partitionBy("_qid").orderBy("dist", "neighbor_id")
+        return (
+            self._scored(cand, payload)
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select(F.col("_qid").alias("query_id"), "neighbor_id", "dist", "rank", *payload)
         )
 
     def range(
@@ -1247,29 +1265,16 @@ class GridIndex:
         expression so the output carries ``dist`` — correctness-neutral.)
 
         ``candidates`` as in :meth:`knn`."""
-        candidates = self._candidates_mode(candidates)
-        queries = self._guard_queries(queries, query_id, query_vec, on_invalid)
-        if candidates == "distributed":
-            return self._range_distributed(
-                queries, radius, query_id, query_vec, payload
-            )
         r2 = float(radius) ** 2
-        q_rows = queries.select(query_id, query_vec).collect()
-        want = np.zeros(len(self._geometry()[0]), dtype=bool)
-        for r in q_rows:
-            want |= self._bounds(np.asarray(list(r[1]), dtype=np.float64))[0] <= r2
-
-        from pyvectorsearch_spark.operators.knn import range_join
-
-        return range_join(
-            self._cell_filter(want),
-            queries,
-            radius,
-            data_id=self.id_col,
-            data_vec=self.vec_col,
-            query_id=query_id,
-            query_vec=query_vec,
-            payload=payload,
+        qs = self._guard_queries(queries, query_id, query_vec, on_invalid)
+        if self._candidates_mode(candidates) == "distributed":
+            cand = self._range_distributed(qs, r2)
+        else:
+            cand = self._driver_pairs(qs, lambda q: self._bounds(q)[0] <= r2)
+        return (
+            self._scored(cand, payload)
+            .filter(F.col("dist") <= F.lit(r2))
+            .select(F.col("_qid").alias("query_id"), "neighbor_id", "dist", *payload)
         )
 
     def range_count(

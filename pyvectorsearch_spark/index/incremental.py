@@ -58,35 +58,12 @@ from collections import defaultdict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _local_df(spark: SparkSession, cols: dict, schema: str) -> "DataFrame":
-    """Driver rows -> DataFrame via pandas + Arrow: createDataFrame over a
-    plain tuple list takes the row-at-a-time pickle/verify path (measured
-    ~10 s for a 45k-row delta — it would have silently re-created the very
-    driver-serialization cost this module exists to remove). This build
-    ships with ``spark.sql.execution.arrow.pyspark.enabled=false``, so the
-    pandas path ALSO row-converts unless we flip it (r10 measurement: a
-    154k-row closure frame cost 7.3 s without Arrow, 2.4 s with) — enable
-    it around the call and restore the caller's setting after."""
-    import pandas as pd
-
-    conf_key = "spark.sql.execution.arrow.pyspark.enabled"
-    try:
-        prev = spark.conf.get(conf_key)
-    except Exception:
-        prev = None
-    try:
-        spark.conf.set(conf_key, "true")
-        return spark.createDataFrame(pd.DataFrame(cols), schema)
-    finally:
-        if prev is not None:
-            spark.conf.set(conf_key, prev)
-
 from pyvectorsearch_spark.index.grid import (
     CELL_SEP,
     STATS_SCHEMA,
     GridIndex,
     _kinstantiate_distributed,
+    _local_df,
     _slices,
 )
 

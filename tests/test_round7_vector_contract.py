@@ -244,3 +244,62 @@ def test_vec_is_finite_expression(spark):
         for r in df.select("id", vec_is_finite("v").alias("ok")).collect()
     }
     assert got == {1: True, 2: False, 3: False, 4: False, 5: False, 6: False, 7: True}
+
+
+def test_grid_probe_dim_mismatch_names_the_probe(spark):
+    """A 1-d or 3-d probe against a 2-d index raises "dim mismatch" with
+    the probe's id in both candidate modes and under either on_invalid:
+    numpy bounds would broadcast a 1-d probe silently, and the Column
+    bounds read components by index."""
+    from pyvectorsearch_spark.index.grid import GridIndex
+
+    _, clean = _clean_data(spark, n=60, dim=2)
+    idx = GridIndex.build(clean, dim=2)
+    for bad_id, vec in ((41, [0.5]), (42, [0.5, 0.5, 0.5])):
+        qs = spark.createDataFrame(
+            [(0, [0.0, 0.0]), (bad_id, vec)], "query_id long, qvec array<double>"
+        )
+        for mode in ("driver", "distributed"):
+            for on_invalid in ("error", "skip"):
+                kw = dict(candidates=mode, on_invalid=on_invalid)
+                for search in (lambda: idx.knn(qs, 3, **kw),
+                               lambda: idx.range(qs, 1.0, **kw)):
+                    with pytest.raises(Exception, match=rf"dim mismatch.*id={bad_id}"):
+                        search().collect()
+
+
+@pytest.mark.parametrize("bad_name", ["nan_component", "null_vector"])
+def test_grid_search_refuses_rows_that_skipped_the_build_census(spark, bad_name):
+    """A GridIndex constructed directly over rows (as over streamed,
+    ingested rows) never ran build's census: search itself must raise on
+    an invalid data row, in both candidate modes."""
+    from pyspark.sql import functions as F
+
+    from pyvectorsearch_spark.index.grid import CELL_SEP, GridIndex
+
+    rows, clean = _clean_data(spark, n=60, dim=2)
+    built = GridIndex.build(clean, dim=2)
+    home = built.df.filter("vec_id = 0").first()["cell"]
+    bad = spark.createDataFrame(
+        [(999, {"nan_component": [NAN, 0.0], "null_vector": None}[bad_name], home)],
+        "vec_id long, embedding array<double>, cell string",
+    )
+    df = built.df.select("vec_id", "embedding", "cell").unionByName(bad)
+    parts = F.split("cell", CELL_SEP)
+    stats = df.groupBy("cell").agg(F.count("*").alias("count")).select(
+        "cell",
+        F.element_at(parts, 1).cast("int").alias("level"),
+        F.slice(parts, 2, 2).cast("array<long>").alias("coords"),
+        "count",
+    )
+    idx = GridIndex(
+        df=df, stats_df=stats, origin=built.origin, width=built.width,
+        dim=2, rank=built.rank, rr=built.rr, ratio=built.ratio,
+        fine_level=built.fine_level, id_col="vec_id", vec_col="embedding",
+    )
+    qs = spark.createDataFrame([(0, rows[0][1])], "query_id long, qvec array<double>")
+    for mode in ("driver", "distributed"):
+        for search in (lambda: idx.knn(qs, 3, candidates=mode),
+                       lambda: idx.range(qs, 1.0, candidates=mode)):
+            with pytest.raises(Exception, match=r"invalid vector.*id=999"):
+                search().collect()

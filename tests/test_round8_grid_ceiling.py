@@ -11,6 +11,9 @@ habit; the 1e6-cell capacity row itself is measured by
 
 from __future__ import annotations
 
+import dataclasses
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -125,3 +128,26 @@ class TestAutoModeCeiling:
             ).collect()
         )
         assert a == b
+        # knn and range with a payload column, string ids and array<float>
+        # probes, one far enough from the data that range ships no pairs
+        idx = dataclasses.replace(
+            small_idx,
+            df=small_idx.df.withColumn("label", F.concat(F.lit("p"), "vec_id")),
+        )
+        probes = [("a", [10.5, 10.25]), ("b", [40.0, 3.0]), ("far", [900.0, 900.0])]
+        qs = spark.createDataFrame(probes, "query_id string, qvec array<float>")
+        ids = np.arange(2000)
+        pts = np.stack([ids % 50, ids / 50], axis=1).astype(np.float64)
+        want_knn, want_range = [], []
+        for qid, q in probes:
+            d2 = ((pts - np.asarray(q, np.float64)) ** 2).sum(1)
+            for r, j in enumerate(np.lexsort((ids, d2))[:4]):
+                want_knn.append((qid, int(j), float(d2[j]), r + 1, f"p{j}"))
+            want_range += [(qid, int(j), float(d2[j]), f"p{j}")
+                           for j in np.flatnonzero(d2 <= 1.5**2)]
+        for mode in ("driver", "distributed"):
+            got_knn = idx.knn(qs, 4, payload=["label"], candidates=mode)
+            got_range = idx.range(qs, 1.5, payload=["label"], candidates=mode)
+            assert sorted(map(tuple, got_knn.collect())) == sorted(want_knn)
+            assert sorted(map(tuple, got_range.collect())) == sorted(want_range)
+        assert {q for q, *_ in want_range} == {"a", "b"}

@@ -336,3 +336,25 @@ def test_rebalanced_load_over_stats_bound_stays_distributed(
     mode, jobs = _jobs(spark, lambda: idx._candidates_mode("auto"))
     assert idx._local_stats is None and idx._stats_count > 0
     assert (mode, jobs) == ("distributed", 0)
+
+
+def test_driver_search_jobs(spark, tmp_path):
+    """Driver-mode search over a loaded index, probes read from parquet as
+    a served index gets them: the per-probe (probe, cell) pair table comes
+    from the one probe collect, and its broadcast takes the place of the
+    probe table's, so ``knn`` and ``range`` run as many Spark jobs as the
+    union-mask + brute-force-join path they replaced (4 and 3)."""
+    emb = _emb_p2(spark)
+    GridIndex.build(emb, vec_col="p2", id_col="vec_id", target_occupancy=8).write(
+        str(tmp_path / "idx")
+    )
+    idx = GridIndex.load(spark, str(tmp_path / "idx"))
+    emb.filter(F.col("vec_id") < 16).select(
+        F.col("vec_id").alias("query_id"), F.col("p2").alias("qvec")
+    ).write.parquet(str(tmp_path / "probes"))
+    qdf = spark.read.parquet(str(tmp_path / "probes"))
+    assert idx._candidates_mode("auto") == "driver"
+    knn, knn_jobs = _jobs(spark, lambda: idx.knn(qdf, 5).collect())
+    rng, range_jobs = _jobs(spark, lambda: idx.range(qdf, 0.05).collect())
+    assert len(knn) == 16 * 5 and rng
+    assert (knn_jobs, range_jobs) == (4, 3)
