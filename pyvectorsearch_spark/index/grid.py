@@ -15,11 +15,16 @@ Because the geometry is closed-form, the Spark index needs **no tree at all**
   parents over the tiny stats table (the batch analog of the insert-time
   rebalancing cascade, ``pktree.hpp:587-929,1288-1354`` — ~420 LoC of pointer
   surgery replaced by a loop of small aggregations).
-- **Search** = candidate-cell selection against the stats table (the
-  branch-and-bound of ``recursive_add_points``, ``pktree.hpp:1048-1064``,
-  restated as point-to-box distance bounds), then ONE pruned scan + exact
-  distance + window top-k. Results are exactly equal to brute force — the
-  PK-tree is an exact index; pruning is physical, not semantic.
+- **Search** = per-probe candidate-cell selection against the stats table
+  (the branch-and-bound of ``recursive_add_points``, ``pktree.hpp:1048-1064``,
+  and the range reject of ``recursive_find_range``, ``:1161-1163``, restated
+  as point-to-box distance bounds), either as numpy on the driver or as one
+  Spark stage loop that kNN and range share, with only the node test
+  differing. Both yield (probe, cell) pairs; every search (``knn``,
+  ``range``, ``box``) joins its pairs to the data on ``cell`` and finishes
+  with exact distance + window top-k, a radius filter or a containment
+  filter. Results are exactly equal to brute force — the PK-tree is an
+  exact index; pruning is physical, not semantic.
 
 Scale notes: the data shuffles once (by cell, at write time); the stats table
 is ~n/occupancy rows and is the only thing the planner touches; candidate
@@ -601,27 +606,11 @@ class GridIndex:
         """min/max squared point-to-box distance per cell (the pruning bounds
         of pktree.hpp:1048-1061 and :1129-1162): one broadcast expression
         over the cached cell boxes."""
+        q = np.asarray(q, dtype=np.float64)
         _, lo, hi, cnts = self._geometry()
         d_min = np.clip(lo - q, 0, None) + np.clip(q - hi, 0, None)
         d_max = np.maximum((q - lo) ** 2, (hi - q) ** 2)
         return (d_min**2).sum(axis=1), d_max.sum(axis=1), cnts
-
-    def _cell_filter(self, want: np.ndarray) -> DataFrame:
-        """``df`` restricted to the ``want``-flagged cells by ONE ``cell IN
-        (...)`` expression: 4 py4j calls at any length (``isin`` pays ~4 per
-        value), the same optimized INSET filter and parquet ``In`` pushdown.
-        Skipped when it would keep half the cells or more (nothing pruned).
-        Serves :meth:`box` only: ``knn`` and ``range`` join per-probe
-        (probe, cell) pairs instead of a union of every probe's cells."""
-        cells = self._geometry()[0][want]
-        if len(cells) >= 0.5 * len(want):
-            return self.df
-        if not len(cells):
-            return self.df.filter(F.lit(False))
-        # ids are built from integers and CELL_SEP, so quoting them is safe
-        if not set("".join(cells)) <= set("0123456789-" + CELL_SEP):
-            raise ValueError(f"malformed cell id among {cells[:5]!r}...")
-        return self.df.filter(F.expr("cell IN ('" + "', '".join(cells) + "')"))
 
     # ---------------- candidate selection (distributed) ----------------
 
@@ -802,8 +791,9 @@ class GridIndex:
         ladder stage now expands survivors by at most ~DESCENT_BRANCH, so
         every stage's pair table stays O(|Q| · survivors · branch) whatever
         the index depth; stage count grows only logarithmically in the
-        cell count. The final (fine) stage is implicit — callers descend
-        ladder stages then finish on the true stats table."""
+        cell count. The final (fine) stage is implicit —
+        ``_distributed_pairs`` descends the ladder stages then finishes on
+        the true stats table."""
         hist = self._level_hist()
         if not hist:
             return [0]
@@ -977,119 +967,63 @@ class GridIndex:
             "_qid", "cell"
         )
 
-    def _two_phase_keep(self, qs: DataFrame, k: int) -> DataFrame:
-        """Surviving (_qid, cell) per query — one- or two-STAGE descent.
+    def _distributed_pairs(self, qs: DataFrame, keep_stage) -> DataFrame:
+        """Candidates ``(_qid, cell, _qvec)``, ``_qid`` being ``struct(probe
+        id)``, for a query TABLE, selected as a Spark plan, not a driver
+        loop, so 10⁶ probes scale the same as 10.
 
-        Small index: score every (query, fine cell) pair and prune (the
-        round-2 plan). Large index (> COARSE_THRESHOLD cells): the
-        |Q|·|cells| pair table is quadratic when probes and cells both
-        scale with the data (measured 71× runtime for 10× data at sf1.0
-        before this stage), so FIRST run the same exact prune against
-        ~COARSE_TARGET ancestor cells, then score only the member cells of
-        surviving ancestors — the reference's recursive subtree prune
-        (pktree.hpp:978-1072) as two plan stages. Lossless at both stages:
-        coarse boxes contain their members' boxes, so the coarse bound ≥
-        the true kth distance and every ancestor holding a top-k point
-        survives; the fine stage then sees every top-k candidate cell."""
+        The reference's recursive descent as plan stages: kNN
+        (``recursive_add_points``, pktree.hpp:978-1072) and range
+        (``recursive_find_range``, :1106-1174) walk the tree alike and differ
+        only in the node test, ``keep_stage``: scored pairs ``(_qid, cell,
+        count, _min_d2, _max_d2)`` in, surviving ``(_qid, cell)`` out. The
+        stages are the ``_descent_ladder`` levels, each aggregated once and
+        checkpointed, then the true stats table; an index of at most
+        COARSE_THRESHOLD cells has no ladder and scores every (query, fine
+        cell) pair at once. Above it the |Q|·|cells| pair table is quadratic
+        when probes and cells both scale with the data (measured 71× runtime
+        for 10× data at sf1.0 before the descent), so each later stage scores
+        only the members of the previous stage's survivors. Lossless at every
+        stage: a coarse box contains its members' boxes, so its bounds hold
+        for all of them."""
+        ladder = self._descent_ladder() if self._n_cells() > self.COARSE_THRESHOLD else []
+        stages = [
+            self._coarse_stats(lv).localCheckpoint(eager=False) for lv in ladder
+        ] + [self.stats_df]
+        # Key the descent on struct(_qid): never NULL, and equal for equal
+        # ids, NULL included, so every _qid equi-join keeps NULL-id probes
+        # (a bare NULL key joins nothing). Every join, window and shuffle,
+        # down to the search's own top-k window, stays on this one _qid
+        # partitioning; a null-safe join would re-key on (coalesce(_qid),
+        # isnull(_qid)) and re-shuffle whenever it plans as a sort-merge.
+        qs = qs.withColumn("_qid", F.struct("_qid"))
+        probes = self._qs_side(qs)
         # The (query × cell) table is the big intermediate (|Q|·|cells|);
         # keep its rows NARROW — scores only, no vectors/coords — so the
         # window shuffle+sort moves a fraction of the bytes. The query
         # vector is re-attached to the ~|Q|·(cells/query) candidates after
-        # pruning (measured 3-4x faster than carrying it through the sort).
-        b0_ok = plan_bytes_below(qs, self.B0_BROADCAST_MAX_PROBE_BYTES)
-        if self._n_cells() <= self.COARSE_THRESHOLD:
-            pairs = self._scored_pairs(qs).select(
-                "_qid", "cell", "count", "_min_d2", "_max_d2"
-            )
-            return self._prune_pairs(pairs, k, broadcast_b0=b0_ok)
-        ladder = self._descent_ladder()
-        coarse = self._coarse_stats(ladder[0]).localCheckpoint(eager=False)
-        cpairs = self._scored_pairs(qs, coarse).select(
-            "_qid", "cell", "count", "_min_d2", "_max_d2"
-        )
-        keep = self._prune_pairs(cpairs, k, broadcast_b0=b0_ok)
-        mn, mx = self._box_bounds_from_cols(F.col("_qvec"))
-        # descend: each stage expands survivors only to the NEXT ladder
-        # level's grouped cells (fan-out ≤ ~DESCENT_BRANCH), finishing on
-        # the true stats table — never straight from COARSE_TARGET
-        # ancestors to fine members (see _descent_ladder)
-        stages = [
-            self._coarse_stats(lv).localCheckpoint(eager=False)
-            for lv in ladder[1:]
-        ] + [self.stats_df]
-        qs_b = self._qs_side(qs)
-        for prev_lv, stats_lv in zip(ladder, stages):
+        # pruning (measured 3-4x faster than carrying it through the sort),
+        # from the broadcast probe table when the plan-size gate allows it:
+        # the default SMJ pays an exchange + two sorts of the survivor table
+        # to attach one vector per probe (r11). Probes sharing an id share
+        # their kept cells; the de-duplication (on the _qid partitioning the
+        # stage left) gives each such probe every cell once.
+        cols = ["_qid", "cell", "count", "_min_d2", "_max_d2"]
+        keep = keep_stage(self._scored_pairs(qs, stages[0]).select(*cols))
+        for prev_lv, stats_lv in zip(ladder, stages[1:]):
+            mn, mx = self._box_bounds_from_cols(F.col("_qvec"))
             member = self._with_box_cols(stats_lv).withColumn(
                 "_ckey", self._coarse_key_expr(prev_lv)
             )
-            fpairs = (
-                keep.withColumnRenamed("cell", "_ckey")
-                .join(qs_b, "_qid")
+            pairs = (
+                keep.dropDuplicates(["_qid", "cell"])
+                .join(probes, "_qid")
+                .withColumnRenamed("cell", "_ckey")
                 .join(F.broadcast(member), "_ckey")
-                .select(
-                    "_qid", "cell", "count",
-                    mn.alias("_min_d2"), mx.alias("_max_d2"),
-                )
+                .select("_qid", "cell", "count", mn.alias("_min_d2"), mx.alias("_max_d2"))
             )
-            keep = self._prune_pairs(fpairs, k, broadcast_b0=b0_ok)
-        return keep
-
-    def _knn_distributed(self, qs: DataFrame, k: int) -> DataFrame:
-        """kNN candidates ``(_qid, cell, _qvec)`` for a query TABLE:
-        selection runs as a plan, not a driver loop, so 10⁶ probes scale
-        the same as 10.
-
-        Phase 1 (per query, window over the scored stats): accumulate cells
-        by ascending min-distance until ≥ k points are covered; the max of
-        their max-distances bounds the kth neighbor. Phase 2: keep cells
-        with min-distance ≤ that bound → (query, cell) pairs."""
-        # re-attach the query vector to the pruned (query, cell) survivors:
-        # broadcast the per-probe table when the plan-size gate allows it —
-        # the default SMJ pays an exchange + two sorts of the survivor
-        # table to attach one vector per probe (r11)
-        return self._two_phase_keep(qs, k).join(self._qs_side(qs), "_qid")
-
-    def _range_distributed(self, qs: DataFrame, r2: float) -> DataFrame:
-        """ε-range candidates ``(_qid, cell, _qvec)`` for a query TABLE:
-        cells with min-distance ≤ r² selected per query in the plan (reject
-        case of pktree.hpp:1161-1163)."""
-        if self._n_cells() <= self.COARSE_THRESHOLD:
-            cand = (
-                self._scored_pairs(qs)
-                .filter(F.col("_min_d2") <= F.lit(r2))
-                .select("_qid", "cell", "_qvec")
-            )
-        else:
-            # ladder descent (see _descent_ladder): reject whole ancestors
-            # with min-dist > r² before expanding to the next level —
-            # trivially lossless (ancestor box contains member boxes, so
-            # member min-dist ≥ ancestor min-dist); per-stage fan-out is
-            # bounded by ~DESCENT_BRANCH instead of n_cells/COARSE_TARGET
-            ladder = self._descent_ladder()
-            keep = (
-                self._scored_pairs(qs, self._coarse_stats(ladder[0]))
-                .filter(F.col("_min_d2") <= F.lit(r2))
-                .select("_qid", "cell")
-            )
-            mn, _ = self._box_bounds_from_cols(F.col("_qvec"))
-            stages = [self._coarse_stats(lv) for lv in ladder[1:]] + [
-                self.stats_df
-            ]
-            cand = None
-            for prev_lv, stats_lv in zip(ladder, stages):
-                member = self._with_box_cols(stats_lv).withColumn(
-                    "_ckey", self._coarse_key_expr(prev_lv)
-                )
-                cand = (
-                    keep.withColumnRenamed("cell", "_ckey")
-                    .join(qs, "_qid")
-                    .join(F.broadcast(member), "_ckey")
-                    .withColumn("_min_d2", mn)
-                    .filter(F.col("_min_d2") <= F.lit(r2))
-                )
-                keep = cand.select("_qid", "cell")
-            cand = cand.select("_qid", "cell", "_qvec")
-        return cand
+            keep = keep_stage(pairs)
+        return keep.dropDuplicates(["_qid", "cell"]).join(probes, "_qid")
 
     # ---------------- candidate selection (driver) ----------------
 
@@ -1112,33 +1046,41 @@ class GridIndex:
         return live[mins[live] <= bound]
 
     def _driver_pairs(self, qs: DataFrame, keep) -> DataFrame:
-        """Candidates ``(_qid, cell, _qvec)`` chosen on the driver: one row
-        per (probe, cell) pair that ``keep(probe)`` keeps over the cached
-        cell boxes, shipped once through Arrow and broadcast (bounded by
-        collected probes × kept cells, all already on the driver). ``_qid``
-        and ``_qvec`` keep the probe table's own types."""
+        """Candidates ``(_qid, cell, *probe columns)`` chosen on the driver:
+        one row per (probe, cell) pair that ``keep(probe_row)`` keeps over
+        the cached cell boxes, carrying the collected probe row's own
+        columns (``_qvec`` for ``knn``/``range``, ``_qlo``/``_qhi`` for
+        ``box``) in the probe table's own types, and ``_qid`` as
+        ``struct(probe id)``, the key ``_distributed_pairs`` returns. Shipped
+        once through Arrow and broadcast (bounded by collected probes × kept
+        cells, all already on the driver)."""
         from pyspark.sql.types import StringType, StructField, StructType
 
         cells = self._geometry()[0]
-        cols: dict[str, list] = {"_qid": [], "cell": [], "_qvec": []}
-        for qid, qvec in qs.collect():
-            kept = cells[keep(np.asarray(qvec, dtype=np.float64))].tolist()
-            cols["_qid"] += [qid] * len(kept)
+        rest = [c for c in qs.columns if c != "_qid"]
+        cols: dict[str, list] = {"_qid": [], "cell": [], **{c: [] for c in rest}}
+        for row in qs.collect():
+            kept = cells[keep(row)].tolist()
             cols["cell"] += kept
-            cols["_qvec"] += [qvec] * len(kept)
+            for c in ("_qid", *rest):
+                cols[c] += [row[c]] * len(kept)
         f = qs.schema
-        schema = StructType([f["_qid"], StructField("cell", StringType()), f["_qvec"]])
-        return F.broadcast(_local_df(qs.sparkSession, cols, schema))
+        schema = StructType(
+            [f["_qid"], StructField("cell", StringType()), *[f[c] for c in rest]]
+        )
+        pairs = _local_df(qs.sparkSession, cols, schema)
+        return F.broadcast(pairs.withColumn("_qid", F.struct("_qid")))
 
     def _scored(self, cand: DataFrame, payload: Iterable[str]) -> DataFrame:
         """The tail both candidate modes share: candidates ``(_qid, cell,
-        _qvec)`` joined to the data on ``cell`` (dynamic partition pruning
-        on a partitioned index) + exact distance. The data-side validity
-        contract sits in the scan's projection, once per data row rather
-        than per (probe, row) pair: a NULL / NaN / Inf component or a dim
-        other than the index's raises with the row id. ``build``'s census
-        refuses such rows, but streamed rows and a ``GridIndex`` constructed
-        over ingested rows never pass it."""
+        _qvec)``, ``_qid`` being ``struct(probe id)``, joined to the data on
+        ``cell`` (dynamic partition pruning on a partitioned index) + exact
+        distance. The data-side validity contract sits in the scan's
+        projection, once per data row rather than per (probe, row) pair: a
+        NULL / NaN / Inf component or a dim other than the index's raises
+        with the row id. ``build``'s census refuses such rows, but streamed
+        rows and a ``GridIndex`` constructed over ingested rows never pass
+        it."""
         from pyvectorsearch_spark.functions.vector import l2_sq, vec_is_finite
 
         v = F.col(self.vec_col)
@@ -1226,26 +1168,31 @@ class GridIndex:
         numpy pass per probe over the cached cell boxes (~0.2 ms per probe
         over 1,354 cells on a 4-vCPU VM, so hundreds to a few thousand
         probes are fine) and ships the kept (probe, cell) pairs to Spark as
-        one broadcast table. On the 8,000-point grid_serve_ingest index, 256
-        probes at k=8 keep 37 of 1,354 cells each (9,500 pairs) where the
-        union of their cells holds 1,339 (7,875 rows), and the search takes
-        ~0.64 s on local[4]. "distributed" runs selection as a
-        Spark plan (right for a query TABLE — 10⁴+ probes — or an index
-        whose stats table is too big to collect); "auto" picks driver only
-        when the stats table is driver-sized. Both modes finish in the same
-        cell join + exact distance + window top-k (``_scored``).
+        one broadcast table (``_driver_pairs``). On the 8,000-point
+        grid_serve_ingest index, 256 probes at k=8 keep 37 of 1,354 cells
+        each (9,500 pairs) where the union of their cells holds 1,339 (7,875
+        rows), and the search takes ~0.64 s on local[4]. "distributed" runs
+        selection as a Spark plan (``_distributed_pairs``, with
+        ``_prune_pairs`` as its node test; right for a query TABLE — 10⁴+
+        probes — or an index whose stats table is too big to collect);
+        "auto" picks driver only when the stats table is driver-sized. Both
+        modes yield (probe, cell) pairs and finish in the same cell join +
+        exact distance + window top-k (``_scored``).
         """
         qs = self._guard_queries(queries, query_id, query_vec, on_invalid)
         if self._candidates_mode(candidates) == "distributed":
-            cand = self._knn_distributed(qs, k)
+            b0_ok = plan_bytes_below(qs, self.B0_BROADCAST_MAX_PROBE_BYTES)
+            cand = self._distributed_pairs(
+                qs, lambda p: self._prune_pairs(p, k, broadcast_b0=b0_ok)
+            )
         else:
-            cand = self._driver_pairs(qs, lambda q: self._knn_keep(q, k))
+            cand = self._driver_pairs(qs, lambda p: self._knn_keep(p._qvec, k))
         w = Window.partitionBy("_qid").orderBy("dist", "neighbor_id")
         return (
             self._scored(cand, payload)
             .withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
-            .select(F.col("_qid").alias("query_id"), "neighbor_id", "dist", "rank", *payload)
+            .select(F.col("_qid._qid").alias("query_id"), "neighbor_id", "dist", "rank", *payload)
         )
 
     def range(
@@ -1264,17 +1211,22 @@ class GridIndex:
         and filter. (The accepted-whole cells still evaluate the distance
         expression so the output carries ``dist`` — correctness-neutral.)
 
-        ``candidates`` as in :meth:`knn`."""
+        ``candidates`` as in :meth:`knn`; both modes keep a probe's cells
+        with min-distance ≤ r², the distributed one as the node test of the
+        same ``_distributed_pairs`` stage loop ``knn`` uses."""
         r2 = float(radius) ** 2
         qs = self._guard_queries(queries, query_id, query_vec, on_invalid)
         if self._candidates_mode(candidates) == "distributed":
-            cand = self._range_distributed(qs, r2)
+            cand = self._distributed_pairs(
+                qs,
+                lambda p: p.filter(F.col("_min_d2") <= F.lit(r2)).select("_qid", "cell"),
+            )
         else:
-            cand = self._driver_pairs(qs, lambda q: self._bounds(q)[0] <= r2)
+            cand = self._driver_pairs(qs, lambda p: self._bounds(p._qvec)[0] <= r2)
         return (
             self._scored(cand, payload)
             .filter(F.col("dist") <= F.lit(r2))
-            .select(F.col("_qid").alias("query_id"), "neighbor_id", "dist", *payload)
+            .select(F.col("_qid._qid").alias("query_id"), "neighbor_id", "dist", *payload)
         )
 
     def range_count(
@@ -1296,12 +1248,14 @@ class GridIndex:
         At 100 TB the difference is the workload: a dense ball answered
         mostly from the (n/occupancy)-row stats table costs a broadcast
         join, not a scan. Returns (query_id, n_in_range) for probes with
-        ≥ 1 match — exact, same contract as :meth:`range`."""
+        ≥ 1 match — exact, same contract as :meth:`range`. Probes pass the
+        same guard as :meth:`range` with ``on_invalid="error"``, and the
+        boundary scan is its ``_scored`` tail with the data-side guard."""
         r2 = float(radius) ** 2
-        qs = queries.select(
-            F.col(query_id).alias("_qid"), F.col(query_vec).alias("_qvec")
-        )
-        sp = self._scored_pairs(qs)
+        qs = self._guard_queries(queries, query_id, query_vec, "error")
+        # struct key (see _distributed_pairs): a NULL probe id's inside and
+        # scanned counts must meet in the full outer join below
+        sp = self._scored_pairs(qs.withColumn("_qid", F.struct("_qid")))
         inside = (
             sp.filter(F.col("_max_d2") <= F.lit(r2))
             .groupBy("_qid")
@@ -1310,18 +1264,14 @@ class GridIndex:
         boundary = sp.filter(
             (F.col("_min_d2") <= F.lit(r2)) & (F.col("_max_d2") > F.lit(r2))
         ).select("_qid", "cell", "_qvec")
-
-        from pyvectorsearch_spark.functions.vector import l2_sq
-
-        d = self.df.select("cell", F.col(self.vec_col).alias("_dvec"))
         scanned = (
-            d.join(boundary, "cell")
-            .filter(l2_sq(F.col("_dvec"), F.col("_qvec")) <= F.lit(r2))
+            self._scored(boundary, ())
+            .filter(F.col("dist") <= F.lit(r2))
             .groupBy("_qid")
             .agg(F.count("*").cast("bigint").alias("_n_scan"))
         )
         merged = inside.join(scanned, "_qid", "full_outer").select(
-            F.col("_qid").alias(query_id),
+            F.col("_qid._qid").alias(query_id),
             (
                 F.coalesce("_n_inside", F.lit(0)) + F.coalesce("_n_scan", F.lit(0))
             ).cast("bigint").alias("n_in_range"),
@@ -1344,27 +1294,26 @@ class GridIndex:
         point-to-box distance of pktree.hpp:1129-1162).
 
         Driver-mode candidate selection (same regime as :meth:`range`'s
-        driver path): per-query overlapping cells from the stats table,
-        then ONE partition-pruned scan + containment filter; cells wholly
-        inside every query box could skip the filter (the accept-whole
+        driver path): each probe's overlapping cells from the cached cell
+        boxes, as (probe, cell) pairs (``_driver_pairs``) joined to the data
+        on ``cell``, then the containment filter; cells wholly inside a
+        query box could skip the filter (the accept-whole
         shortcut) — kept filtered for a single plan shape, correctness-
         neutral. A distributed twin would swap the numpy classification for
         per-axis interval predicates on the broadcast stats join, exactly
         as ``_box_bounds_from_cols`` does for balls.
 
         Returns (query_id, neighbor_id, *payload)."""
-        q_rows = queries.select(query_id, lo_col, hi_col).collect()
-        cells, lo, hi, _ = self._geometry()
-        want = np.zeros(len(cells), dtype=bool)
-        for r in q_rows:
-            qlo = np.asarray(list(r[1]), dtype=np.float64)
-            qhi = np.asarray(list(r[2]), dtype=np.float64)
-            want |= (lo <= qhi).all(1) & (qlo <= hi).all(1)
-        pruned = self._cell_filter(want)
+        _, lo, hi, _ = self._geometry()
         qs = queries.select(
             F.col(query_id).alias("_qid"),
             F.col(lo_col).alias("_qlo"),
             F.col(hi_col).alias("_qhi"),
+        )
+        cand = self._driver_pairs(
+            qs,
+            lambda p: (lo <= np.asarray(list(p._qhi), dtype=np.float64)).all(1)
+            & (np.asarray(list(p._qlo), dtype=np.float64) <= hi).all(1),
         )
         inside = F.forall(
             F.zip_with(F.col(self.vec_col), F.col("_qlo"), lambda x, l: x >= l),
@@ -1374,11 +1323,11 @@ class GridIndex:
             lambda b: b,
         )
         cols = [
-            F.col("_qid").alias(query_id),
+            F.col("_qid._qid").alias(query_id),
             F.col(self.id_col).alias("neighbor_id"),
             *[F.col(c) for c in payload],
         ]
-        return pruned.crossJoin(F.broadcast(qs)).filter(inside).select(*cols)
+        return self.df.join(cand, "cell").filter(inside).select(*cols)
 
     # ---------------- persistence ----------------
 

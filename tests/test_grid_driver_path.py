@@ -1,8 +1,7 @@
 """GridIndex driver candidate path: the cached per-index cell boxes give
 bounds bit-identical to the closed-form per-cell ``_cell_box`` formula, the
 driver ``knn``/``range``/``box`` results equal brute force on a skewed grid
-of >1,000 cells, and the ``cell IN (...)`` filter costs the same number of
-py4j calls whatever its length."""
+of >1,000 cells."""
 
 from __future__ import annotations
 
@@ -10,7 +9,6 @@ import dataclasses
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from pyvectorsearch_spark.index.grid import GridIndex
 from pyvectorsearch_spark.operators.knn import knn_join, range_join
@@ -153,37 +151,3 @@ def test_driver_box_equals_numpy_filter(spark, skewed2d):
     }
     assert len(exact) > 0
     assert got == exact
-
-
-def test_cell_filter_py4j_calls_independent_of_length(skewed2d, monkeypatch):
-    from py4j.clientserver import ClientServerConnection
-
-    idx = skewed2d[2]
-    cells = idx._geometry()[0]
-    assert len(cells) > 1000  # 500 cells stay under the skip-the-filter half
-    calls = [0]
-    send = ClientServerConnection.send_command
-
-    def counting(self, *args, **kwargs):
-        calls[0] += 1
-        return send(self, *args, **kwargs)
-
-    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
-
-    def filter_calls(n):
-        want = np.zeros(len(cells), dtype=bool)
-        want[:n] = True
-        calls[0] = 0
-        idx._cell_filter(want)
-        return calls[0]
-
-    assert filter_calls(1) == filter_calls(500) > 0
-    monkeypatch.undo()
-
-    want = np.zeros(len(cells), dtype=bool)
-    want[:500] = True
-    ours = idx._cell_filter(want)._jdf.queryExecution().optimizedPlan().toString()
-    isin = idx.df.filter(F.col("cell").isin(list(cells[want])))
-    assert ours == isin._jdf.queryExecution().optimizedPlan().toString()
-    assert "INSET" in ours
-    assert idx._cell_filter(np.zeros(len(cells), dtype=bool)).count() == 0

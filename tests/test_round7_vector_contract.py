@@ -268,6 +268,24 @@ def test_grid_probe_dim_mismatch_names_the_probe(spark):
                         search().collect()
 
 
+def test_grid_range_count_guards_its_probes(spark):
+    """``range_count`` takes its probes through the same guard as ``knn``
+    and ``range``: a NaN probe raises with its id instead of matching no
+    cell, and a 1-d probe raises "dim mismatch" with its id instead of an
+    index error on its missing component."""
+    from pyvectorsearch_spark.index.grid import GridIndex
+
+    _, clean = _clean_data(spark, n=60, dim=2)
+    idx = GridIndex.build(clean, dim=2)
+    for vec, msg in (([NAN, 0.0], r"invalid query vector.*id=0"),
+                     ([0.5], r"vector dim mismatch.*id=0")):
+        qs = spark.createDataFrame(
+            [(0, vec), (1, [0.0, 0.0])], "query_id long, qvec array<double>"
+        )
+        with pytest.raises(Exception, match=msg):
+            idx.range_count(qs, 10.0).collect()
+
+
 @pytest.mark.parametrize("bad_name", ["nan_component", "null_vector"])
 def test_grid_search_refuses_rows_that_skipped_the_build_census(spark, bad_name):
     """A GridIndex constructed directly over rows (as over streamed,

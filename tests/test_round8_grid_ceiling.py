@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pyvectorsearch_spark.index.grid import GridIndex
+from pyvectorsearch_spark.operators.knn import knn_join, range_join
 
 
 @pytest.fixture(scope="module")
@@ -43,13 +44,13 @@ class TestAutoModeCeiling:
     def test_auto_picks_driver_under_limit(self, spark, small_idx,
                                            monkeypatch):
         calls = []
-        orig = GridIndex._knn_distributed
+        orig = GridIndex._distributed_pairs
 
         def spy(self, *a, **kw):
             calls.append("distributed")
             return orig(self, *a, **kw)
 
-        monkeypatch.setattr(GridIndex, "_knn_distributed", spy)
+        monkeypatch.setattr(GridIndex, "_distributed_pairs", spy)
         small_idx.knn(_probes(spark), 3, candidates="auto").collect()
         assert calls == [], "small index routed to distributed under auto"
 
@@ -66,13 +67,13 @@ class TestAutoModeCeiling:
         )
         idx._stats_count = 1_000_000  # what a deep 100 TB index reports
         calls = []
-        orig = GridIndex._knn_distributed
+        orig = GridIndex._distributed_pairs
 
         def spy(self, *a, **kw):
             calls.append("distributed")
             return orig(self, *a, **kw)
 
-        monkeypatch.setattr(GridIndex, "_knn_distributed", spy)
+        monkeypatch.setattr(GridIndex, "_distributed_pairs", spy)
         idx.knn(_probes(spark), 3, candidates="auto").collect()
         assert calls == ["distributed"]
         assert idx._local_stats is None, (
@@ -89,13 +90,13 @@ class TestAutoModeCeiling:
         )
         idx._stats_count = 1_000_000
         calls = []
-        orig = GridIndex._range_distributed
+        orig = GridIndex._distributed_pairs
 
         def spy(self, *a, **kw):
             calls.append("distributed")
             return orig(self, *a, **kw)
 
-        monkeypatch.setattr(GridIndex, "_range_distributed", spy)
+        monkeypatch.setattr(GridIndex, "_distributed_pairs", spy)
         idx.range(_probes(spark), 2.0, candidates="auto").collect()
         assert calls == ["distributed"]
         assert idx._local_stats is None
@@ -114,7 +115,7 @@ class TestAutoModeCeiling:
         assert sum(hist.values()) == small_idx.stats_df.count()
         assert idx._local_stats is None
 
-    def test_driver_and_distributed_agree(self, spark, small_idx):
+    def test_driver_and_distributed_agree(self, spark, small_idx, monkeypatch):
         a = sorted(
             (r.query_id, r.neighbor_id, r.rank)
             for r in small_idx.knn(
@@ -151,3 +152,39 @@ class TestAutoModeCeiling:
             assert sorted(map(tuple, got_knn.collect())) == sorted(want_knn)
             assert sorted(map(tuple, got_range.collect())) == sorted(want_range)
         assert {q for q, *_ in want_range} == {"a", "b"}
+        # a NULL probe id and two probes sharing id 7, on a small index and
+        # with the descent ladder forced: each case equals the brute-force
+        # join, which windows the two id-7 probes together
+        pts = spark.range(300).select(
+            F.col("id").alias("vec_id"),
+            F.array(
+                (F.col("id") % 20).cast("double"), (F.col("id") / 20).cast("double")
+            ).alias("embedding"),
+        )
+        idx = GridIndex.build(pts, dim=2, target_occupancy=4)
+        qs = spark.createDataFrame(
+            [(None, [5.0, 5.0]), (2, [1.0, 1.0]), (7, [3.0, 3.0]), (7, [15.0, 12.0])],
+            "query_id long, qvec array<double>",
+        )
+
+        def rows(df):
+            return sorted(repr(tuple(r)) for r in df.collect())
+
+        want_knn = {
+            k: rows(knn_join(pts, qs, k).select("query_id", "neighbor_id", "dist", "rank"))
+            for k in (3, 1000)
+        }
+        want_range = rows(range_join(pts, qs, 2.0).select("query_id", "neighbor_id", "dist"))
+        # range_count too: at r=4 the NULL probe has both whole-inside and
+        # boundary cells, whose counts must land in one row
+        want_count = rows(range_join(pts, qs, 4.0).groupBy("query_id").count())
+        assert rows(idx.range_count(qs, 4.0)) == want_count
+        for forced in (False, True):
+            if forced:
+                monkeypatch.setattr(GridIndex, "COARSE_THRESHOLD", 8)
+                monkeypatch.setattr(GridIndex, "COARSE_TARGET", 16)
+            assert (idx._n_cells() > GridIndex.COARSE_THRESHOLD) is forced
+            for mode in ("driver", "distributed"):
+                for k in (3, 1000):
+                    assert rows(idx.knn(qs, k, candidates=mode)) == want_knn[k]
+                assert rows(idx.range(qs, 2.0, candidates=mode)) == want_range

@@ -358,3 +358,39 @@ def test_driver_search_jobs(spark, tmp_path):
     rng, range_jobs = _jobs(spark, lambda: idx.range(qdf, 0.05).collect())
     assert len(knn) == 16 * 5 and rng
     assert (knn_jobs, range_jobs) == (4, 3)
+
+
+@pytest.mark.parametrize("ladder", [False, True], ids=["small", "ladder"])
+def test_distributed_search_jobs(spark, monkeypatch, ladder):
+    """Distributed ``knn`` and ``range`` walk one stage loop. Their Spark
+    job counts on a small index (no ladder) and with the descent ladder
+    forced: ``knn`` runs 10 and 17, as its own descent did before the
+    merge. ``range`` runs 7 and 11 where its own descent ran 6 and 9. On
+    the small index the extra job is the probe table's broadcast for the
+    final probe re-join; with the ladder the two extra jobs come from
+    checkpointing the coarse stage (without the checkpoint it runs 9).
+    Size-based auto-broadcast is off, because AQE's runtime join rewrites
+    make the counts vary from run to run; only the search's own broadcast
+    hints remain."""
+    emb = _emb_p2(spark)
+    idx = GridIndex.build(emb, vec_col="p2", id_col="vec_id", target_occupancy=8)
+    if ladder:
+        monkeypatch.setattr(GridIndex, "COARSE_THRESHOLD", 8)
+        monkeypatch.setattr(GridIndex, "COARSE_TARGET", 16)
+    assert (idx._n_cells() > GridIndex.COARSE_THRESHOLD) is ladder
+    qdf = emb.filter(F.col("vec_id") < 16).select(
+        F.col("vec_id").alias("query_id"), F.col("p2").alias("qvec")
+    )
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        knn, knn_jobs = _jobs(
+            spark, lambda: idx.knn(qdf, 5, candidates="distributed").collect()
+        )
+        rng, range_jobs = _jobs(
+            spark, lambda: idx.range(qdf, 0.05, candidates="distributed").collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert len(knn) == 16 * 5 and rng
+    assert (knn_jobs, range_jobs) == {False: (10, 7), True: (17, 11)}[ladder]
