@@ -79,6 +79,68 @@ def _local_parquet_files(path: str) -> list[str] | None:
     return files or None
 
 
+def local_write_dir(spark: SparkSession, path: str) -> str | None:
+    """The local filesystem path Spark would write ``path`` to, or None when
+    it would write elsewhere: a ``file:`` URI, or a scheme-less path while
+    the Hadoop default filesystem is the local one. The target need not
+    exist yet, which is why this is not ``_local_parquet_files``' isdir
+    test."""
+    if path.startswith("file:"):
+        return path[len("file:"):]
+    if "://" in path:
+        return None
+    fs = spark._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
+    return path if fs.startswith("file:") else None
+
+
+def _nullable_type(t):
+    import pyarrow as pa
+    import pyarrow.types as pat
+
+    def relax(f):
+        return f.with_type(_nullable_type(f.type)).with_nullable(True)
+
+    if pat.is_struct(t):
+        return pa.struct([relax(f) for f in t])
+    if pat.is_large_list(t):
+        return pa.large_list(relax(t.value_field))
+    if pat.is_list(t):
+        return pa.list_(relax(t.value_field))
+    if pat.is_map(t):
+        return pa.map_(t.key_field, relax(t.item_field))
+    return t
+
+
+def write_table_local(table, out_dir: str, mode: str = "overwrite", files: int = 1) -> None:
+    """Write a driver-held Arrow table as the parquet directory Spark's
+    ``df.write.mode(mode).parquet(out_dir)`` leaves: ``files`` part files in
+    row order, every field nullable (Spark writes them so, and reads its
+    own files back so), so ``spark.read.parquet`` gives the schema it gives
+    for Spark's own write. ``mode`` is "overwrite", "append" or "ignore";
+    callers leave "error" to Spark, which raises."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if mode not in ("overwrite", "append", "ignore"):
+        raise ValueError(f"unsupported local write mode {mode!r}")
+    if os.path.exists(out_dir):
+        if mode == "ignore":
+            return
+        if mode == "overwrite":
+            shutil.rmtree(out_dir)
+    os.makedirs(out_dir, exist_ok=True)
+    schema = pa.schema(
+        [f.with_type(_nullable_type(f.type)).with_nullable(True) for f in table.schema]
+    )
+    table = table.cast(schema)
+    tag = uuid.uuid4().hex
+    step = -(-table.num_rows // max(files, 1)) or 1
+    for i, start in enumerate(range(0, max(table.num_rows, 1), step)):
+        pq.write_table(
+            table.slice(start, step), os.path.join(out_dir, f"part-{i:05d}-{tag}.parquet")
+        )
+
+
 def sidecar_num_rows(path: str) -> int | None:
     """Row count of a local parquet directory from FOOTER METADATA only —
     no data pages are read, so this is safe on arbitrarily large tables.

@@ -9,12 +9,17 @@ while it would own ≥ ``rank`` occupants (K-instantiation, ``:587-635``).
 Because the geometry is closed-form, the Spark index needs **no tree at all**
 (SURVEY.md §1.3): any executor computes any cell id with pure arithmetic.
 
-- **Build** = one min/max aggregation (origin/extent — the batch analog of
-  ``grow_root_to_cover_point``, ``pktree.hpp:841-929``) + one fine-level
-  ``groupBy(cell).count()`` + a bottom-up coalesce of under-full cells into
+- **Build** = a validity census with the min/max corner (origin/extent —
+  the batch analog of ``grow_root_to_cover_point``, ``pktree.hpp:841-929``)
+  + fine-level cell counts + a bottom-up coalesce of under-full cells into
   parents over the tiny stats table (the batch analog of the insert-time
   rebalancing cascade, ``pktree.hpp:587-929,1288-1354`` — ~420 LoC of pointer
-  surgery replaced by a loop of small aggregations).
+  surgery replaced by a loop of small aggregations). An input under the
+  driver-read gate is read once with ``toArrow`` and all of it runs in numpy
+  on the driver, as the reference builds in one process
+  (``example_cpp/main.cpp``: CSV scan, then bulk insert); ``write`` then
+  writes that table with pyarrow. Above the gate the census and the counts
+  are Spark aggregates and the coalesce can run distributed.
 - **Search** = per-probe candidate-cell selection against the stats table
   (the branch-and-bound of ``recursive_add_points``, ``pktree.hpp:1048-1064``,
   and the range reject of ``recursive_find_range``, ``:1161-1163``, restated
@@ -36,18 +41,24 @@ AQE skew-join handles the residue.
 from __future__ import annotations
 
 import math
+import os
 from dataclasses import dataclass, field
 from typing import Iterable, Sequence
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, FloatType
 
 from pyvectorsearch_spark.plans.inspect import plan_bytes_below
 
 CELL_SEP = "_"
 
 STATS_SCHEMA = "cell string, level int, coords array<long>, count long"
+
+# integer index parameters the stats sidecar carries on every row (``int``
+# columns: Spark types ``F.lit`` of a small Python int as int)
+_INT_PARAMS = ("dim", "rank", "rr", "ratio", "fine_level")
 
 
 def _local_df(spark: SparkSession, cols: dict, schema) -> DataFrame:
@@ -96,6 +107,76 @@ def _slices_expr(level_col, c: int, dim: int, rr: int):
     return F.floor(
         (level_col.cast("long") * rr + dim - c - 1) / float(dim)
     ).cast("double")
+
+
+def _census_check(n: int, bad: int, dim: int) -> None:
+    """The census verdict both build branches share: the same ValueErrors,
+    with the same bad-row count."""
+    if n == 0:
+        raise ValueError("cannot build index over an empty DataFrame")
+    if bad:
+        raise ValueError(
+            f"cannot build index: {bad} row(s) have an invalid "
+            f"vector (NULL / NaN / Inf component or dim != {dim}); "
+            "clean or filter the column first"
+        )
+
+
+def _census_arrow(vecs, dim: int | None) -> tuple[np.ndarray, int]:
+    """build's census over an Arrow list column, the numpy twin of the Spark
+    branch's aggregate: ``dim`` from the first non-NULL vector when not
+    given, and a row is invalid when it is NULL, has a NULL / NaN / Inf
+    component or a length other than ``dim``. Returns the ``(n, dim)``
+    float64 points (float32 components widen exactly, as Spark's
+    ``cast("double")`` does) and ``dim``."""
+    import pyarrow.compute as pc
+
+    vecs = vecs.combine_chunks()
+    lens = pc.list_value_length(vecs).fill_null(-1).to_numpy()
+    if dim is None:
+        present = np.flatnonzero(lens >= 0)
+        dim = int(lens[present[0]]) if len(present) else 0
+    vals = vecs.flatten().to_numpy(zero_copy_only=False).astype(np.float64)  # NULL -> NaN
+    bad = lens != dim
+    bad[pc.list_parent_indices(vecs).to_numpy()[~np.isfinite(vals)]] = True
+    _census_check(len(vecs), int(bad.sum()), dim)
+    return vals.reshape(len(vecs), dim), dim
+
+
+def _cell_coords(
+    pts: np.ndarray,
+    origin: Sequence[float],
+    width: float,
+    level: int,
+    dim: int,
+    rr: int,
+    ratio: int,
+    clamp: bool = True,
+) -> np.ndarray:
+    """The ``(n, dim)`` int64 cell coords of float64 points at ``level``:
+    the numpy twin of ``GridIndex._cell_expr``, bit for bit. Each axis
+    divides the same ``x - O_c`` by the same Python double ``w_c``, then
+    floors and, with ``clamp``, clips to the box. Coords are exact while
+    they fit an int64; Spark saturates beyond that."""
+    s = _slices(level, dim, rr)
+    out = np.empty(pts.shape, dtype=np.int64)
+    for c in range(dim):
+        w_c = width * (ratio ** -s[c])
+        coord = np.floor((pts[:, c] - float(origin[c])) / float(w_c))
+        if clamp:
+            coord = np.clip(coord, 0, ratio ** s[c] - 1)
+        out[:, c] = coord
+    return out
+
+
+def _cell_ids(level: int, coords: np.ndarray) -> list[str]:
+    """``"level_c0_c1_..."`` ids of integer cell coords, as ``_cell_expr``
+    spells them."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    parts = [pc.cast(pa.array(coords[:, c]), pa.string()) for c in range(coords.shape[1])]
+    return pc.binary_join_element_wise(pa.scalar(str(level)), *parts, CELL_SEP).to_pylist()
 
 
 def _kinstantiate_driver(
@@ -329,6 +410,9 @@ class GridIndex:
     )
     _stats_count: int | None = field(default=None, repr=False)
     _geom: tuple | None = field(default=None, repr=False, compare=False)
+    # (df, its rows + cell as an Arrow table) from build's driver branch;
+    # write uses the table only while ``self.df`` is still that df
+    _built: tuple | None = field(default=None, repr=False, compare=False)
 
     @property
     def stats(self) -> list[tuple[str, int, tuple[int, ...], int]]:
@@ -359,60 +443,42 @@ class GridIndex:
         coalesce_strategy: str = "auto",
         driver_cell_limit: int = 200_000,
     ) -> "GridIndex":
+        """Build the index over ``df``'s ``vec_col`` (float or double arrays).
+
+        Under the driver-read gate (``plan_bytes_below(df,
+        incremental._DRIVER_READ_BYTES)``, float/double vectors, an
+        Arrow-convertible schema) the build reads ``df`` once with
+        ``toArrow`` and runs the census, root box, fine cells (``_cell_coords``,
+        bit-identical to ``_cell_expr``) and K-instantiation in numpy: one
+        Spark job. The index keeps that cell-sorted table for ``write``.
+        Otherwise, and for ``coalesce_strategy="distributed"``, the census
+        and the fine-cell counts are Spark aggregates. Either way the index's
+        ``df`` is the same lazy plan: ``df`` plus the fine cell, joined to the
+        broadcast fine-to-instantiated mapping."""
+        from pyvectorsearch_spark.index.incremental import _arrow_rows
+
+        if coalesce_strategy not in ("auto", "driver", "distributed"):
+            raise ValueError(f"unknown coalesce_strategy {coalesce_strategy!r}")
         spark = df.sparkSession
-        if dim is None:
-            first = df.select(F.size(vec_col)).first()
-            if first is None:
-                raise ValueError("cannot build index over an empty DataFrame")
-            dim = first[0]
-
-        # Root box: one global min/max pass (batch grow_root_to_cover_point).
-        # The row count rides the same aggregate — no separate count job.
-        # try_element_at, not element_at: a short (dim-mismatched) vector
-        # must surface as the census's ValueError below, not an ANSI
-        # INVALID_ARRAY_INDEX from the same aggregate racing it
-        mins = [
-            F.min(F.try_element_at(F.col(vec_col), F.lit(c + 1))).alias(f"mn{c}")
-            for c in range(dim)
-        ]
-        maxs = [
-            F.max(F.try_element_at(F.col(vec_col), F.lit(c + 1))).alias(f"mx{c}")
-            for c in range(dim)
-        ]
-        # Validity census rides the SAME scan (r7 contract): the index's
-        # internal invariant is the reference's — fixed dim, finite doubles
-        # (pktree.hpp:1223-1250 fixes dim; raw C arrays cannot hold NULLs).
-        # One NaN would silently poison the root box (min/max propagate it)
-        # and floor() every cell id to null, so build fails loud instead.
-        from pyvectorsearch_spark.functions.vector import vec_is_finite
-
-        invalid = F.coalesce(
-            F.col(vec_col).isNull()
-            | (F.size(F.col(vec_col)) != F.lit(dim))
-            | ~vec_is_finite(F.col(vec_col)),
-            F.lit(True),
-        )
-        row = df.agg(
-            *mins,
-            *maxs,
-            F.count("*").alias("_n"),
-            F.sum(invalid.cast("long")).alias("_bad"),
-        ).first()
-        if row["_n"] == 0:
-            raise ValueError("cannot build index over an empty DataFrame")
-        if row["_bad"]:
-            raise ValueError(
-                f"cannot build index: {row['_bad']} row(s) have an invalid "
-                f"vector (NULL / NaN / Inf component or dim != {dim}); "
-                "clean or filter the column first"
-            )
-        origin = [float(row[f"mn{c}"]) for c in range(dim)]
-        extent = max(
-            max(float(row[f"mx{c}"]) - origin[c] for c in range(dim)), 1e-12
-        )
+        v_type = df.schema[vec_col].dataType if vec_col in df.columns else None
+        table = None
+        if (
+            coalesce_strategy != "distributed"
+            and isinstance(v_type, ArrayType)
+            and isinstance(v_type.elementType, (FloatType, DoubleType))
+        ):
+            table = _arrow_rows(df)
+        if table is not None:
+            pts, dim = _census_arrow(table.column(vec_col), dim)
+            lo, hi, n = pts.min(axis=0).tolist(), pts.max(axis=0).tolist(), len(pts)
+        else:
+            lo, hi, n, dim = GridIndex._census_spark(df, vec_col, dim)
+        # Root box: the data's min corner and largest extent (batch
+        # grow_root_to_cover_point)
+        origin = [float(x) for x in lo]
+        extent = max(max(float(hi[c]) - origin[c] for c in range(dim)), 1e-12)
         width = extent * (1 + 1e-9)  # open upper edge: max point stays inside
 
-        n = row["_n"]
         if fine_level is None:
             # enough total slices that average occupancy ≈ target if uniform
             cells_needed = max(n / max(target_occupancy, 1), 1.0)
@@ -422,23 +488,28 @@ class GridIndex:
         cell_expr = GridIndex._cell_expr(vec_col, origin, width, fine_level, dim, rr, ratio)
         fine = df.withColumn("_fine", cell_expr)
 
-        if coalesce_strategy not in ("auto", "driver", "distributed"):
-            raise ValueError(f"unknown coalesce_strategy {coalesce_strategy!r}")
         fine_stats = None
-        if coalesce_strategy == "auto":
+        if table is not None:
+            coords, inverse, n_fine = np.unique(
+                _cell_coords(pts, origin, width, fine_level, dim, rr, ratio),
+                axis=0, return_inverse=True, return_counts=True,
+            )
+            fine_ids = _cell_ids(fine_level, coords)
+            fine_stats = list(zip(fine_ids, n_fine.tolist()))
+        elif coalesce_strategy == "auto":
             # One job decides the strategy AND (when the cell table is small
             # enough) already supplies the driver path's stats: collect at
             # most driver_cell_limit+1 grouped rows — the driver's footprint
             # stays bounded whatever the corpus size, and overflow routes to
             # the distributed cascade without a separate countDistinct job.
-            fine_stats = (
-                fine.groupBy("_fine").count().limit(driver_cell_limit + 1).collect()
+            fine_stats = [
+                (r["_fine"], r["count"])
+                for r in fine.groupBy("_fine").count().limit(driver_cell_limit + 1).collect()
+            ]
+        if coalesce_strategy == "auto":
+            coalesce_strategy = (
+                "distributed" if len(fine_stats) > driver_cell_limit else "driver"
             )
-            if len(fine_stats) > driver_cell_limit:
-                fine_stats = None
-                coalesce_strategy = "distributed"
-            else:
-                coalesce_strategy = "driver"
         if coalesce_strategy == "distributed":
             return GridIndex._build_distributed(
                 fine, origin, width, dim, rank, rr, ratio, fine_level,
@@ -447,13 +518,12 @@ class GridIndex:
 
         # Stats at the fine level (small: ≤ n/1 rows, typically n/occupancy).
         if fine_stats is None:
-            fine_stats = fine.groupBy("_fine").count().collect()
-        counts = {r["_fine"]: r["count"] for r in fine_stats}
+            fine_stats = [(r["_fine"], r["count"]) for r in fine.groupBy("_fine").count().collect()]
 
         # Bottom-up K-instantiation (shared with the streaming incremental
         # rebalance — the cascade is a pure function of the count table).
         assign, stats = _kinstantiate_driver(
-            counts, fine_level=fine_level, dim=dim, rr=rr, ratio=ratio,
+            dict(fine_stats), fine_level=fine_level, dim=dim, rr=rr, ratio=ratio,
             rank=rank,
         )
 
@@ -465,10 +535,17 @@ class GridIndex:
             [(cid, lvl, list(coords), cnt) for cid, lvl, coords, cnt in stats],
             STATS_SCHEMA,
         )
+        built = None
+        if table is not None:
+            import pyarrow as pa
+
+            homes = pa.array([assign[f] for f in fine_ids], pa.string())
+            built = (indexed, table.append_column("cell", homes.take(inverse.ravel())))
         return GridIndex(
             df=indexed,
             stats_df=stats_df,
             _local_stats=stats,
+            _built=built,
             origin=origin,
             width=width,
             dim=dim,
@@ -478,6 +555,45 @@ class GridIndex:
             fine_level=fine_level,
             id_col=id_col,
             vec_col=vec_col,
+        )
+
+    @staticmethod
+    def _census_spark(
+        df: DataFrame, vec_col: str, dim: int | None
+    ) -> tuple[list, list, int, int]:
+        """build's Spark branch: ``dim`` from the first non-NULL vector when
+        not given, then one aggregate for the per-axis min/max, the row count
+        and the validity census (r7 contract: the index's internal invariant
+        is the reference's, fixed dim and finite doubles, pktree.hpp:1223-1250;
+        one NaN would poison the root box and floor() every cell id to null,
+        so build fails loud instead). Returns (mins, maxs, n, dim)."""
+        from pyvectorsearch_spark.functions.vector import vec_is_finite
+
+        if dim is None:
+            first = df.filter(F.col(vec_col).isNotNull()).select(F.size(vec_col)).first()
+            dim = first[0] if first is not None else 0
+        # try_element_at, not element_at: a short (dim-mismatched) vector
+        # must surface as the census's ValueError below, not an ANSI
+        # INVALID_ARRAY_INDEX from the same aggregate racing it
+        comp = [F.try_element_at(F.col(vec_col), F.lit(c + 1)) for c in range(dim)]
+        invalid = F.coalesce(
+            F.col(vec_col).isNull()
+            | (F.size(F.col(vec_col)) != F.lit(dim))
+            | ~vec_is_finite(F.col(vec_col)),
+            F.lit(True),
+        )
+        row = df.agg(
+            *[F.min(x).alias(f"mn{c}") for c, x in enumerate(comp)],
+            *[F.max(x).alias(f"mx{c}") for c, x in enumerate(comp)],
+            F.count("*").alias("_n"),
+            F.sum(invalid.cast("long")).alias("_bad"),
+        ).first()
+        _census_check(row["_n"], row["_bad"], dim)
+        return (
+            [row[f"mn{c}"] for c in range(dim)],
+            [row[f"mx{c}"] for c in range(dim)],
+            row["_n"],
+            dim,
         )
 
     @staticmethod
@@ -967,7 +1083,9 @@ class GridIndex:
             "_qid", "cell"
         )
 
-    def _distributed_pairs(self, qs: DataFrame, keep_stage) -> DataFrame:
+    def _distributed_pairs(
+        self, qs: DataFrame, keep_stage, checkpoint: bool = False
+    ) -> DataFrame:
         """Candidates ``(_qid, cell, _qvec)``, ``_qid`` being ``struct(probe
         id)``, for a query TABLE, selected as a Spark plan, not a driver
         loop, so 10⁶ probes scale the same as 10.
@@ -977,8 +1095,10 @@ class GridIndex:
         (``recursive_find_range``, :1106-1174) walk the tree alike and differ
         only in the node test, ``keep_stage``: scored pairs ``(_qid, cell,
         count, _min_d2, _max_d2)`` in, surviving ``(_qid, cell)`` out. The
-        stages are the ``_descent_ladder`` levels, each aggregated once and
-        checkpointed, then the true stats table; an index of at most
+        stages are the ``_descent_ladder`` levels, each aggregated once
+        (and, with ``checkpoint``, checkpointed: kNN's ``_prune_pairs`` reads
+        each stage's pair table twice, range reads it once), then the true
+        stats table; an index of at most
         COARSE_THRESHOLD cells has no ladder and scores every (query, fine
         cell) pair at once. Above it the |Q|·|cells| pair table is quadratic
         when probes and cells both scale with the data (measured 71× runtime
@@ -987,9 +1107,10 @@ class GridIndex:
         stage: a coarse box contains its members' boxes, so its bounds hold
         for all of them."""
         ladder = self._descent_ladder() if self._n_cells() > self.COARSE_THRESHOLD else []
-        stages = [
-            self._coarse_stats(lv).localCheckpoint(eager=False) for lv in ladder
-        ] + [self.stats_df]
+        coarse = [self._coarse_stats(lv) for lv in ladder]
+        if checkpoint:
+            coarse = [c.localCheckpoint(eager=False) for c in coarse]
+        stages = coarse + [self.stats_df]
         # Key the descent on struct(_qid): never NULL, and equal for equal
         # ids, NULL included, so every _qid equi-join keeps NULL-id probes
         # (a bare NULL key joins nothing). Every join, window and shuffle,
@@ -1183,7 +1304,7 @@ class GridIndex:
         if self._candidates_mode(candidates) == "distributed":
             b0_ok = plan_bytes_below(qs, self.B0_BROADCAST_MAX_PROBE_BYTES)
             cand = self._distributed_pairs(
-                qs, lambda p: self._prune_pairs(p, k, broadcast_b0=b0_ok)
+                qs, lambda p: self._prune_pairs(p, k, broadcast_b0=b0_ok), checkpoint=True
             )
         else:
             cand = self._driver_pairs(qs, lambda p: self._knn_keep(p._qvec, k))
@@ -1349,18 +1470,30 @@ class GridIndex:
         of range-partitioned files SORTED by cell, so the same filters prune
         via parquet row-group min/max stats without drowning the filesystem
         in per-cell directories (a 543-cell index over 2000 rows measured
-        4.3 s just to LIST when dir-partitioned)."""
-        agg = self.stats_df.agg(
-            F.sum("count").alias("n"), F.count("*").alias("n_cells")
-        ).first()
-        n = int(agg["n"] or 0)
-        n_cells = max(int(agg["n_cells"]), 1)
+        4.3 s just to LIST when dir-partitioned).
+
+        An index from ``build``'s driver branch, written unchanged to a local
+        path in the sorted layout, is written with pyarrow from the table the
+        build read: no Spark job, and ``spark.read.parquet`` gives the same
+        schemas as for Spark's own write. ``n`` / ``n_cells`` come from the
+        driver-held stats when the index has them."""
+        if self._local_stats is not None:
+            n = sum(s[3] for s in self._local_stats)
+            n_cells = max(len(self._local_stats), 1)
+        else:
+            agg = self.stats_df.agg(
+                F.sum("count").alias("n"), F.count("*").alias("n_cells")
+            ).first()
+            n = int(agg["n"] or 0)
+            n_cells = max(int(agg["n_cells"]), 1)
+        files = max(1, math.ceil(n / max(target_file_rows, 1)))
         if n and n / n_cells >= partition_rows_threshold:
             self.df.repartition("cell").write.mode(mode).partitionBy(
                 "cell"
             ).parquet(f"{path}/data")
+        elif self._write_local(path, mode, files):
+            return
         else:
-            files = max(1, math.ceil(n / max(target_file_rows, 1)))
             (
                 self.df.repartitionByRange(files, "cell")
                 .sortWithinPartitions("cell")
@@ -1370,21 +1503,60 @@ class GridIndex:
         # Stats written straight from the DataFrame — never collected. The
         # index parameters (a dozen scalars) ride on every row as literals;
         # the table stays one file per ~hundred MB of cells.
-        meta = (
-            self.stats_df.withColumn(
-                "origin", F.array(*[F.lit(float(x)) for x in self.origin])
-            )
-            .withColumn("width", F.lit(float(self.width)))
-            .withColumn("dim", F.lit(int(self.dim)))
-            .withColumn("rank", F.lit(int(self.rank)))
-            .withColumn("rr", F.lit(int(self.rr)))
-            .withColumn("ratio", F.lit(int(self.ratio)))
-            .withColumn("fine_level", F.lit(int(self.fine_level)))
-            .withColumn("id_col", F.lit(self.id_col))
-            .withColumn("vec_col", F.lit(self.vec_col))
+        meta = self.stats_df.withColumns(
+            {
+                "origin": F.array(*[F.lit(float(x)) for x in self.origin]),
+                "width": F.lit(float(self.width)),
+                **{k: F.lit(int(getattr(self, k))) for k in _INT_PARAMS},
+                "id_col": F.lit(self.id_col),
+                "vec_col": F.lit(self.vec_col),
+            }
         )
         files = max(1, math.ceil(n_cells / 2_000_000))
         meta.coalesce(files).write.mode(mode).parquet(f"{path}/stats")
+
+    def _write_local(self, path: str, mode: str, files: int) -> bool:
+        """write's driver branch: the build's rows sorted by cell into
+        ``files`` data files and the stats sidecar, both with pyarrow.
+        Declines (False, write goes through Spark) unless the build's table
+        backs ``self.df``, the stats are driver-held, the path is local and
+        ``mode`` is one pyarrow honours as Spark does; "error" on an
+        existing path is left to Spark, which raises."""
+        import pyarrow as pa
+
+        from pyvectorsearch_spark.index.cache import local_write_dir, write_table_local
+
+        if self._built is None or self._built[0] is not self.df or not self._local_stats:
+            return False
+        local = local_write_dir(self.df.sparkSession, path)
+        if local is None:
+            return False
+        dirs = (f"{local}/data", f"{local}/stats")
+        mode = (mode or "errorifexists").lower()
+        if mode in ("error", "errorifexists", "default") and not any(
+            os.path.exists(d) for d in dirs
+        ):
+            mode = "overwrite"
+        if mode not in ("overwrite", "append", "ignore"):
+            return False
+        write_table_local(self._built[1].sort_by("cell"), dirs[0], mode, files)
+        cell, level, coords, count = zip(*self._local_stats)
+        k = len(cell)
+        stats = pa.table(
+            {
+                "cell": pa.array(cell, pa.string()),
+                "level": pa.array(level, pa.int32()),
+                "coords": pa.array([list(c) for c in coords], pa.list_(pa.int64())),
+                "count": pa.array(count, pa.int64()),
+                "origin": pa.array([[float(x) for x in self.origin]] * k, pa.list_(pa.float64())),
+                "width": pa.array([float(self.width)] * k, pa.float64()),
+                **{p: pa.array([int(getattr(self, p))] * k, pa.int32()) for p in _INT_PARAMS},
+                "id_col": pa.array([self.id_col] * k, pa.string()),
+                "vec_col": pa.array([self.vec_col] * k, pa.string()),
+            }
+        )
+        write_table_local(stats, dirs[1], mode)
+        return True
 
     @staticmethod
     def load(spark: SparkSession, path: str) -> "GridIndex":

@@ -224,6 +224,27 @@ def _meta_bytes(dirs: list[str]) -> int:
 #: deltas are bounded by the batch's ancestor closure by construction)
 _DRIVER_READ_BYTES = 64 << 20
 
+
+def _arrow_rows(df: DataFrame):
+    """``df``'s rows as one Arrow table, read with one ``toArrow`` job, when
+    its plan is known to be under ``_DRIVER_READ_BYTES`` (the fail-closed
+    ``plan_bytes_below``, bound read at call time) and its schema converts
+    to Arrow; else None, and the caller keeps its Spark branch. Shared by
+    ``GridIndex.build`` and ``stream_index_ingest``'s micro-batches."""
+    from pyspark.errors import PySparkException
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from pyvectorsearch_spark.plans.inspect import plan_bytes_below
+
+    if not plan_bytes_below(df, _DRIVER_READ_BYTES):
+        return None
+    try:
+        to_arrow_schema(df.schema, error_on_duplicated_field_names_in_struct=True)
+    except PySparkException:  # a type or struct Arrow cannot hold
+        return None
+    return df.toArrow()
+
+
 #: filtered (predicate-pushdown) pyarrow reads stay driver-side up to this
 #: many referenced bytes: the filter evaluates vectorized per row group
 #: and only matching rows materialize to pandas, so the constant is ~10x
@@ -427,18 +448,16 @@ def _write_local(meta_path: str, kind: str, name: str, cols: dict) -> None:
     The pointer file already makes meta_path a driver-visible filesystem
     by contract, so this adds no new deployment assumption."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    d = os.path.join(meta_path, kind, name)
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d, exist_ok=True)
+    from pyvectorsearch_spark.index.cache import write_table_local
+
     schema = pa.schema(
         [(n, getattr(pa, t)()) for n, t in _PA_SCHEMAS[kind]]
     )
-    table = pa.table(
-        {n: cols[n] for n, _ in _PA_SCHEMAS[kind]}, schema=schema
+    write_table_local(
+        pa.table({n: cols[n] for n, _ in _PA_SCHEMAS[kind]}, schema=schema),
+        os.path.join(meta_path, kind, name),
     )
-    pq.write_table(table, os.path.join(d, "part-00000.parquet"))
 
 
 def _coords(cid: str) -> list[int]:
@@ -533,7 +552,7 @@ def _incremental_cascade(
 def apply_batch_rebalance(
     spark: SparkSession,
     *,
-    assigned_batch: DataFrame,
+    assigned_batch,
     batch_id: int,
     meta_path: str,
     fine_level: int,
@@ -548,7 +567,10 @@ def apply_batch_rebalance(
 ) -> None:
     """Merge one micro-batch into the log-structured sidecar (module
     docstring). Idempotent under batch replay (pointer-guarded no-op);
-    per-batch driver cost bounded by the batch's ancestor closure."""
+    per-batch driver cost bounded by the batch's ancestor closure.
+    ``assigned_batch`` holds the batch's rows with their fine cell in
+    ``cell_col``: a DataFrame (its per-cell counts are one Spark job) or
+    the Arrow table the caller already read (counted on the driver)."""
     ptr = _load_pointer_file(meta_path)
     if ptr is not None and ptr.get("layout") != _LAYOUT:
         # ADVICE r9 (medium): a pre-r9 pointer must fail LOUD here — the
@@ -597,12 +619,18 @@ def apply_batch_rebalance(
             )
     _janitor(meta_path, ptr)
 
-    delta_rows = (
-        assigned_batch.groupBy(F.col(cell_col).alias("_fine"))
-        .agg(F.count("*").alias("count"))
-        .collect()  # bounded by the batch's rows, never by the index
-    )
-    T = {r["_fine"]: int(r["count"]) for r in delta_rows}
+    if isinstance(assigned_batch, DataFrame):
+        T = {
+            r["_fine"]: int(r["count"])
+            for r in assigned_batch.groupBy(F.col(cell_col).alias("_fine"))
+            .agg(F.count("*").alias("count"))
+            .collect()  # bounded by the batch's rows, never by the index
+        }
+    else:
+        import pyarrow.compute as pc
+
+        vc = pc.value_counts(assigned_batch.column(cell_col))
+        T = dict(zip(vc.field("values").to_pylist(), vc.field("counts").to_pylist()))
 
     chains = {
         f: _chain_ids(f, fine_level, dim, rr, ratio) for f in T
@@ -610,7 +638,7 @@ def apply_batch_rebalance(
     affected = sorted({cid for ch in chains.values() for cid in ch})
     if len(affected) > driver_cell_limit:
         _rebuild_full(
-            spark, meta_path=meta_path, ptr=ptr, batch_delta=delta_rows,
+            spark, meta_path=meta_path, ptr=ptr, batch_delta=T,
             batch_id=batch_id, fine_level=fine_level, dim=dim, rr=rr,
             ratio=ratio, rank=rank,
         )
@@ -975,7 +1003,7 @@ def _rebuild_full(
     *,
     meta_path: str,
     ptr: dict,
-    batch_delta,
+    batch_delta: dict[str, int],
     batch_id: int,
     fine_level: int,
     dim: int,
@@ -990,8 +1018,8 @@ def _rebuild_full(
     delta = _local_df(
         spark,
         {
-            "_fine": [r["_fine"] for r in batch_delta],
-            "count": [int(r["count"]) for r in batch_delta],
+            "_fine": list(batch_delta),
+            "count": list(batch_delta.values()),
         },
         "_fine string, count long",
     )

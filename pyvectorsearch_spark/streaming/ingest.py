@@ -382,7 +382,11 @@ def stream_index_ingest(
 
     - "sorted" (default): ``files_per_batch`` cell-RANGE-sorted plain
       files; the cell rides as a DATA column and searches prune via
-      parquet row-group min/max stats. The right layout whenever fine
+      parquet row-group min/max stats. A micro-batch under the driver-read
+      gate (``incremental._arrow_rows``) bound for a local ``out_path`` is
+      read once with ``toArrow`` and written by pyarrow as ONE cell-sorted
+      file; the same table gives ``rebalance`` its per-cell counts, so the
+      batch costs one Spark job and one scan. The right layout whenever fine
       cells are numerous relative to rows — the r8 soak measured the
       per-cell-directory layout writing ~415 files per 417-row batch on
       a deep fine grid (~1 row/cell) and a consolidated base of 19.8k
@@ -425,10 +429,23 @@ def stream_index_ingest(
     if layout not in ("cells", "sorted"):
         raise ValueError(f"unknown layout {layout!r}")
 
+    from pyvectorsearch_spark.index.cache import local_write_dir, write_table_local
+    from pyvectorsearch_spark.index.incremental import _arrow_rows
+
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         assigned = assign(batch_df)
         batch_dir = os.path.join(out_path, f"{INGEST_BATCH_COL}={batch_id}")
-        if layout == "cells":
+        local_dir = local_write_dir(batch_df.sparkSession, batch_dir)
+        # driver branch: one scan of the micro-batch feeds the write and
+        # the rebalance counts
+        rows = (
+            _arrow_rows(assigned)
+            if layout == "sorted" and local_dir is not None
+            else None
+        )
+        if rows is not None:
+            write_table_local(rows.sort_by(partition_col), local_dir)
+        elif layout == "cells":
             (
                 assigned.write.mode("overwrite")
                 .partitionBy(partition_col)
@@ -448,7 +465,7 @@ def stream_index_ingest(
 
             apply_batch_rebalance(
                 batch_df.sparkSession,
-                assigned_batch=assigned,
+                assigned_batch=assigned if rows is None else rows,
                 batch_id=batch_id,
                 cell_col=partition_col,
                 **rebalance,

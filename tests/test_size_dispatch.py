@@ -7,7 +7,10 @@ The gate is fail-closed: only a known Catalyst estimate inside
 return identical rows, so each case forces both (bound 0 and 1 << 62) and
 compares them; the plans must differ, or the case forced nothing. The
 sidecar load forces its driver-side merge and its Spark merge the same way
-and pins the driver branch's Spark job count.
+and pins the driver branch's Spark job count. ``GridIndex.build`` /
+``write`` and ``stream_index_ingest``'s micro-batches read a small input
+once into Arrow under the same ``_DRIVER_READ_BYTES``; their cases force
+both branches through that one setting and pin the driver branch's jobs.
 """
 from __future__ import annotations
 
@@ -198,6 +201,7 @@ class _Stream:
             rebalance=dict(meta_path=self.meta, **self.geometry(), **rebalance_kw),
         )
         assert q.awaitTermination(120), "drain exceeded 120 s"
+        return q
 
     def geometry(self):
         g = self.geom
@@ -365,10 +369,10 @@ def test_distributed_search_jobs(spark, monkeypatch, ladder):
     """Distributed ``knn`` and ``range`` walk one stage loop. Their Spark
     job counts on a small index (no ladder) and with the descent ladder
     forced: ``knn`` runs 10 and 17, as its own descent did before the
-    merge. ``range`` runs 7 and 11 where its own descent ran 6 and 9. On
+    merge. ``range`` runs 7 and 9 where its own descent ran 6 and 9. On
     the small index the extra job is the probe table's broadcast for the
-    final probe re-join; with the ladder the two extra jobs come from
-    checkpointing the coarse stage (without the checkpoint it runs 9).
+    final probe re-join. Only ``knn`` checkpoints the coarse stages, as it
+    reads each stage's pair table twice; ``range`` reads each once.
     Size-based auto-broadcast is off, because AQE's runtime join rewrites
     make the counts vary from run to run; only the search's own broadcast
     hints remain."""
@@ -393,4 +397,242 @@ def test_distributed_search_jobs(spark, monkeypatch, ladder):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert len(knn) == 16 * 5 and rng
-    assert (knn_jobs, range_jobs) == {False: (10, 7), True: (17, 11)}[ladder]
+    assert (knn_jobs, range_jobs) == {False: (10, 7), True: (17, 9)}[ladder]
+
+
+# ---- GridIndex build / write / streamed ingest: driver branch vs Spark ----
+
+# both settings of the one driver-read bound: 0 forces every Spark branch
+GATES = (0, incremental._DRIVER_READ_BYTES)
+
+
+def _write_points(path, ids, pts, value_type):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    vecs = [None if p is None else list(p) for p in pts]
+    pq.write_table(
+        pa.table({"vec_id": pa.array(ids, pa.int64()),
+                  "v": pa.array(vecs, pa.list_(value_type))}),
+        path,
+    )
+
+
+def test_cell_coords_bit_identical_to_cell_expr(spark):
+    """``_cell_coords`` + ``_cell_ids`` spell every point's cell exactly as
+    ``_cell_expr`` does, clamped and not, from float32 and float64 vectors:
+    points on cell edges, the max point of the box (open upper edge),
+    -0.0, points outside the box and a random spread."""
+    import pyarrow as pa
+
+    from pyvectorsearch_spark.index.grid import _cell_coords, _cell_ids
+
+    origin, width, level, dim, rr, ratio = [0.0, -0.3], 1.7 * (1 + 1e-9), 5, 2, 2, 2
+    s = [(level * rr + dim - c - 1) // dim for c in range(dim)]
+    w = [width * ratio ** -s_c for s_c in s]
+    edges = [
+        [origin[0] + i * w[0], origin[1] + j * w[1]]
+        for i in range(0, 2 ** s[0] + 1, 3) for j in range(0, 2 ** s[1] + 1, 5)
+    ]
+    special = [
+        [origin[0] + 1.7, origin[1] + 1.7],  # the data's max corner
+        [-0.0, -0.0], [-0.0, 0.0], [0.0, origin[1]],
+        [-0.25, -1.0], [1.7 * 3, 4.0], [-7.5, 9.25],  # outside the box
+    ]
+    rng = np.random.default_rng(7)
+    spread = rng.uniform(-0.5, 2.5, size=(500, 2)).tolist()
+    pts = edges + special + spread
+    for value_type, np_type in ((pa.float32(), np.float32), (pa.float64(), np.float64)):
+        pts_t = np.asarray(pts, dtype=np_type)
+        df = spark.createDataFrame(
+            [(i, [float(x) for x in p]) for i, p in enumerate(pts_t)],
+            f"i long, v array<{'float' if np_type is np.float32 else 'double'}>",
+        )
+        for clamp in (True, False):
+            want = [
+                r["cell"] for r in df.select(
+                    "i", GridIndex._cell_expr("v", origin, width, level, dim, rr, ratio,
+                                              clamp=clamp).alias("cell")
+                ).orderBy("i").collect()
+            ]
+            coords = _cell_coords(pts_t.astype(np.float64), origin, width, level, dim,
+                                  rr, ratio, clamp=clamp)
+            assert _cell_ids(level, coords) == want, (value_type, clamp)
+
+
+def _payload_input(spark, root):
+    """A parquet input with payload columns beside an ``array<float>``
+    vector: string, timestamp, decimal and struct."""
+    import datetime
+    import decimal
+
+    rng = np.random.default_rng(3)
+    pts = rng.normal(size=(400, 2)).astype(np.float32)
+    rows = [
+        (i, [float(x) for x in p], f"name-{i}" if i % 7 else None,
+         datetime.datetime(2024, 1, 1) + datetime.timedelta(minutes=i),
+         decimal.Decimal(i) / 4, (i % 5, f"t{i % 3}"))
+        for i, p in enumerate(pts)
+    ]
+    spark.createDataFrame(
+        rows, "vec_id long, p2 array<float>, name string, ts timestamp, "
+        "price decimal(12,2), tag struct<a:int,b:string>",
+    ).write.parquet(f"{root}/input")
+    return pts
+
+
+def test_build_write_load_branches_identical(spark, monkeypatch, tmp_path):
+    """``build`` + ``write`` + ``load`` through the driver branch (Arrow
+    read, numpy cells, pyarrow writes) and through the Spark branch give
+    the same geometry, stats, (id, cell) rows, payload values, file
+    schemas and kNN rows."""
+    _payload_input(spark, tmp_path)
+    qdf = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [1.5, -0.5]), (2, [9.0, 9.0])],
+        "query_id long, qvec array<double>",
+    )
+    got = {}
+    for gate in GATES:
+        monkeypatch.setattr(incremental, "_DRIVER_READ_BYTES", gate)
+        out = str(tmp_path / f"idx{gate}")
+        idx = GridIndex.build(
+            spark.read.parquet(str(tmp_path / "input")), vec_col="p2",
+            id_col="vec_id", target_occupancy=8,
+        )
+        idx.write(out)
+        loaded = GridIndex.load(spark, out)
+        data = spark.read.parquet(f"{out}/data")
+        stats = spark.read.parquet(f"{out}/stats")
+        got[gate] = (
+            idx._built is not None,
+            (idx.origin, idx.width, idx.fine_level, idx.dim),
+            sorted(idx.stats),
+            sorted(loaded.stats),
+            sorted(map(tuple, stats.collect())),
+            sorted(map(tuple, data.select("vec_id", "cell").collect())),
+            sorted(map(tuple, data.drop("cell").collect())),
+            (data.schema, stats.schema),
+            sorted(map(tuple, loaded.knn(qdf, 4, payload=["name", "price"]).collect())),
+        )
+    (spark_built, *spark_rows), (drv_built, *drv_rows) = got.values()
+    assert (spark_built, drv_built) == (False, True), "the gate forced nothing"
+    assert drv_rows == spark_rows
+    assert len(drv_rows[4]) == 400 and len(drv_rows[-1]) == 12
+
+
+def test_build_write_load_jobs(spark, tmp_path):
+    """Under the gate, reading a parquet input, building, writing and
+    loading the index runs 4 Spark jobs: the input's schema read, the one
+    Arrow read and ``load``'s two parquet schema reads (14 through Spark)."""
+    _payload_input(spark, tmp_path)
+    out = str(tmp_path / "idx")
+
+    def lifecycle():
+        src = spark.read.parquet(str(tmp_path / "input"))
+        GridIndex.build(src, vec_col="p2", id_col="vec_id").write(out)
+        return GridIndex.load(spark, out)
+
+    idx, jobs = _jobs(spark, lifecycle)
+    assert idx._local_stats and jobs <= 4, jobs
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["empty", "null_vector", "null_component", "nan", "inf", "wrong_dim",
+     "first_row_null"],
+)
+def test_build_census_branches_identical(spark, monkeypatch, tmp_path, case):
+    """Both build branches refuse the same inputs with the same ValueError
+    and bad-row count. ``first_row_null`` (dim not given, the first row's
+    vector NULL) takes dim from the first non-NULL vector and counts the
+    NULL row."""
+    import pyarrow as pa
+
+    from pyvectorsearch_spark.index import grid
+
+    ids = list(range(20))
+    pts = [[float(i), float(i % 3), 1.0] for i in ids]
+    bad = {
+        "empty": None,
+        "null_vector": [None, None],
+        "null_component": [[1.0, None, 2.0]],
+        "nan": [[float("nan"), 0.0, 0.0]],
+        "inf": [[0.0, float("-inf"), 0.0], [float("inf"), 0.0, 1.0]],
+        "wrong_dim": [[1.0, 2.0]],
+        "first_row_null": [None],
+    }[case]
+    if bad is None:
+        ids, pts = [], []
+    elif case == "first_row_null":
+        ids, pts = [-1] + ids, bad + pts
+    else:
+        ids, pts = ids + [100 + j for j in range(len(bad))], pts + bad
+    path = str(tmp_path / "in" / "part-0.parquet")
+    _write_points(path, ids, pts, pa.float64())
+    want = "empty DataFrame" if bad is None else f": {len(bad)} row\\(s\\) have an invalid"
+    census_calls = []
+    real = grid._census_arrow
+    monkeypatch.setattr(
+        grid, "_census_arrow", lambda *a: census_calls.append(1) or real(*a)
+    )
+    msgs = []
+    for gate in GATES:
+        monkeypatch.setattr(incremental, "_DRIVER_READ_BYTES", gate)
+        with pytest.raises(ValueError, match=want) as err:
+            GridIndex.build(spark.read.parquet(os.path.dirname(path)), vec_col="v",
+                            dim=None if case == "first_row_null" else 3)
+        msgs.append(str(err.value))
+    assert census_calls == [1], "the gate forced nothing"
+    assert msgs[0] == msgs[1]
+
+
+def test_stream_ingest_branches_identical(spark, monkeypatch, tmp_path):
+    """A drain whose micro-batches go through the driver branch (one Arrow
+    read feeding a pyarrow write and the rebalance counts) leaves the same
+    batch rows, sidecar state and mapping as the Spark branch, with one
+    data file per batch, and its ingested index answers kNN the same."""
+    import glob
+
+    emb = _emb_p2(spark).filter(F.col("vec_id") < 300)
+    geom = GridIndex.build(emb, vec_col="p2", id_col="vec_id", target_occupancy=8)
+    ids, pts = _points(emb)
+    streams = {}
+    for gate in GATES:
+        monkeypatch.setattr(incremental, "_DRIVER_READ_BYTES", gate)
+        streams[gate] = _Stream(spark, tmp_path / f"gate{gate}", geom)
+        streams[gate].drain(_chunks(ids, pts, 3))
+    probes = [(int(ids[i]), pts[i].tolist()) for i in (0, 99, 201)]
+    qdf = spark.createDataFrame(probes, "query_id long, qvec array<double>")
+    got = {}
+    for gate, s in streams.items():
+        files = [len(glob.glob(f"{d}/*.parquet")) for d in sorted(glob.glob(f"{s.out}/ingest_batch=*"))]
+        got[gate] = (
+            files,
+            sorted(map(tuple, spark.read.parquet(s.out).collect())),
+            sorted(map(tuple, incremental.read_state(spark, s.meta).collect())),
+            sorted(map(tuple, incremental.read_mapping(spark, s.meta).collect())),
+            sorted((r["query_id"], r["rank"], r["neighbor_id"])
+                   for r in s.load().knn(qdf, 5).collect()),
+        )
+    (spark_files, *spark_rows), (drv_files, *drv_rows) = got.values()
+    assert drv_files == [1, 1, 1] and spark_files != drv_files, (spark_files, drv_files)
+    assert drv_rows == spark_rows
+    assert len(drv_rows[0]) == len(ids)
+    assert drv_rows[-1] == _brute_knn(ids, pts, probes, 5)
+
+
+def test_stream_chunk_jobs(spark, tmp_path):
+    """Under the gate one 200-row micro-batch runs 1 Spark job and reads
+    its rows once (the Spark branch: 5 jobs, 600 rows). The stream runs its
+    jobs in the job group named by its run id."""
+    emb = _emb_p2(spark).filter(F.col("vec_id") < 400)
+    geom = GridIndex.build(emb, vec_col="p2", id_col="vec_id", target_occupancy=8)
+    ids, pts = _points(emb)
+    s = _Stream(spark, tmp_path, geom)
+    for chunk in _chunks(ids, pts, 2):
+        q = s.drain([chunk])
+        batches = [p for p in q.recentProgress if p.numInputRows > 0]
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+        assert [p.numInputRows for p in batches] == [200]
+        assert len(jobs) <= 2, len(jobs)
