@@ -6,8 +6,8 @@ wrapper, ``/root/reference/include/pktree.hpp:948,933,1262,1401``). This
 module is their Spark-native equivalent, as sketched in SURVEY.md §2.5:
 
     idx = VectorIndex.build(df, vec_col="embedding", rank=3, rr=2, ratio=2)
-    idx.knn(queries_df, k=5)           # -> (query_id, rank, dist, *payload)
-    idx.range(queries_df, radius=0.1)  # -> (query_id, dist, *payload)
+    idx.knn(queries_df, k=5)           # -> (query_id, neighbor_id, dist, rank, *payload)
+    idx.range(queries_df, radius=0.1)  # -> (query_id, neighbor_id, dist, *payload)
     idx.write(path); VectorIndex.load(spark, path)
     knn_bruteforce(df, queries_df, k)  # exact, index-free oracle
 

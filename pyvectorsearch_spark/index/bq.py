@@ -22,17 +22,18 @@ Extends the reference's exact search surface
 Scale shape (100 TB): the code column is computed in the scan projection
 (zero shuffle, 8 bytes/vector); the Hamming scan is a broadcast-probe pass
 like `operators/knn.py::knn_join`; only `rerank` rows per probe reach the
-exact-distance stage. At cluster scale the BQ scan composes with the
-IVF/grid candidate machinery — quantize WITHIN cells — because the code
-column is just another column.
+exact-search tail every vector index shares (`index/search.py`). At
+cluster scale the BQ scan composes with the IVF/grid candidate machinery —
+quantize WITHIN cells — because the code column is just another column.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pyvectorsearch_spark.functions.vector import _as_double, l2_sq
+from pyvectorsearch_spark.functions.vector import _as_double
+from pyvectorsearch_spark.index.search import guard_probes, keyed, knn_rows, scored, topk
 
 
 def bq_code_expr(vec: Column | str, dim: int) -> Column:
@@ -78,30 +79,17 @@ def bq_knn(
     the shortlist to the final top-``k``. Returns
     ``(query_id, neighbor_id, dist, rank)``.
     """
+    qs = keyed(guard_probes(probes, query_id_col, qvec_col, dim))
     coded = data.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_emb"),
-        bq_code_expr(vec_col, dim).alias("_code"),
+        F.col(id_col).alias("neighbor_id"), bq_code_expr(vec_col, dim).alias("_code")
     )
-    qcoded = probes.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(qvec_col).alias("_qvec"),
-        bq_code_expr(qvec_col, dim).alias("_qcode"),
-    )
+    qcoded = qs.withColumn("_qcode", bq_code_expr("_qvec", dim))
     ham = F.bit_count(F.col("_code").bitwiseXOR(F.col("_qcode"))).cast("int")
     pairs = coded.crossJoin(F.broadcast(qcoded)).withColumn("_ham", ham)
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.asc("_ham"), F.asc("neighbor_id")
+    short = topk(pairs, ["_qid", "_pos"], ["_ham", "neighbor_id"], rerank, "_r1").select(
+        "_qid", "neighbor_id", "_qvec"
     )
-    short = pairs.withColumn("_r1", F.row_number().over(w_short)).filter(
-        F.col("_r1") <= rerank
-    )
-    exact = short.withColumn("dist", l2_sq("_qvec", "_emb"))
-    w_final = Window.partitionBy("query_id").orderBy(
-        F.asc("dist"), F.asc("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w_final))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dist", "rank")
+    return knn_rows(
+        scored(data, F.broadcast(short), "neighbor_id", id_col=id_col, vec_col=vec_col, dim=dim),
+        k,
     )

@@ -29,10 +29,11 @@ pass, top-k via per-query window.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyvectorsearch_spark.functions.lits import lit_long_array
+from pyvectorsearch_spark.index.search import topk
 from pyvectorsearch_spark.operators.clustering import (
     _km_assign,
     _km_quantize,
@@ -117,19 +118,13 @@ def ivf_fixedpoint_knn(
             F.slice(F.array_sort(entries), 1, min(nprobe, len(cents)))
         ).alias("_p"),
     ).select("_qid", "_qq", F.col("_p.c").alias("_c"))
-    w = Window.partitionBy("_qid").orderBy(
-        F.col("d2q").asc(), F.col("neighbor_id").asc()
+    pairs = sel.join(assigned, "_c").select(
+        "_qid",
+        F.col("_id").alias("neighbor_id"),
+        _d2(F.col("_qq"), F.col("_q")).alias("d2q"),
     )
-    return (
-        sel.join(assigned, "_c")
-        .select(
-            "_qid",
-            F.col("_id").alias("neighbor_id"),
-            _d2(F.col("_qq"), F.col("_q")).alias("d2q"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("_qid").alias(query_id), "neighbor_id", "d2q", "rank")
+    return topk(pairs, "_qid", ["d2q", "neighbor_id"], k).select(
+        F.col("_qid").alias(query_id), "neighbor_id", "d2q", "rank"
     )
 
 
@@ -222,15 +217,9 @@ def pq_adc_knn(
         term = _d2(F.col(f"_s{mi}"), cv)
         adc = term if adc is None else adc + term
 
-    w = Window.partitionBy("_qid").orderBy(
-        F.col("adc2").asc(), F.col("neighbor_id").asc()
+    pairs = codes.crossJoin(F.broadcast(qb)).select(  # probe set is tiny by contract
+        "_qid", F.col("_id").alias("neighbor_id"), adc.alias("adc2")
     )
-    return (
-        codes.crossJoin(F.broadcast(qb))  # probe set is tiny by contract
-        .select(
-            "_qid", F.col("_id").alias("neighbor_id"), adc.alias("adc2")
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("_qid").alias(query_id), "neighbor_id", "adc2", "rank")
+    return topk(pairs, "_qid", ["adc2", "neighbor_id"], k).select(
+        F.col("_qid").alias(query_id), "neighbor_id", "adc2", "rank"
     )

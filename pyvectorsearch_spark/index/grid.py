@@ -25,9 +25,10 @@ Because the geometry is closed-form, the Spark index needs **no tree at all**
   and the range reject of ``recursive_find_range``, ``:1161-1163``, restated
   as point-to-box distance bounds), either as numpy on the driver or as one
   Spark stage loop that kNN and range share, with only the node test
-  differing. Both yield (probe, cell) pairs; every search (``knn``,
-  ``range``, ``box``) joins its pairs to the data on ``cell`` and finishes
-  with exact distance + window top-k, a radius filter or a containment
+  differing. Both yield (probe, cell) pairs; ``knn`` and ``range`` hand
+  them to the exact-search tail every vector index shares
+  (``index/search.py``: probe guard, cell join under the data-row guard,
+  exact distance, top-k window or radius filter), ``box`` to a containment
   filter. Results are exactly equal to brute force — the PK-tree is an
   exact index; pruning is physical, not semantic.
 
@@ -50,6 +51,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, FloatType
 
+from pyvectorsearch_spark.index.search import guard_probes, knn_rows, range_rows, scored
 from pyvectorsearch_spark.plans.inspect import plan_bytes_below
 
 CELL_SEP = "_"
@@ -86,15 +88,6 @@ def _local_df(spark: SparkSession, cols: dict, schema) -> DataFrame:
     finally:
         if prev is not None:
             spark.conf.set(conf_key, prev)
-
-
-def _fail(*parts: str | Column) -> Column:
-    """``raise_error`` with the parts concatenated; Column parts render as
-    strings, NULL as "NULL"."""
-    return F.raise_error(F.concat(*[
-        F.coalesce(p.cast("string"), F.lit("NULL")) if isinstance(p, Column) else F.lit(p)
-        for p in parts
-    ]))
 
 
 def _slices(level: int, dim: int, rr: int) -> list[int]:
@@ -1194,30 +1187,12 @@ class GridIndex:
 
     def _scored(self, cand: DataFrame, payload: Iterable[str]) -> DataFrame:
         """The tail both candidate modes share: candidates ``(_qid, cell,
-        _qvec)``, ``_qid`` being ``struct(probe id)``, joined to the data on
-        ``cell`` (dynamic partition pruning on a partitioned index) + exact
-        distance. The data-side validity contract sits in the scan's
-        projection, once per data row rather than per (probe, row) pair: a
-        NULL / NaN / Inf component or a dim other than the index's raises
-        with the row id. ``build``'s census refuses such rows, but streamed
-        rows and a ``GridIndex`` constructed over ingested rows never pass
-        it."""
-        from pyvectorsearch_spark.functions.vector import l2_sq, vec_is_finite
-
-        v = F.col(self.vec_col)
-        ok = vec_is_finite(v) & (F.size(v) == F.lit(self.dim))
-        bad = _fail(
-            f"invalid vector (NULL / NaN / Inf component or dim != {self.dim}) "
-            "in the index data id=",
-            F.col(self.id_col),
-        )
-        d = self.df.select(
-            "cell",
-            F.col(self.id_col).alias("neighbor_id"),
-            F.when(ok, v).otherwise(bad).alias("_dvec"),
-            *[F.col(c) for c in payload],
-        )
-        return d.join(cand, "cell").withColumn("dist", l2_sq(F.col("_dvec"), F.col("_qvec")))
+        _qvec)`` joined to the data on ``cell``, under the data-row guard
+        (``index/search.py``). ``build``'s census refuses invalid rows, but
+        streamed rows and a ``GridIndex`` constructed over ingested rows
+        never pass it."""
+        return scored(self.df, cand, "cell", id_col=self.id_col, vec_col=self.vec_col,
+                      dim=self.dim, payload=payload)
 
     # ---------------- queries ----------------
 
@@ -1233,39 +1208,6 @@ class GridIndex:
             or self._n_cells() <= self.DRIVER_STATS_MAX_CELLS
         )
         return "driver" if small else "distributed"
-
-    def _guard_queries(
-        self, queries: DataFrame, query_id: str, query_vec: str, on_invalid: str
-    ) -> DataFrame:
-        """The probe table ``(_qid, _qvec)`` under the query-side validity
-        contract (r7): ``on_invalid="error"`` (default) makes any NULL/NaN/
-        Inf probe raise with its id — compiled into the projection, zero
-        extra jobs; ``"skip"`` filters invalid probes out. Without this, a
-        NaN probe makes every cell bound comparison false and the search
-        silently returns nothing. A probe whose dim is not the index's
-        raises "vector dim mismatch" with its id under either setting."""
-        from pyvectorsearch_spark.functions.vector import vec_is_finite
-        from pyvectorsearch_spark.operators.knn import ON_INVALID
-
-        if on_invalid not in ON_INVALID:
-            raise ValueError(
-                f"unknown on_invalid {on_invalid!r}; "
-                f"expected one of {sorted(ON_INVALID)}"
-            )
-        q, qid = F.col(query_vec), F.col(query_id)
-        guarded = F.when(F.size(q) == F.lit(self.dim), q).otherwise(
-            _fail(f"vector dim mismatch: index dim={self.dim}, query dim=",
-                  F.size(q), " id=", qid)
-        )
-        ok = vec_is_finite(q)
-        if on_invalid == "skip":
-            queries = queries.filter(ok)
-        else:
-            guarded = F.when(ok, guarded).otherwise(
-                _fail("invalid query vector (NULL / NaN / Inf component) id=", qid,
-                      "; pass on_invalid='skip' to drop such probes")
-            )
-        return queries.select(F.col(query_id).alias("_qid"), guarded.alias("_qvec"))
 
     def knn(
         self,
@@ -1297,10 +1239,10 @@ class GridIndex:
         ``_prune_pairs`` as its node test; right for a query TABLE — 10⁴+
         probes — or an index whose stats table is too big to collect);
         "auto" picks driver only when the stats table is driver-sized. Both
-        modes yield (probe, cell) pairs and finish in the same cell join +
-        exact distance + window top-k (``_scored``).
+        modes yield (probe, cell) pairs and finish in the shared exact tail
+        (``index/search.py``).
         """
-        qs = self._guard_queries(queries, query_id, query_vec, on_invalid)
+        qs = guard_probes(queries, query_id, query_vec, self.dim, on_invalid)
         if self._candidates_mode(candidates) == "distributed":
             b0_ok = plan_bytes_below(qs, self.B0_BROADCAST_MAX_PROBE_BYTES)
             cand = self._distributed_pairs(
@@ -1308,13 +1250,7 @@ class GridIndex:
             )
         else:
             cand = self._driver_pairs(qs, lambda p: self._knn_keep(p._qvec, k))
-        w = Window.partitionBy("_qid").orderBy("dist", "neighbor_id")
-        return (
-            self._scored(cand, payload)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(F.col("_qid._qid").alias("query_id"), "neighbor_id", "dist", "rank", *payload)
-        )
+        return knn_rows(self._scored(cand, payload), k, payload)
 
     def range(
         self,
@@ -1336,7 +1272,7 @@ class GridIndex:
         with min-distance ≤ r², the distributed one as the node test of the
         same ``_distributed_pairs`` stage loop ``knn`` uses."""
         r2 = float(radius) ** 2
-        qs = self._guard_queries(queries, query_id, query_vec, on_invalid)
+        qs = guard_probes(queries, query_id, query_vec, self.dim, on_invalid)
         if self._candidates_mode(candidates) == "distributed":
             cand = self._distributed_pairs(
                 qs,
@@ -1344,11 +1280,7 @@ class GridIndex:
             )
         else:
             cand = self._driver_pairs(qs, lambda p: self._bounds(p._qvec)[0] <= r2)
-        return (
-            self._scored(cand, payload)
-            .filter(F.col("dist") <= F.lit(r2))
-            .select(F.col("_qid._qid").alias("query_id"), "neighbor_id", "dist", *payload)
-        )
+        return range_rows(self._scored(cand, payload), r2, payload)
 
     def range_count(
         self,
@@ -1373,7 +1305,7 @@ class GridIndex:
         same guard as :meth:`range` with ``on_invalid="error"``, and the
         boundary scan is its ``_scored`` tail with the data-side guard."""
         r2 = float(radius) ** 2
-        qs = self._guard_queries(queries, query_id, query_vec, "error")
+        qs = guard_probes(queries, query_id, query_vec, self.dim)
         # struct key (see _distributed_pairs): a NULL probe id's inside and
         # scanned counts must meet in the full outer join below
         sp = self._scored_pairs(qs.withColumn("_qid", F.struct("_qid")))

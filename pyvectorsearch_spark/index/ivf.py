@@ -11,11 +11,12 @@ Spark-first design:
 - **Assignment**: centroids broadcast; each row's nearest-centroid id is
   computed in one Arrow-batched numpy pass (``mapInPandas``, BLAS matmul) —
   a single map-side projection, no shuffle.
-- **Search**: per query, probe the ``nprobe`` nearest centroid lists: a
-  filter on ``list_id`` (partition/file pruning once the index is persisted
-  ``partitionBy("list_id")``), then exact distances + window top-k on the
-  shortlist. nprobe trades recall for scan fraction; ``nprobe = n_lists``
-  is exhaustive (exact).
+- **Search**: per query, probe the ``nprobe`` nearest centroid lists and
+  hand the (probe, list) pairs to the exact-search tail every vector index
+  shares (``index/search.py``: probe guard, ``list_id`` join under the
+  data-row guard — partition pruning once the index is persisted
+  ``partitionBy("list_id")`` — exact distance, top-k window). nprobe trades
+  recall for scan fraction; ``nprobe = n_lists`` is exhaustive (exact).
 """
 
 from __future__ import annotations
@@ -27,6 +28,19 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from pyvectorsearch_spark.functions.vector import l2_sq, vec_is_finite
+from pyvectorsearch_spark.index.search import guard_probes, keyed, knn_rows, scored, topk
+
+
+def _matrix(vectors, dim: int) -> np.ndarray:
+    """(n, dim) float64 rows of a pandas vector column; a NULL vector reads
+    as NaNs, which land in list / code 0 (argmin of an all-NaN row) where
+    the search's data-row guard refuses them."""
+    return np.asarray([
+        np.full(dim, np.nan) if v is None else np.asarray(v, dtype=np.float64)
+        for v in vectors
+    ])
 
 
 def _kmeans(sample: np.ndarray, n_lists: int, iters: int, seed: int) -> np.ndarray:
@@ -90,6 +104,7 @@ class IVFIndex:
 
         sample_rows = (
             df.select(F.col(vec_col).alias("_v"))
+            .filter(vec_is_finite("_v"))
             .mapInPandas(head_sample, schema=f"_v {vec_type}")
             .limit(target)
             .collect()
@@ -109,7 +124,7 @@ class IVFIndex:
             for pdf in batches:
                 if not len(pdf):
                     continue
-                X = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
+                X = _matrix(pdf["_v"], C.shape[1])
                 d2 = (X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + c2[None, :]
                 pdf = pdf.drop(columns=["_v"])
                 pdf["list_id"] = d2.argmin(axis=1).astype("int32")
@@ -141,90 +156,56 @@ class IVFIndex:
         nprobe == n_lists; otherwise approximate with recall rising in nprobe
         (tested ≥0.9 at nprobe=L/4 on the fixture).
 
-        ``candidates="driver"`` collects the probe set and prunes with one
-        ``isin`` filter over the UNION of all probes' lists (right for a
-        handful of probes — minimum plan depth, partition pruning on the
-        persisted index). ``candidates="distributed"`` never collects the
-        queries: each query's nprobe lists are picked by a window over the
-        broadcast centroid table and the data join carries (query, list)
-        pairs — the path for a query TABLE of 10⁴+ probes. At partial nprobe
-        the distributed form is per-query-strict (a query only sees its OWN
-        lists, not the union), which is canonical IVF semantics."""
+        ``candidates="driver"`` collects the probe set and pairs every probe
+        with the UNION of all probes' lists, pruned with one ``isin`` filter
+        (right for a handful of probes — minimum plan depth, partition
+        pruning on the persisted index). ``candidates="distributed"`` never
+        collects the queries: each probe's nprobe lists are picked by a
+        window over the broadcast centroid table — the path for a query
+        TABLE of 10⁴+ probes. At partial nprobe the distributed form is
+        per-probe-strict (a probe only sees its OWN lists, not the union),
+        which is canonical IVF semantics. Both finish in the shared exact
+        tail (``index/search.py``)."""
         if candidates not in ("driver", "distributed"):
             raise ValueError(f"unknown candidates mode {candidates!r}")
+        dim = self.centroids.shape[1]
+        qs = guard_probes(queries, query_id, query_vec, dim)
+        data = self.df
         if candidates == "distributed":
-            return self._knn_distributed(queries, k, nprobe, query_id, query_vec)
-        q_rows = queries.select(query_id, query_vec).collect()
-        Q = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
-        d2 = ((Q[:, None, :] - self.centroids[None, :, :]) ** 2).sum(axis=2)
-        lists = set()
-        for row in d2:
-            lists.update(np.argsort(row, kind="stable")[:nprobe].tolist())
-
-        from pyvectorsearch_spark.operators.knn import knn_join
-
-        pruned = self.df.filter(F.col("list_id").isin([int(x) for x in lists]))
-        return knn_join(
-            pruned,
-            queries,
-            k,
-            data_id=self.id_col,
-            data_vec=self.vec_col,
-            query_id=query_id,
-            query_vec=query_vec,
+            cand = self._probe_lists(qs, nprobe)
+        else:
+            Q = np.asarray([r[0] for r in qs.select("_qvec").collect()], dtype=np.float64)
+            d2 = ((Q.reshape(-1, dim)[:, None, :] - self.centroids[None, :, :]) ** 2).sum(axis=2)
+            lists = sorted({int(x) for row in d2 for x in np.argsort(row, kind="stable")[:nprobe]})
+            data = data.filter(F.col("list_id").isin(lists))
+            cand = F.broadcast(qs.select(
+                F.struct("_qid").alias("_qid"),
+                "_qvec",
+                F.explode(F.array(*map(F.lit, lists)).cast("array<int>")).alias("list_id"),
+            ))
+        return knn_rows(
+            scored(data, cand, "list_id", id_col=self.id_col, vec_col=self.vec_col, dim=dim), k
         )
 
-    def _knn_distributed(
-        self,
-        queries: DataFrame,
-        k: int,
-        nprobe: int,
-        query_id: str,
-        query_vec: str,
-    ) -> DataFrame:
-        """Distributed candidate selection: queries × broadcast centroids →
-        per-query nprobe nearest lists (window) → join the inverted lists on
-        ``list_id`` (dynamic partition pruning on a persisted index) → exact
-        distance + per-query top-k. No ``collect()`` anywhere; scales in the
-        number of probes."""
-        from pyspark.sql import Window
-        from pyvectorsearch_spark.functions.vector import l2_sq
-
+    def _probe_lists(self, qs: DataFrame, nprobe: int) -> DataFrame:
+        """Distributed candidate selection: probes × broadcast centroids →
+        each probe's nprobe nearest lists (window) as ``(_qid, list_id,
+        _qvec)`` pairs. No ``collect()`` anywhere; scales in the number of
+        probes."""
         spark = self.df.sparkSession
         cent = spark.createDataFrame(
             [(int(i), [float(x) for x in c]) for i, c in enumerate(self.centroids)],
             "list_id int, _centroid array<double>",
         )
-        # Hash-partition queries on the id first: the |Q|·|lists| distance
+        # Hash-partition probes on the id first: the |Q|·|lists| distance
         # expressions spread across every core (not the query table's few
-        # source partitions) and the per-query window reuses the exchange.
-        qs = queries.select(
-            F.col(query_id).alias("_qid"), F.col(query_vec).alias("_qvec")
-        ).repartition(spark.sparkContext.defaultParallelism, "_qid")
-        w_sel = Window.partitionBy("_qid").orderBy(
-            F.col("_cd2").asc(), F.col("list_id").asc()
+        # source partitions) and both windows reuse the exchange.
+        probes = keyed(qs).repartition(spark.sparkContext.defaultParallelism, "_qid")
+        pairs = probes.crossJoin(F.broadcast(cent)).withColumn(
+            "_cd2", l2_sq(F.col("_qvec"), F.col("_centroid"))
         )
-        sel = (
-            qs.crossJoin(F.broadcast(cent))
-            .withColumn("_cd2", l2_sq(F.col("_qvec"), F.col("_centroid")))
-            .withColumn("_rn", F.row_number().over(w_sel))
-            .filter(F.col("_rn") <= nprobe)
-            .select("_qid", "list_id", "_qvec")
-        )
-        d = self.df.select(
-            "list_id",
-            F.col(self.id_col).alias("neighbor_id"),
-            F.col(self.vec_col).alias("_dvec"),
-        )
-        w = Window.partitionBy("_qid").orderBy(
-            F.col("dist").asc(), F.col("neighbor_id").asc()
-        )
-        return (
-            d.join(sel, "list_id")
-            .withColumn("dist", l2_sq(F.col("_dvec"), F.col("_qvec")))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(F.col("_qid").alias("query_id"), "neighbor_id", "dist", "rank")
+        return topk(pairs, ["_qid", "_pos"], ["_cd2", "list_id"], nprobe, "_rn").select(
+            "_qid", "list_id", "_qvec"
         )
 
     def write(

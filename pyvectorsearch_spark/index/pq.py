@@ -19,22 +19,25 @@ Spark mapping (all stages distributed):
      ``pq_code array<tinyint>``;
   3. search: per-partition ADC — numpy lookup-table gather + sum over the
      code matrix, emitting per-partition top-``rerank`` — then one tiny
-     window for the global top-``rerank``, then an equi-join back to the
-     full-vector rows for EXACT re-ranked distances and the final top-k.
-     The shuffle carries ≤ partitions·|Q|·rerank skinny rows, never vectors.
+     window for each probe's global top-``rerank``; that shortlist is the
+     candidate set of the exact-search tail every vector index shares
+     (``index/search.py``: EXACT re-ranked distances on the full vectors,
+     final top-k). The shuffle carries ≤ partitions·|Q|·rerank skinny rows,
+     never vectors.
 """
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import types as T
 
-from pyvectorsearch_spark.index.ivf import IVFIndex, _kmeans
+from pyvectorsearch_spark.index.ivf import IVFIndex, _kmeans, _matrix
+from pyvectorsearch_spark.index.search import guard_probes, knn_rows, scored, topk
 
 
 @dataclass
@@ -161,10 +164,7 @@ class IVFPQIndex:
             for pdf in batches:
                 if not len(pdf):
                     continue
-                X = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["_v"]]
-                )
-                codes = cdc.encode(X)
+                codes = cdc.encode(_matrix(pdf["_v"], cdc.m * cdc.dsub))
                 pdf = pdf.drop(columns=["_v"])
                 pdf["pq_code"] = [c.astype("int16") for c in codes]
                 yield pdf
@@ -203,116 +203,61 @@ class IVFPQIndex:
 
         Scale shape: the ADC scan reads only (id, list_id, pq_code) — m
         bytes of code per row instead of 4·dim of float — and emits
-        ≤ partitions·|Q|·rerank rows into one tiny window; the re-rank is an
-        equi-join of the shortlist ids back to the vector rows (broadcast
-        the skinny shortlist), touching ≤ |Q|·rerank full vectors."""
+        ≤ partitions·|Q|·rerank rows into one tiny window; the re-rank is
+        the shared exact tail over the broadcast shortlist, joined to the
+        vector rows on the id, touching ≤ |Q|·rerank full vectors."""
         rerank = max(rerank or 4 * k, k)
-        q_rows = queries.select(query_id, query_vec).collect()
-        qids = [r[0] for r in q_rows]
-        if not qids:
-            # Schema must match the non-empty path exactly (a per-batch
-            # caller unions results), so derive the id types from the inputs
-            # instead of hardcoding bigint.
-            from pyspark.sql import types as T
-
-            spark = self.df.sparkSession
-            qid_type = queries.schema[query_id].dataType
-            nid_type = self.df.schema[self.id_col].dataType
-            schema = T.StructType(
-                [
-                    T.StructField("query_id", qid_type),
-                    T.StructField("neighbor_id", nid_type),
-                    T.StructField("dist", T.DoubleType()),
-                    T.StructField("rank", T.IntegerType(), False),
-                ]
-            )
-            return spark.createDataFrame([], schema)
-        Q = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
+        dim = self.centroids.shape[1]
+        qs = guard_probes(queries, query_id, query_vec, dim)
+        q_rows = qs.collect()
+        Q = np.asarray([r._qvec for r in q_rows], dtype=np.float64).reshape(-1, dim)
         cd2 = ((Q[:, None, :] - self.centroids[None, :, :]) ** 2).sum(axis=2)
-        lists = set()
-        for row in cd2:
-            lists.update(np.argsort(row, kind="stable")[:nprobe].tolist())
+        lists = sorted({int(x) for row in cd2 for x in np.argsort(row, kind="stable")[:nprobe]})
         lut = self.codec.luts(Q)
 
-        sc = self.df.sparkSession.sparkContext
-        bq = sc.broadcast((qids, lut, rerank))
+        spark = self.df.sparkSession
+        bq = spark.sparkContext.broadcast((lut, rerank))
 
         def adc_topr(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            qids_, lut_, r_ = bq.value
-            m = lut_.shape[1]
-            cols = np.arange(m)
+            lut_, r_ = bq.value
+            cols = np.arange(lut_.shape[1])
             for pdf in batches:
                 if not len(pdf):
                     continue
                 codes = np.vstack(
                     [np.asarray(c, dtype=np.int64) for c in pdf["pq_code"]]
                 )  # (n, m)
-                ids = pdf["neighbor_id"].to_numpy()
                 # (q, n, m) gather → (q, n): lut[j, s, codes[i, s]] summed
                 # over subspaces; cols broadcasts against the code matrix.
                 approx = lut_[:, cols, codes].sum(axis=2)
                 kk = min(r_, len(pdf))
                 part = np.argpartition(approx, kk - 1, axis=1)[:, :kk]  # (q, kk)
-                out_q, out_id, out_d = [], [], []
-                for j, qid in enumerate(qids_):
-                    rows = part[j]
-                    out_q.extend([qid] * len(rows))
-                    out_id.extend(ids[rows])
-                    out_d.extend(approx[j, rows])
-                yield pd.DataFrame(
-                    {
-                        "query_id": out_q,
-                        "neighbor_id": out_id,
-                        "adc_dist": out_d,
-                    }
-                )
+                yield pd.DataFrame({
+                    "_pos": np.repeat(np.arange(len(lut_), dtype=np.int32), kk),
+                    "neighbor_id": pdf["neighbor_id"].to_numpy()[part.ravel()],
+                    "_ad": np.take_along_axis(approx, part, axis=1).ravel(),
+                })
 
-        pruned = self.df.filter(
-            F.col("list_id").isin([int(x) for x in lists])
-        ).select(
+        pruned = self.df.filter(F.col("list_id").isin(lists)).select(
             F.col(self.id_col).alias("neighbor_id"), "pq_code"
         )
-        # Partial-result schema derives the id types from the inputs, exactly
-        # like the empty-queries branch — a non-long id column must come back
-        # with its true type or a per-batch caller unioning results sees the
-        # schema flip between the two paths.
-        from pyspark.sql import types as T
-
-        partial_schema = T.StructType(
-            [
-                T.StructField("query_id", queries.schema[query_id].dataType),
-                T.StructField("neighbor_id", self.df.schema[self.id_col].dataType),
-                T.StructField("adc_dist", T.DoubleType()),
-            ]
-        )
-        partial = pruned.mapInPandas(adc_topr, schema=partial_schema)
-        w_r = Window.partitionBy("query_id").orderBy(
-            F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-        )
-        shortlist = (
-            partial.withColumn("_rn", F.row_number().over(w_r))
-            .filter(F.col("_rn") <= rerank)
-            .select("query_id", "neighbor_id")
-        )
-
-        from pyvectorsearch_spark.functions.vector import l2_sq
-
-        qdf = queries.select(
-            F.col(query_id).alias("query_id"), F.col(query_vec).alias("_qvec")
-        )
-        vecs = self.df.select(
-            F.col(self.id_col).alias("neighbor_id"), F.col(self.vec_col).alias("_dvec")
-        )
-        w_k = Window.partitionBy("query_id").orderBy(
-            F.col("dist").asc(), F.col("neighbor_id").asc()
-        )
-        return (
-            vecs.join(F.broadcast(shortlist), "neighbor_id")
-            .join(F.broadcast(qdf), "query_id")
-            .withColumn("dist", l2_sq(F.col("_dvec"), F.col("_qvec")))
-            .withColumn("rank", F.row_number().over(w_k))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "dist", "rank")
+        partial = pruned.mapInPandas(adc_topr, schema=T.StructType([
+            T.StructField("_pos", T.IntegerType()),
+            T.StructField("neighbor_id", self.df.schema[self.id_col].dataType),
+            T.StructField("_ad", T.DoubleType()),
+        ]))
+        shortlist = topk(partial, "_pos", ["_ad", "neighbor_id"], rerank, "_rn")
+        # _pos (the probe's place in q_rows) keys each probe's own shortlist,
+        # so probes sharing an id, or a NULL id, keep theirs apart
+        probes = spark.createDataFrame(
+            [(j, *r) for j, r in enumerate(q_rows)],
+            T.StructType([T.StructField("_pos", T.IntegerType()), *qs.schema.fields]),
+        ).withColumn("_qid", F.struct("_qid"))
+        cand = shortlist.join(F.broadcast(probes), "_pos").select("_qid", "neighbor_id", "_qvec")
+        return knn_rows(
+            scored(self.df, F.broadcast(cand), "neighbor_id",
+                   id_col=self.id_col, vec_col=self.vec_col, dim=dim),
+            k,
         )
 
     def write(self, path: str, mode: str = "overwrite") -> None:

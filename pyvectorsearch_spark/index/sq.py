@@ -20,16 +20,18 @@ oracle-checked, not just floored.
 Scale shape: the stats pass is one map-side-combined (pos → min/max)
 aggregate collecting dim-sized results to the driver (constant footprint,
 like IVF centroids); encode is a projection; search shuffles only
-(query, id, approx-dist) shortlist rows.
+(query, id, approx-dist) shortlist rows, and the shortlist is the candidate
+set of the exact-search tail every vector index shares (``index/search.py``).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from pyvectorsearch_spark.functions.vector import l2_sq
+from pyvectorsearch_spark.functions.vector import l2_sq, vec_is_finite
+from pyvectorsearch_spark.index.search import guard_probes, keyed, knn_rows, scored, topk
 
 
 @dataclass
@@ -45,8 +47,11 @@ class SQ8Index:
         df: DataFrame, *, vec_col: str = "embedding", id_col: str = "vec_id"
     ) -> "SQ8Index":
         """One min/max aggregate per dimension (map-side combined,
-        dim-sized result), then the code column as a pure projection."""
-        e = df.select(F.posexplode(F.col(vec_col).cast("array<double>")))
+        dim-sized result) over the valid rows, then the code column as a
+        pure projection. An invalid row (NULL / NaN / Inf component) cannot
+        skew the quantizer; search refuses it in the exact stage."""
+        valid = df.filter(vec_is_finite(vec_col))
+        e = valid.select(F.posexplode(F.col(vec_col).cast("array<double>")))
         stats = (
             e.groupBy("pos")
             .agg(F.min("col").alias("lo"), F.max("col").alias("hi"))
@@ -73,43 +78,23 @@ class SQ8Index:
         rerank: int | None = None,
     ) -> DataFrame:
         """Approximate shortlist on decoded bytes, exact top-k on the
-        shortlist. ``rerank`` defaults to 4k."""
-        from pyvectorsearch_spark.operators.knn import _dim_guarded
-
+        shortlist (``index/search.py``). ``rerank`` defaults to 4k."""
+        dim = len(self.lo)
         r = rerank or 4 * k
-        qs = queries.select(
-            F.col(query_id).alias("_qid"), F.col(query_vec).alias("_qvec")
-        )
+        qs = keyed(guard_probes(queries, query_id, query_vec, dim))
         decoded = sq8_decode_expr(F.col("_sq8"), self.lo, self.step)
-        # same row-level dim guard as the brute-force paths: a mismatched
-        # probe must raise, not silently rank NULL distances first
-        approx = _dim_guarded(
-            l2_sq(decoded, F.col("_qvec")), decoded, F.col("_qvec")
-        )
         cand = (
-            self.df.select(self.id_col, "_sq8")
+            self.df.select(F.col(self.id_col).alias("neighbor_id"), "_sq8")
             .crossJoin(F.broadcast(qs))
-            .withColumn("_ad", approx)
+            .withColumn("_ad", l2_sq(decoded, F.col("_qvec")))
         )
-        w1 = Window.partitionBy("_qid").orderBy(F.asc("_ad"), F.asc(self.id_col))
-        short = (
-            cand.withColumn("_r1", F.row_number().over(w1))
-            .filter(F.col("_r1") <= r)
-            .select("_qid", "_qvec", self.id_col)
+        short = topk(cand, ["_qid", "_pos"], ["_ad", "neighbor_id"], r, "_r1").select(
+            "_qid", "neighbor_id", "_qvec"
         )
-        exact = short.join(
-            self.df.select(self.id_col, self.vec_col), self.id_col
-        ).withColumn("dist", l2_sq(F.col(self.vec_col), F.col("_qvec")))
-        w2 = Window.partitionBy("_qid").orderBy(F.asc("dist"), F.asc(self.id_col))
-        return (
-            exact.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
-            .select(
-                F.col("_qid").alias(query_id),
-                F.col(self.id_col).alias("neighbor_id"),
-                "dist",
-                "rank",
-            )
+        return knn_rows(
+            scored(self.df, F.broadcast(short), "neighbor_id",
+                   id_col=self.id_col, vec_col=self.vec_col, dim=dim),
+            k,
         )
 
 

@@ -5,7 +5,8 @@ Reference semantics (all exact, squared-L2):
 - ``search_knn(p, k, result, sort)``: exact k nearest neighbors
   (``/root/reference/include/pktree.hpp:948-973``). Its bounded
   replace-worst-if-better loop (``:1000-1032``) is semantically
-  ``row_number() OVER (PARTITION BY query ORDER BY dist) <= k``.
+  ``row_number() OVER (PARTITION BY query ORDER BY dist) <= k``, the one
+  top-k window every search shares (``index/search.py::topk``).
 - ``search_range(p, r, result)``: all points with dist ≤ r
   (``/root/reference/include/pktree.hpp:933-939``), a θ-join with the
   predicate ``dist_sq <= r²`` (the reference squares the radius at ``:938``).
@@ -25,23 +26,25 @@ Spark-first design:
 - ``range_join``: broadcast join + filter; predicate evaluates in whole-stage
   codegen, Catalyst prunes columns at the scan.
 
-The index-accelerated variants (cell pruning) live in
-``pyvectorsearch_spark.index.grid``; brute force is semantically complete
-because PK-tree search is exact (SURVEY.md §7).
+The index-accelerated searches (``pyvectorsearch_spark.index``) build
+candidates and finish them in the exact-search tail of ``index/search.py``;
+these index-free joins know no index ``dim``, so they keep their per-pair
+guards below. Brute force is semantically complete because PK-tree search
+is exact (SURVEY.md §7).
 """
 
 from __future__ import annotations
 
 from typing import Iterable, Iterator
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pyvectorsearch_spark.functions.vector import cosine_sim, dot, l2_sq, vec_is_finite
 from pyvectorsearch_spark.functions.lits import lit_double_array
+from pyvectorsearch_spark.index.search import check_on_invalid, topk
 
 METRICS = {"l2_sq", "cosine", "dot"}
-ON_INVALID = {"error", "skip"}
 
 
 def _dim_guarded(score: Column, data_vec: Column, query_vec: Column) -> Column:
@@ -81,10 +84,7 @@ def _validity_guarded(
     Without the guard, a NULL element nulls the distance (sorts FIRST under
     Spark's asc-nulls-first → rank-1 garbage) and NaN sorts as the largest
     double (first under desc ordering for cosine/dot)."""
-    if on_invalid not in ON_INVALID:
-        raise ValueError(
-            f"unknown on_invalid {on_invalid!r}; expected one of {sorted(ON_INVALID)}"
-        )
+    check_on_invalid(on_invalid)
     ok = vec_is_finite(data_vec) & vec_is_finite(query_vec)
     if on_invalid == "skip":
         return F.when(ok, score)
@@ -154,11 +154,8 @@ def knn_join(
         # null dist = invalid row; drop BEFORE ranking so it can't eat a rank
         pairs = pairs.filter(F.col("dist").isNotNull())
     order = [F.col("dist").asc() if asc else F.col("dist").desc(), F.col("neighbor_id").asc()]
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dist", "rank", *payload)
+    return topk(pairs, "query_id", order, k).select(
+        "query_id", "neighbor_id", "dist", "rank", *payload
     )
 
 
@@ -190,13 +187,11 @@ def knn_join_blocked(
     """
     import numpy as np
     import pandas as pd
+    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
     if metric not in METRICS:
         raise ValueError(f"unknown metric {metric!r}")
-    if on_invalid not in ON_INVALID:
-        raise ValueError(
-            f"unknown on_invalid {on_invalid!r}; expected one of {sorted(ON_INVALID)}"
-        )
+    check_on_invalid(on_invalid)
     q_rows = queries.select(query_id, query_vec).collect()
     qids, qmat = [], []
     for r in q_rows:
@@ -213,11 +208,15 @@ def knn_join_blocked(
             continue
         qids.append(r[0])
         qmat.append(vec)
+    # the candidate and empty-result schemas carry the input id types
+    ids = StructType([
+        StructField("query_id", queries.schema[query_id].dataType),
+        StructField("neighbor_id", data.schema[data_id].dataType),
+        StructField("dist", DoubleType()),
+    ])
     if not qids:
-        return (
-            data.sparkSession.createDataFrame(
-                [], "query_id long, neighbor_id long, dist double, rank int"
-            )
+        return data.sparkSession.createDataFrame(
+            [], StructType([*ids.fields, StructField("rank", IntegerType(), False)])
         )
     sc = data.sparkSession.sparkContext
     bq = sc.broadcast((qids, qmat, k, metric, on_invalid))
@@ -288,16 +287,11 @@ def knn_join_blocked(
             )
 
     d = data.select(F.col(data_id).alias("neighbor_id"), F.col(data_vec).alias("_dvec"))
-    cand = d.mapInPandas(local_topk, schema="query_id long, neighbor_id long, dist double")
+    cand = d.mapInPandas(local_topk, schema=ids)
     asc = metric == "l2_sq"
     order = [F.col("dist").asc() if asc else F.col("dist").desc(), F.col("neighbor_id").asc()]
-    w = Window.partitionBy("query_id").orderBy(*order)
     exact = knn_precision_fix(data, cand, metric, data_id, data_vec, query_id, query_vec, queries)
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dist", "rank")
-    )
+    return topk(exact, "query_id", order, k).select("query_id", "neighbor_id", "dist", "rank")
 
 
 def knn_precision_fix(

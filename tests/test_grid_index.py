@@ -36,6 +36,30 @@ def cities_index(cities):
 
 
 @pytest.fixture(scope="module")
+def points(spark):
+    """229 seeded 2-d points (the cities CSV's row count) uniform over
+    perfbench's Netherlands box, with a payload column, for the index tests
+    that need a 2-d dataset and not the reference CSV itself."""
+    import numpy as np
+
+    from perfbench.gen import GRID_BOX
+
+    rng = np.random.default_rng(229)
+    (lat0, lat1), (lon0, lon1) = GRID_BOX
+    pts = np.column_stack([rng.uniform(lat0, lat1, 229), rng.uniform(lon0, lon1, 229)])
+    rows = [(i, [float(x) for x in p], f"place{i}") for i, p in enumerate(pts)]
+    df = spark.createDataFrame(rows, "pt_id long, pt array<float>, city string").cache()
+    df.count()
+    yield df
+    df.unpersist()
+
+
+@pytest.fixture(scope="module")
+def points_index(points):
+    return GridIndex.build(points, vec_col="pt", id_col="pt_id", target_occupancy=8)
+
+
+@pytest.fixture(scope="module")
 def delft_probe(spark):
     return spark.createDataFrame([(0, DELFT)], "query_id long, qvec array<float>")
 
@@ -89,22 +113,22 @@ def test_grid_knn_embeddings_2d(spark):
     assert _pairs(r_pruned) == _pairs(r_exact)
 
 
-def test_kinstantiation_min_occupancy(cities_index):
+def test_kinstantiation_min_occupancy(points_index):
     """Batch K-instantiation: every non-root cell owns ≥ rank points
     (pktree.hpp:587-635 invariant, batch form)."""
-    for cid, level, coords, cnt in cities_index.stats:
+    for cid, level, coords, cnt in points_index.stats:
         if level > 0:
-            assert cnt >= cities_index.rank, (cid, cnt)
+            assert cnt >= points_index.rank, (cid, cnt)
 
 
-def test_index_prunes_cells(cities_index, delft_probe):
+def test_index_prunes_cells(points_index, delft_probe):
     """The pruned kNN scan must touch fewer cells than the index holds
     (otherwise it's brute force with extra steps)."""
-    assert len(cities_index.stats) > 4
+    assert len(points_index.stats) > 4
     import numpy as np
 
     q = np.asarray(DELFT)
-    mins, maxs, cnts = cities_index._bounds(q)
+    mins, maxs, cnts = points_index._bounds(q)
     order = np.argsort(mins, kind="stable")
     cum = 0
     bound = np.inf
@@ -114,44 +138,44 @@ def test_index_prunes_cells(cities_index, delft_probe):
             bound = maxs[order[: pos + 1]].max()
             break
     selected = (mins <= bound).sum()
-    assert selected < len(cities_index.stats)
+    assert selected < len(points_index.stats)
 
 
-def test_index_write_load_roundtrip(tmp_path, spark, cities, cities_index, delft_probe):
+def test_index_write_load_roundtrip(tmp_path, spark, points, points_index, delft_probe):
     import glob
 
-    a = _pairs(cities_index.knn(delft_probe, 5).collect())
+    a = _pairs(points_index.knn(delft_probe, 5).collect())
 
     # small-cell regime (default): compact cell-sorted files, NO per-cell dirs
-    path = str(tmp_path / "cities_idx")
-    cities_index.write(path)
+    path = str(tmp_path / "points_idx")
+    points_index.write(path)
     loaded = GridIndex.load(spark, path)
     assert _pairs(loaded.knn(delft_probe, 5).collect()) == a
     assert not glob.glob(f"{path}/data/cell=*")
     assert len(glob.glob(f"{path}/data/*.parquet")) <= 4
 
     # big-cell regime (forced): directory partitioning for partition pruning
-    path2 = str(tmp_path / "cities_idx_part")
-    cities_index.write(path2, partition_rows_threshold=1)
+    path2 = str(tmp_path / "points_idx_part")
+    points_index.write(path2, partition_rows_threshold=1)
     loaded2 = GridIndex.load(spark, path2)
     assert _pairs(loaded2.knn(delft_probe, 5).collect()) == a
     total_parts = len(glob.glob(f"{path2}/data/cell=*"))
-    assert total_parts == len({s[0] for s in cities_index.stats})
+    assert total_parts == len({s[0] for s in points_index.stats})
 
 
-def test_distributed_build_matches_driver_build(spark, cities, delft_probe):
+def test_distributed_build_matches_driver_build(spark, points, delft_probe):
     """The 100 TB coalesce path (no driver-side cell cascade) must return
     the same search results as the driver path and brute force."""
     drv = GridIndex.build(
-        cities, vec_col="pt", id_col="pt_id", target_occupancy=8,
+        points, vec_col="pt", id_col="pt_id", target_occupancy=8,
         coalesce_strategy="driver",
     )
     dist = GridIndex.build(
-        cities, vec_col="pt", id_col="pt_id", target_occupancy=8,
+        points, vec_col="pt", id_col="pt_id", target_occupancy=8,
         coalesce_strategy="distributed",
     )
     # partition validity: every row assigned exactly one cell
-    assert dist.df.count() == cities.count()
+    assert dist.df.count() == points.count()
     # occupancy guarantee: every non-root cell owns >= rank points
     assert all(cnt >= dist.rank or lvl == 0 for _, lvl, _, cnt in dist.stats)
     for idx_knn in (drv, dist):
@@ -162,7 +186,7 @@ def test_distributed_build_matches_driver_build(spark, cities, delft_probe):
         brute = sorted(
             (r.neighbor_id, r.rank)
             for r in knn_join(
-                cities, delft_probe, 5, data_id="pt_id", data_vec="pt"
+                points, delft_probe, 5, data_id="pt_id", data_vec="pt"
             ).collect()
         )
         assert got == brute
@@ -172,7 +196,7 @@ def test_distributed_build_matches_driver_build(spark, cities, delft_probe):
     r_brute = sorted(
         r.neighbor_id
         for r in range_join(
-            cities, delft_probe, 0.1, data_id="pt_id", data_vec="pt"
+            points, delft_probe, 0.1, data_id="pt_id", data_vec="pt"
         ).collect()
     )
     assert r_dist == r_brute
@@ -216,11 +240,11 @@ def test_distributed_candidates_match_bruteforce_many_probes(spark):
     assert rg == rw
 
 
-def test_distributed_build_never_collects_stats(spark, cities, delft_probe):
+def test_distributed_build_never_collects_stats(spark, points, delft_probe):
     """The distributed build + distributed search path must work end-to-end
     WITHOUT materializing the driver-side stats list."""
     dist = GridIndex.build(
-        cities, vec_col="pt", id_col="pt_id", target_occupancy=8,
+        points, vec_col="pt", id_col="pt_id", target_occupancy=8,
         coalesce_strategy="distributed",
     )
     assert dist._local_stats is None  # build collected nothing
@@ -234,7 +258,7 @@ def test_distributed_build_never_collects_stats(spark, cities, delft_probe):
     assert {(r.query_id, r.neighbor_id) for r in with_payload} == {
         (r.query_id, r.neighbor_id) for r in out
     }
-    brute = knn_join(cities, delft_probe, 5, data_id="pt_id", data_vec="pt").collect()
+    brute = knn_join(points, delft_probe, 5, data_id="pt_id", data_vec="pt").collect()
     assert {(r.query_id, r.neighbor_id) for r in out} == {
         (r.query_id, r.neighbor_id) for r in brute
     }
@@ -271,17 +295,17 @@ def test_distributed_knn_plan_shape(spark):
     assert "partial_min(_max_d2" in s, s[:3000]
 
 
-def test_distributed_knn_edge_cases(spark, cities, cities_index):
+def test_distributed_knn_edge_cases(spark, points, points_index):
     """Empty probe set -> empty result with the stable schema; k larger than
     the table -> every point returned once per query."""
     empty = spark.createDataFrame([], "query_id long, qvec array<float>")
-    out = cities_index.knn(empty, 5, candidates="distributed")
+    out = points_index.knn(empty, 5, candidates="distributed")
     assert out.columns == ["query_id", "neighbor_id", "dist", "rank"]
     assert out.count() == 0
 
     probe = spark.createDataFrame([(0, DELFT)], "query_id long, qvec array<float>")
-    n = cities.count()
-    big_k = cities_index.knn(probe, n + 100, candidates="distributed")
+    n = points.count()
+    big_k = points_index.knn(probe, n + 100, candidates="distributed")
     assert big_k.count() == n
 
 

@@ -143,6 +143,19 @@ def test_blocked_kernel_matches_contract(spark):
         knn_join_blocked(clean, qs, 3)
     out = knn_join_blocked(clean, qs, 3, on_invalid="skip").collect()
     assert {r.query_id for r in out} == {0}
+    # non-long ids keep their types, and an empty probe set returns
+    # knn_join's schema
+    sdata = spark.createDataFrame(
+        [(f"d{i}", v) for i, v in rows], "vec_id string, embedding array<double>"
+    )
+    sq = spark.createDataFrame(
+        [("q0", [0.0, 0.0, 0.0]), ("q1", [1.0, 1.0, 1.0])],
+        "query_id string, qvec array<double>",
+    )
+    for probes in (sq, sq.limit(0)):
+        got, want = knn_join_blocked(sdata, probes, 3), knn_join(sdata, probes, 3)
+        assert got.dtypes == want.dtypes
+        assert sorted(got.collect()) == sorted(want.collect())
 
 
 def test_range_join_contract(spark):
@@ -321,3 +334,112 @@ def test_grid_search_refuses_rows_that_skipped_the_build_census(spark, bad_name)
                        lambda: idx.range(qs, 1.0, candidates=mode)):
             with pytest.raises(Exception, match=r"invalid vector.*id=999"):
                 search().collect()
+
+
+# ---- one exact-search contract for every vector index (index/search.py) ----
+
+MATRIX_INDEXES = ("grid_driver", "grid_distributed", "ivf_driver", "ivf_distributed",
+                  "ivfpq", "sq8", "bq")
+MATRIX_CASES = {
+    # case: (extra data row, probes, the error it must raise or None)
+    "null_data_row": ((1000, None), [(0, [3.0, 3.0])], r"invalid vector.*id=1000"),
+    "nan_data_row": ((1000, [NAN, 1.0]), [(0, [3.0, 3.0])], r"invalid vector.*id=1000"),
+    "nan_probe": (None, [(0, [3.0, 3.0]), (7, [NAN, 0.0])], r"invalid query vector.*id=7"),
+    "wrong_dim_probe": (None, [(0, [3.0, 3.0]), (8, [1.0, 1.0, 1.0])],
+                        r"dim mismatch.*id=8"),
+    "null_probe_id": (None, [(None, [3.0, 3.0]), (1, [5.5, 2.0])], None),
+    "repeated_probe_id": (None, [(4, [3.0, 3.0]), (4, [7.0, 7.5]), (5, [0.0, 0.0])], None),
+}
+_MATRIX_N = 100
+_MATRIX_ROWS = [(i, [float(i % 10), float(i // 10)]) for i in range(_MATRIX_N)]
+_MATRIX_SCHEMA = "vec_id long, embedding array<double>"
+_matrix_cache: dict = {}
+
+
+def _cached(key, make):
+    if key not in _matrix_cache:
+        _matrix_cache[key] = make()
+    return _matrix_cache[key]
+
+
+def _matrix_build(spark, family, extra):
+    """The ``family`` index (or, for BQ, the data) over 100 valid 2-d rows
+    ``(i, [i%10, i//10])`` plus the row ``extra``, built once per data."""
+    from dataclasses import replace
+
+    from pyvectorsearch_spark.index.grid import GridIndex
+    from pyvectorsearch_spark.index.ivf import IVFIndex
+    from pyvectorsearch_spark.index.pq import IVFPQIndex
+    from pyvectorsearch_spark.index.sq import SQ8Index
+
+    if family == "grid" and extra:
+        # build's census refuses invalid rows, so the row joins the built
+        # index the way a streamed row does: beside row 0, in its cell
+        idx = _matrix_build(spark, "grid", None)
+        home = idx.df.filter("vec_id = 0").first()["cell"]
+        bad = spark.createDataFrame([(*extra, home)], _MATRIX_SCHEMA + ", cell string")
+        return replace(idx, df=idx.df.select("vec_id", "embedding", "cell").unionByName(bad))
+    data = spark.createDataFrame(_MATRIX_ROWS + ([extra] if extra else []), _MATRIX_SCHEMA)
+    build = {
+        "grid": lambda: GridIndex.build(data, dim=2, target_occupancy=8),
+        "ivf": lambda: IVFIndex.build(data, n_lists=4, seed=42),
+        "ivfpq": lambda: IVFPQIndex.build(data, n_lists=2, m=2, ksub=16, seed=42),
+        "sq8": lambda: SQ8Index.build(data),
+        "bq": lambda: data,
+    }[family]
+    return _cached((family, repr(extra)), build)
+
+
+def _matrix_search(idx, name):
+    """``name``'s search over ``idx`` at settings under which its exact
+    stage scores every row (nprobe = n_lists, rerank ≥ n)."""
+    from pyvectorsearch_spark.index.bq import bq_knn
+
+    every = _MATRIX_N + 1
+    return {
+        "grid_driver": lambda q, k: idx.knn(q, k, candidates="driver"),
+        "grid_distributed": lambda q, k: idx.knn(q, k, candidates="distributed"),
+        "ivf_driver": lambda q, k: idx.knn(q, k, nprobe=4),
+        "ivf_distributed": lambda q, k: idx.knn(q, k, nprobe=4, candidates="distributed"),
+        "ivfpq": lambda q, k: idx.knn(q, k, nprobe=2, rerank=every),
+        "sq8": lambda q, k: idx.knn(q, k, rerank=every),
+        "bq": lambda q, k: bq_knn(idx, q, k, dim=2, rerank=every),
+    }[name]
+
+
+@pytest.mark.parametrize("case", sorted(MATRIX_CASES))
+@pytest.mark.parametrize("index", MATRIX_INDEXES)
+def test_every_index_keeps_the_search_contract(spark, index, case):
+    """Every vector index, at settings where its exact stage scores every
+    row, either returns exactly ``knn_join``'s rows or raises the
+    contract's error naming the bad id: an invalid data row or probe never
+    ranks as a NULL / NaN distance, a NULL probe id is kept, and probes
+    sharing an id are ranked together."""
+    extra, probes, error = MATRIX_CASES[case]
+    idx = _matrix_build(spark, index.split("_")[0], extra)
+    search = _matrix_search(idx, index)
+    qs = spark.createDataFrame(probes, "query_id long, qvec array<double>")
+    if error:
+        with pytest.raises(Exception, match=error):
+            search(qs, 3).collect()
+        return
+    want = _cached(case, lambda: sorted(
+        repr(tuple(r))
+        for r in knn_join(spark.createDataFrame(_MATRIX_ROWS, _MATRIX_SCHEMA), qs, 3).collect()
+    ))
+    assert sorted(repr(tuple(r)) for r in search(qs, 3).collect()) == want
+
+
+def test_one_topk_window_under_the_indexes():
+    """The indexes and the index-free joins rank through the one window in
+    ``index/search.py``: a second ``row_number`` tail is how the copies
+    drifted apart before."""
+    from pathlib import Path
+
+    import pyvectorsearch_spark
+
+    pkg = Path(pyvectorsearch_spark.__file__).parent
+    files = [*sorted((pkg / "index").glob("*.py")), pkg / "operators" / "knn.py"]
+    forks = [f.relative_to(pkg).as_posix() for f in files
+             if "F.row_number(" in f.read_text() and f.name != "search.py"]
+    assert not forks, forks
