@@ -15,11 +15,12 @@ Because the geometry is closed-form, the Spark index needs **no tree at all**
   parents over the tiny stats table (the batch analog of the insert-time
   rebalancing cascade, ``pktree.hpp:587-929,1288-1354`` — ~420 LoC of pointer
   surgery replaced by a loop of small aggregations). An input under the
-  driver-read gate is read once with ``toArrow`` and all of it runs in numpy
-  on the driver, as the reference builds in one process
-  (``example_cpp/main.cpp``: CSV scan, then bulk insert); ``write`` then
-  writes that table with pyarrow. Above the gate the census and the counts
-  are Spark aggregates and the coalesce can run distributed.
+  driver-read gate of ``plans/local.py`` is read once with ``toArrow`` and
+  all of it runs in numpy on the driver, as the reference builds in one
+  process (``example_cpp/main.cpp``: CSV scan, then bulk insert); ``write``
+  then writes that table with pyarrow and ``load`` reads the small stats
+  sidecar the same way. Above the gate the census and the counts are Spark
+  aggregates and the coalesce can run distributed.
 - **Search** = per-probe candidate-cell selection against the stats table
   (the branch-and-bound of ``recursive_add_points``, ``pktree.hpp:1048-1064``,
   and the range reject of ``recursive_find_range``, ``:1161-1163``, restated
@@ -53,6 +54,15 @@ from pyspark.sql.types import ArrayType, DoubleType, FloatType
 
 from pyvectorsearch_spark.index.search import guard_probes, knn_rows, range_rows, scored
 from pyvectorsearch_spark.plans.inspect import plan_bytes_below
+from pyvectorsearch_spark.plans.local import (
+    arrow_rows,
+    local_path,
+    num_rows,
+    read_head,
+    read_rows,
+    to_df,
+    write_table,
+)
 
 CELL_SEP = "_"
 
@@ -61,33 +71,6 @@ STATS_SCHEMA = "cell string, level int, coords array<long>, count long"
 # integer index parameters the stats sidecar carries on every row (``int``
 # columns: Spark types ``F.lit`` of a small Python int as int)
 _INT_PARAMS = ("dim", "rank", "rr", "ratio", "fine_level")
-
-
-def _local_df(spark: SparkSession, cols: dict, schema) -> DataFrame:
-    """Driver-held columns -> DataFrame via pandas + Arrow, for the tables
-    the driver already has in hand: driver-mode search's (probe, cell)
-    candidate pairs and the streamed index's sidecar deltas and snapshots
-    (``index/incremental.py``). ``schema`` is a DDL string or a StructType.
-
-    createDataFrame over a plain tuple list takes the row-at-a-time
-    pickle/verify path (measured ~10 s for a 45k-row delta). This build
-    ships with ``spark.sql.execution.arrow.pyspark.enabled=false``, so the
-    pandas path ALSO row-converts unless the flag is on (a 154k-row frame
-    cost 7.3 s without Arrow, 2.4 s with): it is set around the call and
-    the caller's setting restored after."""
-    import pandas as pd
-
-    conf_key = "spark.sql.execution.arrow.pyspark.enabled"
-    try:
-        prev = spark.conf.get(conf_key)
-    except Exception:
-        prev = None
-    try:
-        spark.conf.set(conf_key, "true")
-        return spark.createDataFrame(pd.DataFrame(cols), schema)
-    finally:
-        if prev is not None:
-            spark.conf.set(conf_key, prev)
 
 
 def _slices(level: int, dim: int, rr: int) -> list[int]:
@@ -438,9 +421,9 @@ class GridIndex:
     ) -> "GridIndex":
         """Build the index over ``df``'s ``vec_col`` (float or double arrays).
 
-        Under the driver-read gate (``plan_bytes_below(df,
-        incremental._DRIVER_READ_BYTES)``, float/double vectors, an
-        Arrow-convertible schema) the build reads ``df`` once with
+        Under the driver-read gate (``plans/local.py``'s ``arrow_rows``:
+        a plan known to be under 64 MiB and an Arrow-convertible schema) and
+        for float/double vectors the build reads ``df`` once with
         ``toArrow`` and runs the census, root box, fine cells (``_cell_coords``,
         bit-identical to ``_cell_expr``) and K-instantiation in numpy: one
         Spark job. The index keeps that cell-sorted table for ``write``.
@@ -448,8 +431,6 @@ class GridIndex:
         and the fine-cell counts are Spark aggregates. Either way the index's
         ``df`` is the same lazy plan: ``df`` plus the fine cell, joined to the
         broadcast fine-to-instantiated mapping."""
-        from pyvectorsearch_spark.index.incremental import _arrow_rows
-
         if coalesce_strategy not in ("auto", "driver", "distributed"):
             raise ValueError(f"unknown coalesce_strategy {coalesce_strategy!r}")
         spark = df.sparkSession
@@ -460,7 +441,7 @@ class GridIndex:
             and isinstance(v_type, ArrayType)
             and isinstance(v_type.elementType, (FloatType, DoubleType))
         ):
-            table = _arrow_rows(df)
+            table = arrow_rows(df)
         if table is not None:
             pts, dim = _census_arrow(table.column(vec_col), dim)
             lo, hi, n = pts.min(axis=0).tolist(), pts.max(axis=0).tolist(), len(pts)
@@ -1182,7 +1163,7 @@ class GridIndex:
         schema = StructType(
             [f["_qid"], StructField("cell", StringType()), *[f[c] for c in rest]]
         )
-        pairs = _local_df(qs.sparkSession, cols, schema)
+        pairs = to_df(qs.sparkSession, cols, schema)
         return F.broadcast(pairs.withColumn("_qid", F.struct("_qid")))
 
     def _scored(self, cand: DataFrame, payload: Iterable[str]) -> DataFrame:
@@ -1405,9 +1386,10 @@ class GridIndex:
         4.3 s just to LIST when dir-partitioned).
 
         An index from ``build``'s driver branch, written unchanged to a local
-        path in the sorted layout, is written with pyarrow from the table the
-        build read: no Spark job, and ``spark.read.parquet`` gives the same
-        schemas as for Spark's own write. ``n`` / ``n_cells`` come from the
+        path (``plans/local.py``'s ``local_path``) in the sorted layout, is
+        written with that module's ``write_table`` from the table the build
+        read: no Spark job, and ``spark.read.parquet`` gives the same schemas
+        as for Spark's own write. ``n`` / ``n_cells`` come from the
         driver-held stats when the index has them."""
         if self._local_stats is not None:
             n = sum(s[3] for s in self._local_stats)
@@ -1456,11 +1438,9 @@ class GridIndex:
         existing path is left to Spark, which raises."""
         import pyarrow as pa
 
-        from pyvectorsearch_spark.index.cache import local_write_dir, write_table_local
-
         if self._built is None or self._built[0] is not self.df or not self._local_stats:
             return False
-        local = local_write_dir(self.df.sparkSession, path)
+        local = local_path(self.df.sparkSession, path)
         if local is None:
             return False
         dirs = (f"{local}/data", f"{local}/stats")
@@ -1471,7 +1451,7 @@ class GridIndex:
             mode = "overwrite"
         if mode not in ("overwrite", "append", "ignore"):
             return False
-        write_table_local(self._built[1].sort_by("cell"), dirs[0], mode, files)
+        write_table(self._built[1].sort_by("cell"), dirs[0], mode, files)
         cell, level, coords, count = zip(*self._local_stats)
         k = len(cell)
         stats = pa.table(
@@ -1487,52 +1467,34 @@ class GridIndex:
                 "vec_col": pa.array([self.vec_col] * k, pa.string()),
             }
         )
-        write_table_local(stats, dirs[1], mode)
+        write_table(stats, dirs[1], mode)
         return True
 
     @staticmethod
     def load(spark: SparkSession, path: str) -> "GridIndex":
+        """The index ``write`` left at ``path``. The descriptor row and a
+        stats table within ``DRIVER_STATS_MAX_CELLS`` are read on the driver
+        through ``plans/local.py`` (pyarrow when local, Spark otherwise)."""
         data = spark.read.parquet(f"{path}/data")
         stats_src = spark.read.parquet(f"{path}/stats")
-        # params ride on every row; grab one row WITHOUT a Spark job when
-        # the artifact is local (read_sidecar_head) — the old .first() paid
-        # a full job per query invocation (r10 optimization round)
-        from pyvectorsearch_spark.index.cache import (
-            read_sidecar_head,
-            read_small_sidecar,
-            sidecar_num_rows,
+        # params ride on every row: one row of one file when the artifact
+        # is local, not a .first() job per query invocation
+        head = read_head(
+            spark, f"{path}/stats",
+            ["origin", "width", "dim", "rank", "rr", "ratio", "fine_level", "id_col", "vec_col"],
         )
-
-        head = read_sidecar_head(
-            f"{path}/stats",
-            columns=[
-                "origin", "width", "dim", "rank", "rr", "ratio",
-                "fine_level", "id_col", "vec_col",
-            ],
-        ) or stats_src.first()
         # Pre-populate the driver-side cell list when the stats table is
         # driver-sized (the _candidates_mode bound, checked against FOOTER
         # metadata only): the driver candidate path otherwise pays a count
         # job + a collect job per QUERY invocation for a table we already
-        # have locally. Bigger artifacts keep the lazy distributed stats
-        # exactly as before (r10 optimization round).
+        # have locally. Bigger artifacts keep the lazy distributed stats.
         local_stats = None
-        n_stats = sidecar_num_rows(f"{path}/stats")
+        n_stats = num_rows(spark, f"{path}/stats")
         if n_stats is not None and n_stats <= GridIndex.DRIVER_STATS_MAX_CELLS:
-            cell_rows = read_small_sidecar(
-                f"{path}/stats",
-                columns=["cell", "level", "coords", "count"],
-            )
-            if cell_rows is not None:
-                local_stats = [
-                    (
-                        r["cell"],
-                        int(r["level"]),
-                        tuple(int(x) for x in r["coords"]),
-                        int(r["count"]),
-                    )
-                    for r in cell_rows
-                ]
+            local_stats = [
+                (r["cell"], int(r["level"]), tuple(int(x) for x in r["coords"]), int(r["count"]))
+                for r in read_rows(spark, f"{path}/stats", ["cell", "level", "coords", "count"])
+            ]
         stats_df = stats_src.select(
             "cell",
             F.col("level").cast("int").alias("level"),

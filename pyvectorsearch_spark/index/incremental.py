@@ -63,9 +63,9 @@ from pyvectorsearch_spark.index.grid import (
     STATS_SCHEMA,
     GridIndex,
     _kinstantiate_distributed,
-    _local_df,
     _slices,
 )
+from pyvectorsearch_spark.plans.local import fits, to_df, write_table
 
 _POINTER = "LATEST.json"
 #: pointer schema version; readers must refuse older layouts (a stale
@@ -111,6 +111,8 @@ def _publish_pointer(meta_path: str, ptr: dict) -> None:
 
 _KINDS = {"state": ("state_base", "state_upto"),
           "mapping": ("map_base", "map_upto")}
+#: the latest-wins merge key per kind
+_KEY = {"state": "cell", "mapping": "_fine"}
 #: leveled-fold pointer keys per kind: (runs list, version-seq counter).
 #: Absent on pre-r10 pointers — every access goes through .get with a
 #: default, so r9 artifacts resume cleanly (layout unchanged, additive).
@@ -218,33 +220,6 @@ def _meta_bytes(dirs: list[str]) -> int:
     )
 
 
-#: above this many bytes of referenced meta files the per-batch maintenance
-#: reads go through Spark instead of driver-side pyarrow (~15 B/row on
-#: these schemas → ~4M state rows; the WRITE side never needs the gate —
-#: deltas are bounded by the batch's ancestor closure by construction)
-_DRIVER_READ_BYTES = 64 << 20
-
-
-def _arrow_rows(df: DataFrame):
-    """``df``'s rows as one Arrow table, read with one ``toArrow`` job, when
-    its plan is known to be under ``_DRIVER_READ_BYTES`` (the fail-closed
-    ``plan_bytes_below``, bound read at call time) and its schema converts
-    to Arrow; else None, and the caller keeps its Spark branch. Shared by
-    ``GridIndex.build`` and ``stream_index_ingest``'s micro-batches."""
-    from pyspark.errors import PySparkException
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from pyvectorsearch_spark.plans.inspect import plan_bytes_below
-
-    if not plan_bytes_below(df, _DRIVER_READ_BYTES):
-        return None
-    try:
-        to_arrow_schema(df.schema, error_on_duplicated_field_names_in_struct=True)
-    except PySparkException:  # a type or struct Arrow cannot hold
-        return None
-    return df.toArrow()
-
-
 #: filtered (predicate-pushdown) pyarrow reads stay driver-side up to this
 #: many referenced bytes: the filter evaluates vectorized per row group
 #: and only matching rows materialize to pandas, so the constant is ~10x
@@ -262,29 +237,29 @@ _FILTERED_READ_BYTES = 512 << 20
 _CACHE_BUILD_BYTES = 192 << 20
 
 
-def _read_affected_local(
-    meta_path: str, kind: str, ptr: dict, keys: list, key_col: str
-):
-    """Predicate-filtered driver-side read: each live dir is read with a
-    pyarrow ``key_col IN keys`` filter, then merged latest-wins. When
-    ``key_col`` is the merge key this is EXACT (the latest row for every
-    requested key is in some live dir and matches the filter); when it is
-    a non-key column (the remap path filters mapping rows by their home)
-    it returns a SUPERSET — rows whose stale home matched — which the
-    remap's `_rehome` recomputation makes harmless by construction."""
+def _merged_local(dirs: list[str], kind: str, where: tuple[str, list] | None = None):
+    """Driver-side latest-wins merge (pandas) of ``dirs``, later dirs
+    winning, or None when there are none: the per-batch fast path. A Spark
+    job on a sub-second table costs more in scheduling than the read itself
+    (measured: the coalesce(1) delta write alone was 6.5 s/batch; the whole
+    pyarrow path is milliseconds).
+
+    ``where=(col, keys)`` reads each dir with a pyarrow ``col IN keys``
+    filter. On the merge key this is EXACT (the latest row for every
+    requested key is in some live dir and matches the filter); on another
+    column (the remap filters mapping rows by their home) it returns a
+    SUPERSET — rows whose stale home matched — which the remap's `_rehome`
+    recomputation makes harmless by construction."""
     import pandas as pd
     import pyarrow.parquet as pq
 
-    dirs = _live_dirs(meta_path, kind, ptr)
     if not dirs:
         return None
-    frames = [
-        pq.read_table(d, filters=[(key_col, "in", keys)]).to_pandas()
-        for d in dirs
-    ]
+    filters = None if where is None else [(where[0], "in", where[1])]
+    frames = [pq.read_table(d, filters=filters).to_pandas() for d in dirs]
     df = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-    merge_key = "cell" if kind == "state" else "_fine"
-    return df.drop_duplicates(merge_key, keep="last")
+    return df.drop_duplicates(_KEY[kind], keep="last")
+
 
 #: in-memory maintenance cache, one entry per meta_path: the full node
 #: state plus the forward/reverse mapping, validated against the pointer's
@@ -345,24 +320,6 @@ def _cache_store(meta_path: str, cache: dict) -> None:
         _CACHE.pop(lru)
 
 
-def _read_table_local(meta_path: str, kind: str, ptr: dict):
-    """Driver-side latest-wins merge (pandas) of base + committed deltas —
-    the per-batch fast path. A Spark job on a sub-second table costs more
-    in scheduling than the read itself (measured: the coalesce(1) delta
-    write alone was 6.5 s/batch; the whole pyarrow path is milliseconds)."""
-    import pyarrow.parquet as pq
-
-    dirs = _live_dirs(meta_path, kind, ptr)
-    if not dirs:
-        return None
-    import pandas as pd
-
-    frames = [pq.read_table(d).to_pandas() for d in dirs]
-    df = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-    key = "cell" if kind == "state" else "_fine"
-    return df.drop_duplicates(key, keep="last")  # later dirs win
-
-
 def _merge_dirs_spark(
     spark: SparkSession, dirs: list[str], kind: str,
     restrict: DataFrame | None = None,
@@ -375,7 +332,7 @@ def _merge_dirs_spark(
     ancestor closure — without this the eviction-regime state read
     aggregated all ~10M state rows per batch (measured 8-16 s/batch on
     the 1e6-cell soak); with it the shuffle is |closure| x dirs rows."""
-    key = "cell" if kind == "state" else "_fine"
+    key = _KEY[kind]
     parts = []
     for i, d in enumerate(dirs):
         p = spark.read.parquet(d)
@@ -387,7 +344,6 @@ def _merge_dirs_spark(
     df = parts[0]
     for p in parts[1:]:
         df = df.unionByName(p)
-    key = "cell" if kind == "state" else "_fine"
     others = [c for c in df.columns if c not in (key, "_prec")]
     return (
         df.groupBy(key)
@@ -410,20 +366,12 @@ def _merge_to(
     spark: SparkSession, meta_path: str, kind: str,
     dirs: list[str], out_dir: str,
 ) -> None:
-    """Fold `dirs` (positional precedence) into `out_dir`: byte-gated
-    driver-side pandas below _DRIVER_READ_BYTES, distributed Spark job
-    above — the same never-collect-big contract as the per-batch reads."""
-    if _meta_bytes(dirs) <= _DRIVER_READ_BYTES:
-        import pandas as pd
-        import pyarrow.parquet as pq
-
-        frames = [pq.read_table(d).to_pandas() for d in dirs]
-        df = (
-            pd.concat(frames, ignore_index=True)
-            if len(frames) > 1 else frames[0]
-        )
-        key = "cell" if kind == "state" else "_fine"
-        merged = df.drop_duplicates(key, keep="last")
+    """Fold `dirs` (positional precedence) into `out_dir`: driver-side
+    pandas within the driver-read gate (``plans/local.py``), distributed
+    Spark job above — the same never-collect-big contract as the per-batch
+    reads."""
+    if fits(_meta_bytes(dirs)):
+        merged = _merged_local(dirs, kind)
         _write_local(
             meta_path, kind, os.path.basename(out_dir),
             {c: merged[c].tolist() for c, _ in _PA_SCHEMAS[kind]},
@@ -449,12 +397,10 @@ def _write_local(meta_path: str, kind: str, name: str, cols: dict) -> None:
     by contract, so this adds no new deployment assumption."""
     import pyarrow as pa
 
-    from pyvectorsearch_spark.index.cache import write_table_local
-
     schema = pa.schema(
         [(n, getattr(pa, t)()) for n, t in _PA_SCHEMAS[kind]]
     )
-    write_table_local(
+    write_table(
         pa.table({n: cols[n] for n, _ in _PA_SCHEMAS[kind]}, schema=schema),
         os.path.join(meta_path, kind, name),
     )
@@ -660,14 +606,14 @@ def apply_batch_rebalance(
     spdf = None
     if cache is None and state_dirs and meta_path not in _CACHE_SKIP and \
             _meta_bytes(state_dirs) <= _CACHE_BUILD_BYTES:
-        spdf = _read_table_local(meta_path, "state", ptr)
+        spdf = _merged_local(state_dirs, "state")
         if len(spdf) > _CACHE_MAX_ROWS:
             _CACHE_SKIP.add(meta_path)
         else:
             state = dict(
                 zip(spdf["cell"], (int(v) for v in spdf["pending"]))
             )
-            mpdf = _read_table_local(meta_path, "mapping", ptr)
+            mpdf = _merged_local(_live_dirs(meta_path, "mapping", ptr), "mapping")
             fwd: dict[str, str] = {}
             rev: dict[str, set[str]] = {}
             if mpdf is not None:
@@ -696,9 +642,7 @@ def apply_batch_rebalance(
         elif _meta_bytes(state_dirs) <= _FILTERED_READ_BYTES:
             # eviction-regime fast path: predicate-filtered pyarrow read
             # of the closure only — exact (filter on the merge key)
-            hit = _read_affected_local(
-                meta_path, "state", ptr, affected, "cell"
-            )
+            hit = _merged_local(state_dirs, "state", ("cell", affected))
             old_state = dict(
                 zip(hit["cell"], (int(p) for p in hit["pending"]))
             )
@@ -706,7 +650,7 @@ def apply_batch_rebalance(
             # giant-state distributed read: restrict each dir to the
             # batch's ancestor closure BEFORE the latest-wins merge (see
             # _merge_dirs_spark) — collect stays closure-bounded
-            aff = _local_df(spark, {"cell": affected}, "cell string")
+            aff = to_df(spark, {"cell": affected}, "cell string")
             state_df = _merge_dirs_spark(
                 spark, _live_dirs(meta_path, "state", ptr), "state",
                 restrict=aff,
@@ -950,7 +894,7 @@ def _remap_after_flips(
         # (harmless: _rehome recomputes every candidate's correct home);
         # subtree membership via the same closed-form coordinate division
         sel = sorted(set(dissolved) | {anc for anc, _, _ in pairs})
-        hit = _read_affected_local(meta_path, "mapping", ptr, sel, "cell")
+        hit = _merged_local(map_dirs, "mapping", ("cell", sel))
         by_home: dict[str, list[str]] = {}
         for f, home in zip(hit["_fine"], hit["cell"]):
             by_home.setdefault(home, []).append(f)
@@ -959,10 +903,10 @@ def _remap_after_flips(
     mapping_df = _read_table(spark, meta_path, "mapping", ptr)
     cands = []
     if dissolved:
-        dd = _local_df(spark, {"cell": dissolved}, "cell string")
+        dd = to_df(spark, {"cell": dissolved}, "cell string")
         cands.append(mapping_df.join(F.broadcast(dd), "cell"))
     if pairs:
-        pd_df = _local_df(
+        pd_df = to_df(
             spark,
             {
                 "cell": [a for a, _, _ in pairs],
@@ -1015,7 +959,7 @@ def _rebuild_full(
     the merged fine counts and publish fresh bases (same never-collect-big
     contract as search; the incremental path handles every sanely-sized
     batch)."""
-    delta = _local_df(
+    delta = to_df(
         spark,
         {
             "_fine": list(batch_delta),
@@ -1129,8 +1073,8 @@ def _local_sidecar(
     (broadcast mapping, stats_df, instantiated stats rows),
     merged latest-wins with pyarrow and handed to Spark through Arrow —
     no Spark job, however many dirs are live."""
-    state = _read_table_local(meta_path, "state", ptr)
-    mapping = _read_table_local(meta_path, "mapping", ptr)
+    state = _merged_local(_live_dirs(meta_path, "state", ptr), "state")
+    mapping = _merged_local(_live_dirs(meta_path, "mapping", ptr), "mapping")
     if state is None or mapping is None:
         raise ValueError(f"empty rebalance sidecar under {meta_path}")
     stats = [
@@ -1141,13 +1085,13 @@ def _local_sidecar(
         if _is_inst(int(level), int(pending), ptr["rank"])
     ]
     cell, level, coords, count = zip(*stats)  # level 0 always owns mass
-    stats_df = _local_df(
+    stats_df = to_df(
         spark,
         {"cell": cell, "level": level, "coords": [list(c) for c in coords],
          "count": count},
         STATS_SCHEMA,
     )
-    mapping_df = _local_df(
+    mapping_df = to_df(
         spark,
         {"_fine": mapping["_fine"].tolist(), "cell": mapping["cell"].tolist()},
         "_fine string, cell string",
@@ -1175,9 +1119,9 @@ def load_rebalanced_index(
     equi-join on the fine cell (no data movement), stats come straight from
     the sidecar. Indistinguishable from a batch build over the same rows.
 
-    While the live state and mapping dirs total at most
-    ``_DRIVER_READ_BYTES`` (the writer's own driver-read gate), the sidecar
-    is merged on the driver: the index holds a SNAPSHOT of the mapping and
+    While the live state and mapping dirs fit the driver-read gate of
+    ``plans/local.py`` (the writer's own), the sidecar is merged on the
+    driver: the index holds a SNAPSHOT of the mapping and
     stats read at load time, and its stats are prepopulated (within
     ``GridIndex.DRIVER_STATS_MAX_CELLS``) so choosing a search mode and
     reading the stats run no Spark job; the load's only job is the data
@@ -1188,7 +1132,7 @@ def load_rebalanced_index(
     ptr = _require_pointer(meta_path)
     live = [d for kind in _KINDS for d in _live_dirs(meta_path, kind, ptr)]
     local_stats = n_stats = None
-    if _meta_bytes(live) <= _DRIVER_READ_BYTES:
+    if fits(_meta_bytes(live)):
         mapping, stats_df, stats = _local_sidecar(spark, meta_path, ptr)
         n_stats = len(stats)
         if n_stats <= GridIndex.DRIVER_STATS_MAX_CELLS:

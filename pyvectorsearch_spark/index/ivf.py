@@ -9,8 +9,10 @@ Spark-first design:
   deterministic sample collected to the driver — at 100 TB the sample is
   ``sample_per_list · n_lists`` rows regardless of corpus size.
 - **Assignment**: centroids broadcast; each row's nearest-centroid id is
-  computed in one Arrow-batched numpy pass (``mapInPandas``, BLAS matmul) —
-  a single map-side projection, no shuffle.
+  computed in one Arrow-batched numpy pass (``mapInArrow``, BLAS matmul)
+  that appends ``list_id`` to the untouched record batch — a single
+  map-side projection, no shuffle, and every input value (a NaN component
+  included) comes back as it went in.
 - **Search**: per query, probe the ``nprobe`` nearest centroid lists and
   hand the (probe, list) pairs to the exact-search tail every vector index
   shares (``index/search.py``: probe guard, ``list_id`` join under the
@@ -27,20 +29,39 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from pyvectorsearch_spark.functions.vector import l2_sq, vec_is_finite
 from pyvectorsearch_spark.index.search import guard_probes, keyed, knn_rows, scored, topk
+from pyvectorsearch_spark.plans.local import read_rows
 
 
-def _matrix(vectors, dim: int) -> np.ndarray:
-    """(n, dim) float64 rows of a pandas vector column; a NULL vector reads
-    as NaNs, which land in list / code 0 (argmin of an all-NaN row) where
-    the search's data-row guard refuses them."""
-    return np.asarray([
-        np.full(dim, np.nan) if v is None else np.asarray(v, dtype=np.float64)
-        for v in vectors
-    ])
+def _matrix(vectors: pa.Array, dim: int) -> np.ndarray:
+    """(n, dim) float64 rows of an Arrow vector column; a NULL vector, a
+    NULL component or a vector of another length reads as NaNs, which land
+    in list / code 0 (argmin of an all-NaN row) where the search's data-row
+    guard refuses them."""
+    ok = pc.fill_null(pc.equal(pc.list_value_length(vectors), dim), False)
+    X = np.full((len(vectors), dim), np.nan)
+    flat = vectors.filter(ok).flatten().to_numpy(zero_copy_only=False)
+    X[ok.to_numpy(zero_copy_only=False)] = flat.reshape(-1, dim)
+    return X
+
+
+def _appended(df: DataFrame, name: str, dtype, kernel) -> DataFrame:
+    """``df`` with one column ``name`` appended by ``kernel`` (a record
+    batch -> Arrow array) in a ``mapInArrow`` pass: every input column
+    passes through untouched."""
+    schema = StructType([*df.schema.fields, StructField(name, dtype)])
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield batch.append_column(name, kernel(batch))
+
+    return df.mapInArrow(run, schema)
 
 
 def _kmeans(sample: np.ndarray, n_lists: int, iters: int, seed: int) -> np.ndarray:
@@ -118,24 +139,14 @@ class IVFIndex:
         sc = df.sparkSession.sparkContext
         bc = sc.broadcast(cent)
 
-        def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def assign(batch: pa.RecordBatch) -> pa.Array:
             C = bc.value  # (L, d)
-            c2 = (C * C).sum(axis=1)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = _matrix(pdf["_v"], C.shape[1])
-                d2 = (X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + c2[None, :]
-                pdf = pdf.drop(columns=["_v"])
-                pdf["list_id"] = d2.argmin(axis=1).astype("int32")
-                yield pdf
+            X = _matrix(batch.column(vec_col), C.shape[1])
+            d2 = (X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + (C * C).sum(axis=1)[None, :]
+            return pa.array(d2.argmin(axis=1).astype(np.int32))
 
-        cols = [c for c in df.columns]
-        with_v = df.withColumn("_v", F.col(vec_col))
-        schema = ", ".join(f"{name} {dtype}" for name, dtype in df.dtypes) + ", list_id int"
-        assigned = with_v.select(*cols, "_v").mapInPandas(assign, schema=schema)
         return IVFIndex(
-            df=assigned,
+            df=_appended(df, "list_id", IntegerType(), assign),
             centroids=cent,
             id_col=id_col,
             vec_col=vec_col,
@@ -249,21 +260,7 @@ class IVFIndex:
         data = spark.read.parquet(f"{path}/data")
         # centroids/meta are tens of tiny rows: read them driver-side when
         # local instead of paying two Spark jobs per query invocation
-        # (r10 optimization round; see read_small_sidecar)
-        from pyvectorsearch_spark.index.cache import read_small_sidecar
-
-        cent_rows = read_small_sidecar(f"{path}/centroids")
-        if cent_rows is None:
-            cent_rows = [
-                r.asDict()
-                for r in spark.read.parquet(f"{path}/centroids").collect()
-            ]
-        cent_rows = sorted(cent_rows, key=lambda r: r["list_id"])
+        cent_rows = sorted(read_rows(spark, f"{path}/centroids"), key=lambda r: r["list_id"])
         cent = np.asarray([list(r["centroid"]) for r in cent_rows])
-        meta_rows = read_small_sidecar(f"{path}/meta")
-        meta = (
-            meta_rows[0]
-            if meta_rows
-            else spark.read.parquet(f"{path}/meta").first()
-        )
+        meta = read_rows(spark, f"{path}/meta")[0]
         return IVFIndex(df=data, centroids=cent, id_col=meta["id_col"], vec_col=meta["vec_col"])

@@ -15,8 +15,8 @@ Spark mapping (all stages distributed):
   1. coarse IVF assignment (reuses ``IVFIndex.build`` — broadcast centroids,
      one Arrow-batched map pass);
   2. PQ codebooks trained per subspace on the same deterministic
-     driver-sized sample; encoding is a second map-only pass adding
-     ``pq_code array<tinyint>``;
+     driver-sized sample; encoding is a second map-only ``mapInArrow`` pass
+     appending ``pq_code array<smallint>`` to the untouched rows;
   3. search: per-partition ADC — numpy lookup-table gather + sum over the
      code matrix, emitting per-partition top-``rerank`` — then one tiny
      window for each probe's global top-``rerank``; that shortlist is the
@@ -33,11 +33,13 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-from pyvectorsearch_spark.index.ivf import IVFIndex, _kmeans, _matrix
+from pyvectorsearch_spark.index.ivf import IVFIndex, _appended, _kmeans, _matrix
 from pyvectorsearch_spark.index.search import guard_probes, knn_rows, scored, topk
+from pyvectorsearch_spark.plans.local import read_rows
 
 
 @dataclass
@@ -159,25 +161,14 @@ class IVFPQIndex:
         sc = df.sparkSession.sparkContext
         bc = sc.broadcast(codec.codebooks)
 
-        def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def encode(batch: pa.RecordBatch) -> pa.Array:
             cdc = PQCodec(codebooks=bc.value)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                codes = cdc.encode(_matrix(pdf["_v"], cdc.m * cdc.dsub))
-                pdf = pdf.drop(columns=["_v"])
-                pdf["pq_code"] = [c.astype("int16") for c in codes]
-                yield pdf
+            codes = cdc.encode(_matrix(batch.column(vec_col), cdc.m * cdc.dsub))
+            offsets = np.arange(0, codes.size + 1, cdc.m, dtype=np.int32)
+            return pa.ListArray.from_arrays(offsets, codes.astype(np.int16).ravel())
 
-        cols = base.df.columns
-        with_v = base.df.withColumn("_v", F.col(vec_col))
-        schema = (
-            ", ".join(f"{name} {dtype}" for name, dtype in base.df.dtypes)
-            + ", pq_code array<smallint>"
-        )
-        encoded = with_v.select(*cols, "_v").mapInPandas(encode, schema=schema)
         return IVFPQIndex(
-            df=encoded,
+            df=_appended(base.df, "pq_code", T.ArrayType(T.ShortType()), encode),
             centroids=base.centroids,
             codec=codec,
             id_col=id_col,
@@ -281,17 +272,7 @@ class IVFPQIndex:
     @staticmethod
     def load(spark, path: str) -> "IVFPQIndex":
         base = IVFIndex.load(spark, path)
-        from pyvectorsearch_spark.index.cache import read_small_sidecar
-
-        rows = read_small_sidecar(f"{path}/codebooks")
-        if rows is None:
-            rows = (
-                spark.read.parquet(f"{path}/codebooks")
-                .orderBy("subspace", "code")
-                .collect()
-            )
-        else:
-            rows = sorted(rows, key=lambda r: (r["subspace"], r["code"]))
+        rows = read_rows(spark, f"{path}/codebooks")
         m = 1 + max(r["subspace"] for r in rows)
         ksub = 1 + max(r["code"] for r in rows)
         dsub = len(rows[0]["centroid"])

@@ -34,6 +34,7 @@ from pyvectorsearch_spark.functions.text import (
 from pyvectorsearch_spark.functions.vector import cosine_sim
 from pyvectorsearch_spark.functions.lits import lit_double_array
 from pyvectorsearch_spark.plans.inspect import plan_bytes_below
+from pyvectorsearch_spark.plans.local import read_rows
 
 SIMHASH_BITS = 60  # 15 md5 hex nibbles → signed-long safe (< 2^62)
 
@@ -887,13 +888,7 @@ class AngularModel:
     def load(spark, path: str) -> "AngularModel":
         import numpy as np
 
-        from pyvectorsearch_spark.index.cache import read_small_sidecar
-
-        rows = read_small_sidecar(path)
-        if rows is None:  # non-local artifact: keep the Spark read
-            rows = spark.read.parquet(path).orderBy("list_id").collect()
-        else:
-            rows = sorted(rows, key=lambda r: r["list_id"])
+        rows = sorted(read_rows(spark, path), key=lambda r: r["list_id"])
         C = np.asarray([list(r["centroid"]) for r in rows])
         return AngularModel(C, rows[0]["alpha_max"])
 

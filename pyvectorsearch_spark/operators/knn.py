@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 
 from pyvectorsearch_spark.functions.vector import cosine_sim, dot, l2_sq, vec_is_finite
 from pyvectorsearch_spark.functions.lits import lit_double_array
-from pyvectorsearch_spark.index.search import check_on_invalid, topk
+from pyvectorsearch_spark.index.search import check_on_invalid, fail, topk
 
 METRICS = {"l2_sq", "cosine", "dot"}
 
@@ -68,15 +68,17 @@ def _dim_guarded(score: Column, data_vec: Column, query_vec: Column) -> Column:
 
 
 def _validity_guarded(
-    score: Column, data_vec: Column, query_vec: Column, on_invalid: str
+    score: Column, data_vec: Column, query_vec: Column, on_invalid: str,
+    data_id: Column, query_id: Column,
 ) -> Column:
     """NaN/Inf/null-element contract (r7, VERDICT r6 ask #6), compiled into
     the distance expression like ``_dim_guarded``. The reference's raw C
     arrays cannot hold NULLs, so Spark must choose explicitly:
 
     - ``on_invalid="error"`` (default): any NULL vector, NULL element, NaN
-      or ±Inf component on either side raises with a descriptive message —
-      a 100 TB search never silently ranks garbage.
+      or ±Inf component on either side raises naming the invalid side and
+      the data row and probe ids — a 100 TB search never silently ranks
+      garbage.
     - ``on_invalid="skip"``: the distance is nulled and the row dropped
       from results (callers filter ``dist IS NOT NULL``) — documented
       null-out for pipelines that tolerate dirty rows.
@@ -88,18 +90,10 @@ def _validity_guarded(
     ok = vec_is_finite(data_vec) & vec_is_finite(query_vec)
     if on_invalid == "skip":
         return F.when(ok, score)
+    side = F.when(vec_is_finite(data_vec), F.lit("query")).otherwise(F.lit("data"))
     return F.when(ok, score).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    "invalid vector (NULL / NaN / Inf component) in search; "
-                    "pass on_invalid='skip' to drop such rows. data="
-                ),
-                F.coalesce(data_vec.cast("string"), F.lit("NULL")),
-                F.lit(", query="),
-                F.coalesce(query_vec.cast("string"), F.lit("NULL")),
-            )
-        )
+        fail("invalid vector (NULL / NaN / Inf component) in the ", side, " row: data id=",
+             data_id, ", query id=", query_id, "; pass on_invalid='skip' to drop such rows")
     )
 
 
@@ -148,7 +142,8 @@ def knn_join(
     q = queries.select(F.col(query_id).alias("query_id"), F.col(query_vec).alias("_qvec"))
     score, asc = _distance(metric, F.col("_dvec"), F.col("_qvec"))
     score = _dim_guarded(score, F.col("_dvec"), F.col("_qvec"))
-    score = _validity_guarded(score, F.col("_dvec"), F.col("_qvec"), on_invalid)
+    score = _validity_guarded(score, F.col("_dvec"), F.col("_qvec"), on_invalid,
+                              F.col("neighbor_id"), F.col("query_id"))
     pairs = d.crossJoin(F.broadcast(q)).withColumn("dist", score)
     if on_invalid == "skip":
         # null dist = invalid row; drop BEFORE ranking so it can't eat a rank
@@ -357,6 +352,8 @@ def range_join(
             F.col("_dvec"),
             F.col("_qvec"),
             on_invalid,
+            F.col("neighbor_id"),
+            F.col("query_id"),
         ),
     )
     return pairs.filter(F.col("dist") <= float(radius) ** 2).select(

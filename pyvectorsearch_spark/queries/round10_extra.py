@@ -26,6 +26,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyvectorsearch_spark.plans.local import parquet_schema
+
 _SC_LEVEL = 6
 _SC_W = 0.015625  # 1.0 * 2**-6, exact power of two (bit-stable floor)
 
@@ -88,11 +90,7 @@ def q_stream_leveled_sidecar(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ck, ignore_errors=True)
         shutil.rmtree(meta, ignore_errors=True)
-        from pyvectorsearch_spark.queries.streaming import _local_parquet_schema
-        schema = (
-            _local_parquet_schema(landing)
-            or spark.read.parquet(landing).schema
-        )
+        schema = parquet_schema(spark, landing)
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)

@@ -23,6 +23,7 @@ from pyvectorsearch_spark.operators.dedup import (
     simhash_64,
 )
 from pyvectorsearch_spark.functions.vector import duckdb_l2_sq
+from pyvectorsearch_spark.plans.local import parquet_schema
 from pyvectorsearch_spark.queries.dedup import MAX_HAMMING, _simhash_oracle
 from pyvectorsearch_spark.sources.tables import load_table, spread
 
@@ -192,11 +193,7 @@ def q_knn_stream_rebalanced(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ck, ignore_errors=True)
         shutil.rmtree(meta, ignore_errors=True)
-        from pyvectorsearch_spark.queries.streaming import _local_parquet_schema
-        schema = (
-            _local_parquet_schema(landing)
-            or spark.read.parquet(landing).schema
-        )
+        schema = parquet_schema(spark, landing)
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 2)

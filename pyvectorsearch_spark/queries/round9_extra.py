@@ -19,6 +19,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyvectorsearch_spark.plans.local import parquet_schema
 from pyvectorsearch_spark.queries.multimodal_extra import (
     q_multimodal_crossformat_lossy,
 )
@@ -80,11 +81,7 @@ def q_stream_sidecar_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ck, ignore_errors=True)
         shutil.rmtree(meta, ignore_errors=True)
-        from pyvectorsearch_spark.queries.streaming import _local_parquet_schema
-        schema = (
-            _local_parquet_schema(landing)
-            or spark.read.parquet(landing).schema
-        )
+        schema = parquet_schema(spark, landing)
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 2)

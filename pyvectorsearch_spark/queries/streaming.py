@@ -13,6 +13,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyvectorsearch_spark.plans.local import parquet_schema
 from pyvectorsearch_spark.sources.tables import load_table
 from pyvectorsearch_spark.streaming.ingest import (
     deduplicated_stream,
@@ -23,80 +24,10 @@ from pyvectorsearch_spark.streaming.ingest import (
 )
 
 
-def _nested_nullable(t) -> bool:
-    """True when every field NESTED in arrow type ``t`` (struct members,
-    list elements, map values) is nullable, recursively. Map keys are
-    exempt: arrow requires them and Spark's MapType records no key
-    nullability."""
-    import pyarrow.types as pat
-
-    if pat.is_struct(t):
-        return all(f.nullable and _nested_nullable(f.type) for f in t)
-    if pat.is_list(t) or pat.is_large_list(t) or pat.is_fixed_size_list(t):
-        return t.value_field.nullable and _nested_nullable(t.value_type)
-    if pat.is_map(t):
-        return (
-            t.item_field.nullable
-            and _nested_nullable(t.key_type)
-            and _nested_nullable(t.item_type)
-        )
-    return True
-
-
-def _local_parquet_schema(path: str):
-    """Parquet schema from local FOOTER METADATA (≈1 ms) — byte-identical
-    to ``spark.read.parquet(path).schema`` (~130 ms of driver listing +
-    footer job per call, paid per STREAM CONSTRUCTION before this r10
-    optimization). None on any miss → caller falls back to the Spark read."""
-    try:
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        local = path[len("file:"):] if path.startswith("file:") else path
-        import pyarrow as pa
-
-        if os.path.isdir(local):
-            cands = sorted(
-                f for f in os.listdir(local)
-                if f.endswith(".parquet") and not f.startswith(("_", "."))
-            )
-            if not cands:
-                return None
-            # Schema-evolved landing dirs (multiple distinct file schemas)
-            # need Spark's own merge semantics — fall back (ADVICE r10).
-            arrow = pq.ParquetFile(os.path.join(local, cands[0])).schema_arrow
-            for extra in cands[1:]:
-                if pq.ParquetFile(os.path.join(local, extra)).schema_arrow != arrow:
-                    return None
-        else:
-            arrow = pq.ParquetFile(local).schema_arrow
-        # Spark's file source reads every column as nullable whatever the
-        # footer says; a non-Spark writer emitting required fields must not
-        # yield a different StructType here (ADVICE r10). Spark relaxes
-        # nested fields too, so a required field below the top level
-        # falls back to the Spark read (ADVICE r11).
-        if not all(_nested_nullable(f.type) for f in arrow):
-            return None
-        arrow = pa.schema([f.with_nullable(True) for f in arrow])
-        # ns timestamps go through the nanosAsLong conf on the Spark read
-        # path (→ bigint) — keep that behavior by not short-circuiting
-        if any(
-            isinstance(f.type, pa.TimestampType) and f.type.unit == "ns"
-            for f in arrow
-        ):
-            return None
-        return from_arrow_schema(arrow, prefer_timestamp_ntz=True)
-    except Exception:
-        return None
-
-
 def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table (glob-filtered; ns→µs ts)."""
     load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
-    raw_schema = (
-        _local_parquet_schema(f"{sf_dir}/events.parquet")
-        or spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    )
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -273,10 +204,7 @@ def q_events_user_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``max_by`` picks each user's last emission (running_count strictly
     increases — a key only emits on batches that contain its rows)."""
     landing = _events_landing(spark, sf_dir)
-    schema = (
-        _local_parquet_schema(landing)
-        or spark.read.parquet(landing).schema
-    )
+    schema = parquet_schema(spark, landing)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -358,10 +286,7 @@ def q_events_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches, so the distinct count is exact whatever the file → batch split.
     The streaming face of the batch ``dedup_exact`` operator."""
     landing = _events_landing(spark, sf_dir)
-    schema = (
-        _local_parquet_schema(landing)
-        or spark.read.parquet(landing).schema
-    )
+    schema = parquet_schema(spark, landing)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyvectorsearch_spark.operators.quality import psi_from_histogram
+from pyvectorsearch_spark.plans.local import parquet_schema
 from pyvectorsearch_spark.queries.quality_extra import (
     ORACLE_EVENTS_PSI,
     PSI_BUCKET_W,
@@ -53,11 +54,7 @@ def q_events_psi_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs on that drained result. Same parameters as `events_psi_drift`, so
     the batch oracle applies verbatim."""
     path = _events_landing(spark, sf_dir)
-    from pyvectorsearch_spark.queries.streaming import _local_parquet_schema
-    schema = (
-        _local_parquet_schema(path)
-        or spark.read.parquet(path).schema
-    )
+    schema = parquet_schema(spark, path)
     stream = spark.readStream.schema(schema).parquet(path)
     b = F.least(
         F.floor(F.col("value") / PSI_BUCKET_W).cast("int"), F.lit(PSI_BUCKETS - 1)
@@ -108,11 +105,7 @@ def q_events_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyvectorsearch_spark.operators.sketches import hll_fold, hll_registers
 
     path = _events_landing(spark, sf_dir)
-    from pyvectorsearch_spark.queries.streaming import _local_parquet_schema
-    schema = (
-        _local_parquet_schema(path)
-        or spark.read.parquet(path).schema
-    )
+    schema = parquet_schema(spark, path)
     stream = spark.readStream.schema(schema).parquet(path)
     # the SAME operator as the batch sketch (select + groupBy/agg only, so
     # it runs unchanged on a streaming DataFrame) — streamed and batch
@@ -175,11 +168,7 @@ def q_events_conformal_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     path = _events_landing(spark, sf_dir)
-    from pyvectorsearch_spark.queries.streaming import _local_parquet_schema
-    schema = (
-        _local_parquet_schema(path)
-        or spark.read.parquet(path).schema
-    )
+    schema = parquet_schema(spark, path)
     stream = spark.readStream.schema(schema).parquet(path)
     be = (F.floor(F.unix_timestamp(F.col("ts").cast("timestamp")) / 3600) * 3600).cast(
         "bigint"

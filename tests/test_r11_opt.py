@@ -5,7 +5,8 @@ bit-identical while removing measured overhead (OPTIMIZATION_r11.md).
   type-identical to the per-element F.array(*[F.lit(v)...]) form
 - price_quantiles distributed exact quantile (range-partition + global
   rank) — value-identical to the F.percentile object aggregate
-- _local_parquet_schema nullability normalization + multi-schema fallback
+- plans/local.py's footer schema (nullability relax, multi-schema and ns
+  fallbacks), write_table round trip, local-path rule and single owner
   (ADVICE r10)
 - _scaled_state_parts session-cap guard (ADVICE r10)
 - the distributed grid kNN's probe-bounded joins stay broadcasts
@@ -187,48 +188,127 @@ class TestExactGroupQuantiles:
         assert {tuple(r) for r in df.collect()} == self._old_form(spark)
 
 
+def _required(name, t):
+    import pyarrow as pa
+
+    return pa.field(name, t, nullable=False)
+
+
+def _schema_matrix():
+    """name -> (arrow schema with a required field at that place, one row)."""
+    import pyarrow as pa
+
+    x = pa.struct([_required("x", pa.int64())])
+    return {
+        "top_level": (pa.schema([_required("a", pa.int64()), pa.field("b", pa.float64())]),
+                      {"a": [1], "b": [1.0]}),
+        "struct": (pa.schema([pa.field("s", x)]), {"s": [{"x": 1}]}),
+        "list": (pa.schema([pa.field("l", pa.list_(_required("item", pa.int64())))]),
+                 {"l": [[1, 2]]}),
+        "large_list": (pa.schema([pa.field("l", pa.large_list(_required("item", pa.int64())))]),
+                       {"l": [[1]]}),
+        "fixed_size_list": (
+            pa.schema([pa.field("l", pa.list_(_required("item", pa.float32()), 2))]),
+            {"l": [[1.0, 2.0]]}),
+        "map": (pa.schema([pa.field("m", pa.map_(pa.string(), _required("value", pa.int64())))]),
+                {"m": [[("k", 1)]]}),
+        "map_of_struct": (pa.schema([pa.field("m", pa.map_(pa.string(), pa.field("value", x)))]),
+                          {"m": [[("k", {"x": 1})]]}),
+        "three_deep": (
+            pa.schema([_required("d", pa.struct([_required("l", pa.list_(_required("item", x)))]))]),
+            {"d": [{"l": [{"x": 1}]}]}),
+    }
+
+
 class TestLocalSchemaAdvice:
+    """``plans/local.py``'s I/O contract: footer schemas equal Spark's read,
+    every field nullable both ways, one local-path rule, one owner."""
+
     def test_required_fields_read_nullable(self, spark, tmp_path):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from pyvectorsearch_spark.queries.streaming import _local_parquet_schema
+        from pyvectorsearch_spark.plans.local import _footer_schema
 
-        t = pa.table(
-            {"a": pa.array([1, 2], type=pa.int64()), "b": pa.array([1.0, 2.0])}
-        )
-        t = t.cast(
-            pa.schema(
-                [pa.field("a", pa.int64(), nullable=False), pa.field("b", pa.float64())]
-            )
-        )
+        schema, row = _schema_matrix()["top_level"]
         p = os.path.join(tmp_path, "req.parquet")
-        pq.write_table(t, p)
-        loc = _local_parquet_schema(p)
+        pq.write_table(pa.table(row, schema=schema), p)
+        loc = _footer_schema([p])
         assert loc is not None
         assert all(f.nullable for f in loc.fields)
         assert loc == spark.read.parquet(p).schema
 
     def test_required_nested_field_falls_back_or_matches(self, spark, tmp_path):
-        """A required field INSIDE a struct: Spark's read relaxes it too, so
-        the footer fast path must return None or Spark's exact schema."""
+        """A required field INSIDE a struct: Spark's read relaxes it too, and
+        so does the footer read — the fast path answers, with Spark's exact
+        schema."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from pyvectorsearch_spark.queries.streaming import _local_parquet_schema
+        from pyvectorsearch_spark.plans.local import _footer_schema
 
-        inner = pa.struct([pa.field("x", pa.int64(), nullable=False)])
-        t = pa.table({"s": pa.array([{"x": 1}, {"x": 2}], type=inner)})
+        schema, row = _schema_matrix()["struct"]
         p = os.path.join(tmp_path, "nested.parquet")
-        pq.write_table(t, p)
-        loc = _local_parquet_schema(p)
-        assert loc is None or loc == spark.read.parquet(p).schema
+        pq.write_table(pa.table(row, schema=schema), p)
+        loc = _footer_schema([p])
+        assert loc is not None
+        assert loc.json() == spark.read.parquet(p).schema.json()
 
-    def test_mixed_schema_dir_falls_back(self, tmp_path):
+    @pytest.mark.parametrize("case", sorted(_schema_matrix()))
+    def test_footer_schema_equals_spark_read(self, spark, tmp_path, case):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from pyvectorsearch_spark.queries.streaming import _local_parquet_schema
+        from pyvectorsearch_spark.plans.local import _footer_schema, parquet_schema
+
+        schema, row = _schema_matrix()[case]
+        p = os.path.join(tmp_path, f"{case}.parquet")
+        pq.write_table(pa.table(row, schema=schema), p)
+        want = spark.read.parquet(p).schema.json()
+        assert _footer_schema([p]) is not None
+        assert parquet_schema(spark, p).json() == want
+
+    @pytest.mark.parametrize("case", sorted(_schema_matrix()))
+    def test_write_table_round_trip(self, spark, tmp_path, case):
+        """``write_table`` writes what Spark reads back with the footer
+        schema's types, every field nullable, and the rows intact."""
+        import pyarrow as pa
+
+        from pyvectorsearch_spark.plans.local import _files, _footer_schema, write_table
+
+        schema, row = _schema_matrix()[case]
+        out = str(tmp_path / case)
+        write_table(pa.table(row, schema=schema), out)
+        back = spark.read.parquet(out)
+        loc = _footer_schema(_files(spark, out))
+        assert loc is not None and loc.json() == back.schema.json()
+        assert back.count() == 1
+
+    def test_ns_timestamps_fall_back(self, spark, tmp_path):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from pyvectorsearch_spark.plans.local import _footer_schema, parquet_schema
+
+        p = os.path.join(tmp_path, "ns.parquet")
+        pq.write_table(pa.table({"ts": pa.array([1], pa.timestamp("ns"))}), p,
+                       version="2.6", coerce_timestamps=None)
+        assert _footer_schema([p]) is None
+        # Spark reads ns only as raw int64, under load_table's conf
+        key = "spark.sql.legacy.parquet.nanosAsLong"
+        prev = spark.conf.get(key, None)
+        spark.conf.set(key, "true")
+        try:
+            assert dict((f.name, f.dataType.simpleString())
+                        for f in parquet_schema(spark, p)) == {"ts": "bigint"}
+        finally:
+            spark.conf.unset(key) if prev is None else spark.conf.set(key, prev)
+
+    def test_mixed_schema_dir_falls_back(self, spark, tmp_path):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from pyvectorsearch_spark.plans.local import _files, _footer_schema, parquet_schema
 
         d = os.path.join(tmp_path, "land")
         os.makedirs(d)
@@ -237,18 +317,64 @@ class TestLocalSchemaAdvice:
         pq.write_table(pa.table({"a": pa.array([1], type=pa.int64()),
                                  "b": pa.array([2.0])}),
                        os.path.join(d, "part-1.parquet"))
-        assert _local_parquet_schema(d) is None
+        assert _footer_schema(_files(spark, d)) is None
+        assert parquet_schema(spark, d) == spark.read.parquet(d).schema
 
     def test_uniform_dir_still_fast_path(self, spark):
-        from pyvectorsearch_spark.queries.streaming import (
-            _events_landing,
-            _local_parquet_schema,
-        )
+        from pyvectorsearch_spark.plans.local import _files, _footer_schema, parquet_schema
+        from pyvectorsearch_spark.queries.streaming import _events_landing
 
         landing = _events_landing(spark, SF_T2)
-        loc = _local_parquet_schema(landing)
-        if loc is not None:  # ns-ts sources legitimately return None
-            assert loc == spark.read.parquet(landing).schema
+        loc = _footer_schema(_files(spark, landing))
+        want = spark.read.parquet(landing).schema
+        if loc is not None:  # Spark's INT96 timestamps read as ns: Spark's read
+            assert loc == want
+        assert parquet_schema(spark, landing) == want
+
+    def test_local_path_follows_default_fs(self, spark, tmp_path):
+        """A scheme-less path is local only while the Hadoop default
+        filesystem is: the same existing directory resolves to None under a
+        non-``file:`` ``fs.defaultFS``. The conf is only read, never used
+        to reach a filesystem."""
+        from pyvectorsearch_spark.plans.local import local_path
+
+        d = str(tmp_path)
+        conf = spark._jsc.hadoopConfiguration()
+        prev = conf.get("fs.defaultFS")
+        assert local_path(spark, d) == d
+        assert local_path(spark, f"file:{d}") == d
+        assert local_path(spark, "s3a://bucket/x") is None
+        try:
+            conf.set("fs.defaultFS", "hdfs://namenode.invalid:8020")
+            assert local_path(spark, d) is None
+            assert local_path(spark, f"file:{d}") == d
+        finally:
+            if prev is None:
+                conf.unset("fs.defaultFS")
+            else:
+                conf.set("fs.defaultFS", prev)
+        assert local_path(spark, d) == d
+
+    def test_only_local_py_does_driver_io(self):
+        """The local-path rule, the nullability relax, the Arrow read and the
+        pandas-to-Spark hand-off live in ``plans/local.py`` alone: a second
+        copy is how the four ``file:`` strips and the two halves of the
+        nullability rule drifted apart before."""
+        from pathlib import Path
+
+        import pyvectorsearch_spark
+
+        pkg = Path(pyvectorsearch_spark.__file__).parent
+        owner = pkg / "plans" / "local.py"
+        needles = ('startswith("file:")', "with_nullable(", ".toArrow()",
+                   "createDataFrame(pd.DataFrame")
+        forks = sorted(
+            f"{f.relative_to(pkg).as_posix()}: {n}"
+            for f in pkg.rglob("*.py") if f != owner
+            for n in needles if n in f.read_text()
+        )
+        assert not forks, forks
+        assert all(n in owner.read_text() for n in needles)
 
 
 class TestScaledStatePartsCap:

@@ -25,12 +25,14 @@ import random
 from pyvectorsearch_spark.index.grid import _kinstantiate_driver
 import pytest
 
+import pyvectorsearch_spark.index.incremental as inc
 from pyvectorsearch_spark.index.incremental import (
     apply_batch_rebalance,
     read_pointer,
     read_mapping,
     read_stats,
 )
+from pyvectorsearch_spark.plans import local
 
 pytestmark = pytest.mark.slow  # soak/property tier: excluded from the default (driver-visible) run, see pytest.ini (r11)
 
@@ -143,10 +145,9 @@ class TestLeveledEquivalence:
 
 class TestDistributedRegime:
     def _drain(self, spark, tmp_path, monkeypatch, gates):
-        import pyvectorsearch_spark.index.incremental as inc
-
-        for k, v in gates.items():
-            monkeypatch.setattr(inc, k, v)
+        """``gates``: {(module, constant): value} settings to force."""
+        for (mod, k), v in gates.items():
+            monkeypatch.setattr(mod, k, v)
         monkeypatch.setattr(inc, "_CACHE_MAX_ROWS", 0)
         monkeypatch.setattr(inc, "_CACHE", {})
         meta = str(tmp_path / "meta")
@@ -166,12 +167,12 @@ class TestDistributedRegime:
             )
 
     def test_filtered_pyarrow_tier(self, spark, tmp_path, monkeypatch):
-        """_DRIVER_READ_BYTES=0 + no cache: per-batch state reads take the
+        """plans.local._DRIVER_READ_BYTES=0 + no cache: per-batch state reads take the
         predicate-filtered pyarrow tier (exact — the filter is on the
         merge key) and remaps the filtered superset path — pinned against
         ground truth after every batch."""
         self._drain(
-            spark, tmp_path, monkeypatch, {"_DRIVER_READ_BYTES": 0}
+            spark, tmp_path, monkeypatch, {(local, "_DRIVER_READ_BYTES"): 0}
         )
 
     def test_spark_restricted_tier(self, spark, tmp_path, monkeypatch):
@@ -181,7 +182,7 @@ class TestDistributedRegime:
         writes — the giant-state stack, pinned against ground truth."""
         self._drain(
             spark, tmp_path, monkeypatch,
-            {"_DRIVER_READ_BYTES": 0, "_FILTERED_READ_BYTES": 0},
+            {(local, "_DRIVER_READ_BYTES"): 0, (inc, "_FILTERED_READ_BYTES"): 0},
         )
 
 

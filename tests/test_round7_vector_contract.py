@@ -443,3 +443,48 @@ def test_one_topk_window_under_the_indexes():
     forks = [f.relative_to(pkg).as_posix() for f in files
              if "F.row_number(" in f.read_text() and f.name != "search.py"]
     assert not forks, forks
+
+
+@pytest.mark.parametrize("family", ["ivf", "ivfpq"])
+def test_ivf_build_keeps_every_input_value(spark, family):
+    """IVF's assign pass and IVF-PQ's encode pass append their one column to
+    the untouched input rows: a NaN component stays NaN (not NULL), a NULL
+    vector stays NULL, and the search still refuses the NaN row by id."""
+    from pyvectorsearch_spark.index.ivf import IVFIndex
+    from pyvectorsearch_spark.index.pq import IVFPQIndex
+
+    rows = _MATRIX_ROWS + [(1000, [NAN, 1.0]), (1001, None)]
+    # one partition: the data scan meets id 1000 before the NULL row 1001
+    data = spark.createDataFrame(rows, _MATRIX_SCHEMA).coalesce(1)
+    if family == "ivf":
+        idx = IVFIndex.build(data, n_lists=4, seed=42)
+        added, search = ["list_id"], lambda q: idx.knn(q, 3, nprobe=4)
+    else:
+        idx = IVFPQIndex.build(data, n_lists=2, m=2, ksub=16, seed=42)
+        added, search = ["list_id", "pq_code"], lambda q: idx.knn(
+            q, 3, nprobe=2, rerank=_MATRIX_N + 2)
+    assert idx.df.schema.fields[:2] == data.schema.fields
+    assert idx.df.columns == ["vec_id", "embedding", *added]
+    got = sorted(repr((r["vec_id"], r["embedding"])) for r in idx.df.collect())
+    assert got == sorted(repr(r) for r in rows)
+    qs = spark.createDataFrame([(0, [3.0, 3.0])], "query_id long, qvec array<double>")
+    with pytest.raises(Exception, match=r"invalid vector.*id=1000"):
+        search(qs).collect()
+
+
+@pytest.mark.parametrize("side", ["data", "query"])
+@pytest.mark.parametrize("join", ["knn_join", "range_join"])
+def test_index_free_joins_name_the_invalid_row(spark, join, side):
+    """The index-free joins' validity error names the invalid side and the
+    data row and probe ids, not the vectors: a caller can find the row."""
+    rows = _MATRIX_ROWS + ([(1000, [NAN, 1.0])] if side == "data" else [])
+    probes = [(0, [3.0, 3.0])] + ([(7, [NAN, 0.0])] if side == "query" else [])
+    data = spark.createDataFrame(rows, _MATRIX_SCHEMA)
+    qs = spark.createDataFrame(probes, "query_id long, qvec array<double>")
+    run = {"knn_join": lambda: knn_join(data, qs, 3),
+           "range_join": lambda: range_join(data, qs, 2.0)}[join]
+    ids = r"data id=1000, query id=0" if side == "data" else r"data id=\d+, query id=7"
+    want = (r"invalid vector \(NULL / NaN / Inf component\) in the " + side + " row: "
+            + ids + r"; pass on_invalid='skip'")
+    with pytest.raises(Exception, match=want):
+        run().collect()

@@ -1,6 +1,6 @@
 """Size dispatch: the one plan-size gate (``plans.inspect.plan_bytes_below``)
 and every site that dispatches on it, plus ``load_rebalanced_index``'s
-byte gate on the streamed sidecar (``_DRIVER_READ_BYTES``).
+byte gate on the streamed sidecar (``plans.local._DRIVER_READ_BYTES``).
 
 The gate is fail-closed: only a known Catalyst estimate inside
 ``(0, bound)`` picks the small-input branch. Each site's two branches must
@@ -9,7 +9,7 @@ compares them; the plans must differ, or the case forced nothing. The
 sidecar load forces its driver-side merge and its Spark merge the same way
 and pins the driver branch's Spark job count. ``GridIndex.build`` /
 ``write`` and ``stream_index_ingest``'s micro-batches read a small input
-once into Arrow under the same ``_DRIVER_READ_BYTES``; their cases force
+once into Arrow under the same gate; their cases force
 both branches through that one setting and pin the driver branch's jobs.
 """
 from __future__ import annotations
@@ -27,6 +27,7 @@ from pyvectorsearch_spark.index import incremental
 from pyvectorsearch_spark.index.grid import GridIndex
 from pyvectorsearch_spark.index.incremental import load_rebalanced_index
 from pyvectorsearch_spark.operators import dedup as dedup_ops
+from pyvectorsearch_spark.plans import local as local_io
 from pyvectorsearch_spark.plans.inspect import explain_str, plan_bytes_below
 from pyvectorsearch_spark.queries import relational
 from pyvectorsearch_spark.sources.tables import load_table
@@ -261,8 +262,8 @@ def test_rebalanced_load_branches_identical(spark, monkeypatch, rebalanced):
     k = 5
     want = _brute_knn(ids, pts, probes, k)
     got = {}
-    for gate in (0, incremental._DRIVER_READ_BYTES):
-        monkeypatch.setattr(incremental, "_DRIVER_READ_BYTES", gate)
+    for gate in (0, local_io._DRIVER_READ_BYTES):
+        monkeypatch.setattr(local_io, "_DRIVER_READ_BYTES", gate)
         idx = s.load()
         local = idx._local_stats is not None
         knn = {
@@ -403,7 +404,7 @@ def test_distributed_search_jobs(spark, monkeypatch, ladder):
 # ---- GridIndex build / write / streamed ingest: driver branch vs Spark ----
 
 # both settings of the one driver-read bound: 0 forces every Spark branch
-GATES = (0, incremental._DRIVER_READ_BYTES)
+GATES = (0, local_io._DRIVER_READ_BYTES)
 
 
 def _write_points(path, ids, pts, value_type):
@@ -494,7 +495,7 @@ def test_build_write_load_branches_identical(spark, monkeypatch, tmp_path):
     )
     got = {}
     for gate in GATES:
-        monkeypatch.setattr(incremental, "_DRIVER_READ_BYTES", gate)
+        monkeypatch.setattr(local_io, "_DRIVER_READ_BYTES", gate)
         out = str(tmp_path / f"idx{gate}")
         idx = GridIndex.build(
             spark.read.parquet(str(tmp_path / "input")), vec_col="p2",
@@ -578,7 +579,7 @@ def test_build_census_branches_identical(spark, monkeypatch, tmp_path, case):
     )
     msgs = []
     for gate in GATES:
-        monkeypatch.setattr(incremental, "_DRIVER_READ_BYTES", gate)
+        monkeypatch.setattr(local_io, "_DRIVER_READ_BYTES", gate)
         with pytest.raises(ValueError, match=want) as err:
             GridIndex.build(spark.read.parquet(os.path.dirname(path)), vec_col="v",
                             dim=None if case == "first_row_null" else 3)
@@ -599,7 +600,7 @@ def test_stream_ingest_branches_identical(spark, monkeypatch, tmp_path):
     ids, pts = _points(emb)
     streams = {}
     for gate in GATES:
-        monkeypatch.setattr(incremental, "_DRIVER_READ_BYTES", gate)
+        monkeypatch.setattr(local_io, "_DRIVER_READ_BYTES", gate)
         streams[gate] = _Stream(spark, tmp_path / f"gate{gate}", geom)
         streams[gate].drain(_chunks(ids, pts, 3))
     probes = [(int(ids[i]), pts[i].tolist()) for i in (0, 99, 201)]
